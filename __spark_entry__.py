@@ -306,16 +306,16 @@ def q_topk_buckets(spark, sf_dir):
 
 
 def q_detrend_auto_routed_packed(spark, sf_dir):
-    """The auto skew router (north_rule: salted repartitioning for skewed
-    long sequences) driven through BOTH branches: a 256-token threshold
-    sends every sf0.01 doc through chunk/salt/reassemble while short docs
-    would take the packed path — and the result must equal the plain mean
+    """The skew router (north_rule: salted repartitioning for skewed long
+    sequences) driven through BOTH branches: a 256-token threshold sends
+    every sf0.01 doc through chunk/salt/reassemble while short docs would
+    take the packed path — and the result must equal the plain mean
     oracle exactly (the router is exact for local methods)."""
-    from wotan_spark.spark.detrend_op import detrend_sequences_auto
+    from wotan_spark.spark.detrend_op import detrend_sequences
     from wotan_spark.spark.synth import sequences_from_events
     seq = sequences_from_events(spark, sf_dir)
-    det = detrend_sequences_auto(seq, method="mean", window_length=17,
-                                 chunk_threshold=256, chunk_size=128)
+    det = detrend_sequences(seq, method="mean", window_length=17,
+                            chunk_threshold=256, chunk_size=128)
     good = _good_flat()
     return det.select(
         "doc_id",
@@ -328,11 +328,11 @@ def q_detrend_chunked_packed(spark, sf_dir):
     """Skew path: overlap-chunked detrend (salted repartition + trim +
     reassemble).  Must produce identical sums to the unchunked operator —
     rows-only here; exactness is pytest-proven (chunked == unchunked)."""
-    from wotan_spark.spark.detrend_op import detrend_sequences_chunked
+    from wotan_spark.spark.detrend_op import detrend_sequences
     from wotan_spark.spark.synth import sequences_from_events
     seq = sequences_from_events(spark, sf_dir)
-    det = detrend_sequences_chunked(seq, method="mean", window_length=17,
-                                    chunk_size=32)
+    det = detrend_sequences(seq, method="mean", window_length=17,
+                            chunk_threshold=0, chunk_size=32)
     good = _good_flat()
     return det.select(
         "doc_id",
@@ -2749,7 +2749,7 @@ def oracle_sql() -> dict[str, str]:
         off AS (SELECT doc_id,
                        sum(n) OVER (ORDER BY doc_id) - n AS off
                 FROM n),
-        tok AS (SELECT o.off + l.t AS gpos, l.tok, l.doc_id
+        tok AS (SELECT (o.off + l.t)::BIGINT AS gpos, l.tok, l.doc_id
                 FROM lim l JOIN off o ON o.doc_id = l.doc_id)
         SELECT gpos // 512 AS chunk_id,
                count(DISTINCT doc_id) AS n_docs,
@@ -2771,7 +2771,7 @@ def oracle_sql() -> dict[str, str]:
         off AS (SELECT doc_id,
                        sum(n) OVER (ORDER BY doc_id) - n AS off
                 FROM n),
-        tok AS (SELECT o.off + l.t AS gpos, l.doc_id
+        tok AS (SELECT (o.off + l.t)::BIGINT AS gpos, l.doc_id
                 FROM lim l JOIN off o ON o.doc_id = l.doc_id),
         ch AS (SELECT gpos // 512 AS chunk_id
                FROM tok GROUP BY 1 HAVING count(*) = 512),

@@ -34,7 +34,8 @@ def main() -> None:
     load_start = [round(x, 2) for x in os.getloadavg()]
 
     import __spark_entry__ as entrymod
-    from wotan_spark.spark.rollup import cascade_tier, detrend_rollup_fused
+    from wotan_spark.spark.detrend_op import detrend_rollup_fused
+    from wotan_spark.spark.rollup import cascade_tier
     from wotan_spark.spark.session import get_spark
     from wotan_spark.spark.shipping import ensure_shipped
     from wotan_spark.spark.synth import synth_sequences

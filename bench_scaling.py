@@ -86,8 +86,8 @@ def run_level(path: str, level: int, reps: int,
             # segment shuffle, chunk reassembly
             pack_sequences(seq, 1024).count()
     else:
-        from wotan_spark.spark.rollup import (cascade_tier,
-                                              detrend_rollup_fused)
+        from wotan_spark.spark.detrend_op import detrend_rollup_fused
+        from wotan_spark.spark.rollup import cascade_tier
 
         def job():
             cascade_tier(detrend_rollup_fused(seq, "biweight",

@@ -3,9 +3,11 @@
 task (north_rule: salted repartitioning for skewed long sequences).
 
 Compares the plain packed detrend (one task owns the whole 500k-token doc)
-against ``detrend_sequences_auto`` (long rows overlap-chunked and salted
-across tasks) at a small core count where the straggler dominates.  Prints
-one JSON line; paste results into BENCH/BASELINE.md.
+against the same call with ``chunk_threshold=AUTO_CHUNK_THRESHOLD`` (long
+rows overlap-chunked and salted across tasks), for both
+``detrend_sequences`` and ``detrend_rollup_fused``, at a small core count
+where the straggler dominates.  Prints one JSON line; paste results into
+BENCH/BASELINE.md.
 
 Usage: python scripts/bench_skew.py [n_base_docs] [n_skew_docs]
 """
@@ -30,8 +32,9 @@ def main() -> None:
     n_base = int(sys.argv[1]) if len(sys.argv) > 1 else 400
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
 
-    from wotan_spark.spark.detrend_op import (detrend_sequences,
-                                              detrend_sequences_auto)
+    from wotan_spark.spark.detrend_op import (AUTO_CHUNK_THRESHOLD,
+                                              detrend_rollup_fused,
+                                              detrend_sequences)
     from wotan_spark.spark.session import get_spark
     from wotan_spark.spark.shipping import ensure_shipped
     from wotan_spark.spark.synth import SEQUENCES_SCHEMA, synth_sequences
@@ -52,22 +55,22 @@ def main() -> None:
         seq = base.unionByName(skew).repartition(cores, "doc_id").persist()
         seq.count()
 
-        from wotan_spark.spark.rollup import (detrend_rollup_fused,
-                                              detrend_rollup_fused_auto)
         timings = {}
         for name, run in (
             ("packed_straggler",
              lambda: detrend_sequences(seq, method="biweight",
                                        window_length=17)),
             ("auto_chunked",
-             lambda: detrend_sequences_auto(seq, method="biweight",
-                                            window_length=17)),
+             lambda: detrend_sequences(seq, method="biweight",
+                                       chunk_threshold=AUTO_CHUNK_THRESHOLD,
+                                       window_length=17)),
             ("fused_rollup_straggler",
              lambda: detrend_rollup_fused(seq, "biweight",
                                           window_length=17)),
             ("fused_rollup_auto",
-             lambda: detrend_rollup_fused_auto(seq, "biweight",
-                                               window_length=17)),
+             lambda: detrend_rollup_fused(seq, "biweight",
+                                          chunk_threshold=AUTO_CHUNK_THRESHOLD,
+                                          window_length=17)),
         ):
             best = None
             for _ in range(2):

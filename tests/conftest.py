@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 
 REFERENCE_PATH = "/root/reference"
+_REFERENCE_SKIP = "reference oracle module"
 
 
 def _install_numba_stub() -> None:
@@ -46,8 +47,19 @@ def reference_module(name: str):
     try:
         __import__(f"wotan.{name}")
     except ImportError as exc:  # pragma: no cover
-        pytest.skip(f"reference oracle module wotan.{name} unavailable: {exc}")
+        pytest.skip(f"{_REFERENCE_SKIP} wotan.{name} unavailable: {exc}")
     return sys.modules[f"wotan.{name}"]
+
+
+def pytest_terminal_summary(terminalreporter) -> None:
+    """Make a missing reference loud: the ref-exact parity tests skip
+    without it, which would otherwise leave the run looking fully green."""
+    n = sum(_REFERENCE_SKIP in str(rep.longrepr)
+            for rep in terminalreporter.stats.get("skipped", []))
+    if n:
+        terminalreporter.write_line(
+            f"ref-exact parity NOT RUN: {n} tests skipped "
+            f"({REFERENCE_PATH} missing)")
 
 
 def synthetic_series(points: int = 1000, seed: int = 0,

@@ -296,7 +296,7 @@ def test_tokenize_documents_bridges_into_sequence_engine(spark):
     """tokenize_documents emits the canonical tokenized-sequence schema
     and its output flows straight into the detrend+rollup core."""
     from wotan_spark.spark.datapipe import tokenize_documents
-    from wotan_spark.spark.rollup import detrend_rollup_fused
+    from wotan_spark.spark.detrend_op import detrend_rollup_fused
     from wotan_spark.spark.synth import SEQUENCES_SCHEMA
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(40)

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from wotan_spark.spark.pipeline import Pipeline, PipelineConfig
-from wotan_spark.spark.rollup import detrend_rollup_fused
+from wotan_spark.spark.detrend_op import detrend_rollup_fused
 from wotan_spark.spark.synth import synth_sequences
 
 

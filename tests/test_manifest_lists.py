@@ -245,7 +245,9 @@ def test_where_in_and_zorder_edge_cases(spark, tmp_path):
     """Edges of the round-5e pruning additions: stringly stats make a
     file unprunable but results stay exact (TypeError guard); a constant
     dimension contributes zero z-bits without breaking the rewrite; a
-    conjunction clause naming a column with no stats keeps the file."""
+    conjunction clause naming a column with no stats keeps the file; an
+    empty ``where`` list and an over-wide z-order fail or degrade by name,
+    not by IndexError or a wrapped shift."""
     import pyspark.sql.functions as F
 
     # string-typed column: stats exist but where_in values are ints ->
@@ -271,3 +273,21 @@ def test_where_in_and_zorder_edge_cases(spark, tmp_path):
     # conjunction with an absent-stats column: file kept, result exact
     got = tz.read(spark, where=[("x", 0, 49), ("c", 7, 7)])
     assert got.count() == 50
+    # an empty clause list is a named error, not an IndexError
+    with pytest.raises(ValueError, match="at least one"):
+        tz.read(spark, where=[])
+
+    # more dimensions than 8 bits each fit in a long: bits scale down
+    # instead of wrapping the Morton shift, so z stays non-negative and
+    # monotone along the diagonal
+    cols = [f"d{i}" for i in range(9)]
+    wide = spark.range(400).select(
+        *[F.col("id").cast("int").alias(c) for c in cols])
+    z, n = tz._zorder_column(wide, cols)
+    zs = [r.z for r in wide.select("d0", z.alias("z")).orderBy("d0")
+          .collect()]
+    assert n == 400 and min(zs) >= 0 and zs == sorted(zs)
+    with pytest.raises(ValueError, match="at most 63"):
+        tz._zorder_column(wide.select(*(F.col("d0").alias(f"e{i}")
+                                        for i in range(64))),
+                          [f"e{i}" for i in range(64)])

@@ -127,7 +127,7 @@ def test_media_dedup_exact(spark):
 
 def test_streaming_ingestion_incremental(spark, tmp_path):
     from wotan_spark.spark.lakehouse import SnapshotTable
-    from wotan_spark.spark.rollup import detrend_rollup_fused
+    from wotan_spark.spark.detrend_op import detrend_rollup_fused
     from wotan_spark.spark.streaming import run_ingestion
     from wotan_spark.spark.synth import synth_sequences
 
@@ -441,7 +441,7 @@ def test_streaming_pipeline_ingestion_maintains_all_tiers(spark, tmp_path):
     raw append nor perturbs the merged state."""
     from wotan_spark.spark.distinct import distinct_counts, tier_distinct
     from wotan_spark.spark.pipeline import Pipeline, PipelineConfig
-    from wotan_spark.spark.rollup import detrend_rollup_fused
+    from wotan_spark.spark.detrend_op import detrend_rollup_fused
     from wotan_spark.spark.streaming import (_pipeline_sink,
                                              run_pipeline_ingestion)
     from wotan_spark.spark.synth import synth_sequences

@@ -10,8 +10,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from wotan_spark.spark.datapipe import cosine_topk
-from wotan_spark.spark.rollup import detrend_rollup_fused, rollup_tier10
-from wotan_spark.spark.detrend_op import detrend_sequences
+from wotan_spark.spark.detrend_op import (detrend_rollup_fused,
+                                          detrend_sequences)
+from wotan_spark.spark.rollup import rollup_tier10
 from wotan_spark.spark.synth import synth_sequences
 
 
@@ -142,14 +143,13 @@ def test_chunk_spread_has_explicit_partition_count(spark):
     path exists to remove (caught live in round 2)."""
     import pyspark.sql.functions as F
 
-    from wotan_spark.spark.detrend_op import detrend_sequences_chunked
     from wotan_spark.spark.synth import synth_sequences
 
     seq = synth_sequences(spark, 4, median_len=300, max_len=2000)
     import re
 
-    plan = (detrend_sequences_chunked(seq, method="mean", window_length=17,
-                                      chunk_size=64)
+    plan = (detrend_sequences(seq, method="mean", window_length=17,
+                              chunk_threshold=0, chunk_size=64)
             ._jdf.queryExecution().optimizedPlan().toString())
     # explicit numPartitions renders as "RepartitionByExpression [...], N"
     assert re.search(r"RepartitionByExpression \[[^\]]*\], \d+", plan), plan

@@ -9,9 +9,7 @@ import pyspark.sql.functions as F
 
 from wotan_spark.kernels.clipper import slide_clip as slide_clip_kernel
 from wotan_spark.kernels.detrend import detrend_series
-from wotan_spark.spark.detrend_op import (detrend_sequences,
-                                          detrend_sequences_chunked,
-                                          split_chunks)
+from wotan_spark.spark.detrend_op import detrend_sequences, split_chunks
 from wotan_spark.spark.gapfill import fill_array, gapfill_sequences, resample_ffill
 from wotan_spark.spark.ops import slide_clip_sequences, transit_mask_col
 from wotan_spark.spark.rollup import cascade_tier, explode_points, rollup_tier10
@@ -128,8 +126,8 @@ def test_chunked_detrend_exact_and_token_invariant(spark):
     plain = {r.doc_id: r for r in
              detrend_sequences(seq, method="biweight",
                                window_length=17).collect()}
-    chunked = detrend_sequences_chunked(seq, method="biweight",
-                                        window_length=17, chunk_size=256)
+    chunked = detrend_sequences(seq, method="biweight", window_length=17,
+                                chunk_threshold=0, chunk_size=256)
     rows = chunked.collect()
     assert len(rows) == N_DOCS
     for row in rows:
@@ -295,16 +293,14 @@ def test_fused_rollup_auto_exact_including_median(spark):
 
     import pandas as pd
 
-    from wotan_spark.spark.rollup import (detrend_rollup_fused,
-                                          detrend_rollup_fused_auto,
-                                          rollup_tier10)
+    from wotan_spark.spark.detrend_op import detrend_rollup_fused
 
     seq = _seq(spark)
     plain = detrend_rollup_fused(seq, "biweight", factor=10,
                                  window_length=17).toPandas()
-    routed = detrend_rollup_fused_auto(seq, "biweight", factor=10,
-                                       chunk_threshold=700, chunk_size=250,
-                                       window_length=17).toPandas()
+    routed = detrend_rollup_fused(seq, "biweight", factor=10,
+                                  chunk_threshold=700, chunk_size=250,
+                                  window_length=17).toPandas()
     n_long = seq.filter(F.col("n_tok") > 700).count()
     assert 0 < n_long < N_DOCS       # both branches populated
     key = ["doc_id", "bucket"]
@@ -347,10 +343,8 @@ def test_fused_rollup_handles_masks(spark):
     masked fallback must take that working path."""
     import pandas as pd
 
-    from wotan_spark.spark.detrend_op import detrend_sequences
-    from wotan_spark.spark.rollup import (detrend_rollup_fused,
-                                          detrend_rollup_fused_auto,
-                                          rollup_tier10)
+    from wotan_spark.spark.detrend_op import (detrend_rollup_fused,
+                                              detrend_sequences)
 
     seq = _seq(spark).withColumn(
         "m", F.expr("transform(tokens, (x, i) -> i % 11 = 0)"))
@@ -365,12 +359,41 @@ def test_fused_rollup_handles_masks(spark):
     chained = chained[list(fused.columns)].sort_values(key) \
         .reset_index(drop=True)
     pd.testing.assert_frame_equal(fused, chained, check_exact=True)
-    routed = detrend_rollup_fused_auto(seq, "biweight", factor=10,
-                                       chunk_threshold=700,
-                                       window_length=17,
-                                       mask_col="m").toPandas()
+    routed = detrend_rollup_fused(seq, "biweight", factor=10,
+                                  chunk_threshold=700, window_length=17,
+                                  mask_col="m").toPandas()
     routed = routed.sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(routed, fused, check_exact=True)
+
+
+def test_kernel_nan_is_null_in_series_and_left_out_of_tiers(spark):
+    """Pin what a kernel NaN becomes on egress: a NULL array element (never
+    a NaN) on both series routes, packed and chunked, and a point the tier
+    emitter's ``flat_n``/``trend_n`` leave out on both routes."""
+    from wotan_spark.spark.detrend_op import detrend_rollup_fused
+    from wotan_spark.spark.synth import SENTINEL, SEQUENCES_SCHEMA
+
+    toks = (np.arange(60) % 7).astype(np.int32)
+    toks[20:25] = SENTINEL                      # a gap: NaN input samples
+    df = spark.createDataFrame([("a", toks.tolist(), 60, "s")],
+                               schema=SEQUENCES_SCHEMA)
+    kw = dict(window_length=5, edge_cutoff=2)   # NaN at valid points too
+    y = decode_tokens(toks)
+    res = detrend_series(np.arange(60, dtype=np.float64), y, method="mean",
+                         **kw)
+    nan = np.isnan(res.flatten_lc)
+    assert (nan & ~np.isnan(y)).any()
+    for route in ({}, dict(chunk_threshold=0, chunk_size=16)):
+        row = detrend_sequences(df, "mean", **route, **kw).collect()[0]
+        for arr in (row.flat, row.trend):
+            assert [v is None for v in arr] == nan.tolist(), route
+        tiers = (detrend_rollup_fused(df, "mean", factor=10, **route, **kw)
+                 .orderBy("bucket").collect())
+        want = (~nan).reshape(6, 10).sum(axis=1).tolist()
+        assert [r.flat_n for r in tiers] == want, route
+        assert [r.trend_n for r in tiers] == want, route
+        assert [r.n for r in tiers] == \
+            (~np.isnan(y)).reshape(6, 10).sum(axis=1).tolist(), route
 
 
 def test_resample_ffill_negative_time_floor_binned(spark):

@@ -1,23 +1,26 @@
 """Distributed detrend over packed token arrays.
 
 The input table is one-series-per-row, so detrending is embarrassingly
-parallel: a single ``mapInPandas`` pass decodes each row's tokens, runs the
-per-series pipeline kernel (``wotan_spark.kernels.detrend.detrend_series``)
-and emits packed ``flat``/``trend`` arrays — **zero shuffle**, unlike an
+parallel: ONE ``mapInPandas`` pass (``_detrend_pass``) decodes each row's
+tokens, derives its known-signal mask, runs the per-series pipeline kernel
+(``wotan_spark.kernels.detrend.detrend_series``) and hands the result to an
+emitter — packed ``flat``/``trend`` arrays (``detrend_sequences``) or tier
+bucket rows (``detrend_rollup_fused``) — **zero shuffle**, unlike an
 explode -> groupBy plan which would multiply 10^12 rows by sequence length.
 
 Skew handling for heavy-tailed sequence lengths (the ``n_tok`` lognormal
-tail): ``detrend_sequences_chunked`` splits long rows into overlapping chunk
-rows, round-robin ``repartition``s them so one 50k-token doc doesn't pin a
-task, detrends each chunk, and reassembles trimmed chunks with one shuffle
-on doc_id.  Overlap >= window + break_tolerance makes interior points exact
-(window estimators are local; verified by test against the unchunked path).
+tail): with a ``chunk_threshold`` the router (``_route``) splits rows past it
+into overlapping chunk rows, repartitions them with an explicit count so one
+50k-token doc doesn't pin a task, and runs the same pass over each chunk,
+keeping only its core slice.  Overlap >= window + break_tolerance makes
+interior points exact (window estimators are local; verified by test against
+the unchunked path).
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -27,15 +30,9 @@ from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from wotan_spark.kernels.detrend import detrend_series
+from wotan_spark.kernels.series import transit_mask
+from wotan_spark.spark.rollup import TIER_SCHEMA, _tier_arrays, _tier_frame
 from wotan_spark.spark.synth import decode_tokens
-
-DETREND_SCHEMA = StructType([
-    StructField("doc_id", StringType(), False),
-    StructField("n_tok", IntegerType(), False),
-    StructField("source", StringType(), True),
-    StructField("flat", ArrayType(DoubleType(), True), True),
-    StructField("trend", ArrayType(DoubleType(), True), True),
-])
 
 CHUNK_SCHEMA = StructType([
     StructField("doc_id", StringType(), False),
@@ -48,21 +45,56 @@ CHUNK_SCHEMA = StructType([
     StructField("tokens", ArrayType(IntegerType(), True), False),
 ])
 
+# routing threshold: a doc only benefits from chunking when its solo kernel
+# time rivals a whole task's mean wall (the vectorized sliders run
+# ~300k pts/s/core, so 64k tokens ~ 0.2s — below that, chunking's extra
+# shuffle + reassembly stages cost more than the straggler they remove)
+AUTO_CHUNK_THRESHOLD = 65536
 
-def _detrend_one(tokens: np.ndarray, params: dict) -> tuple[np.ndarray, np.ndarray]:
-    y = decode_tokens(np.asarray(tokens, dtype=np.int32))
+# chunk length when neither chunk_size nor a positive threshold gives one
+# (``chunk_threshold=0`` chunks every row)
+_DEFAULT_CHUNK_SIZE = 8192
+
+# methods whose trend estimate is local (window/kernel-bounded), so
+# overlap-chunking reproduces the unchunked output exactly (tested);
+# global fits (splines, gp, cofiam, regressions, ...) are not chunkable
+_CHUNKABLE_METHODS = frozenset(
+    ["biweight", "andrewsinewave", "welsch", "hodges", "median", "mean",
+     "trim_mean", "winsorize", "huber_psi", "hampelfilt", "tau",  # sliders
+     "huber", "hampel", "ramsay",                    # iterative sliders
+     "medfilt", "savgol", "lowess"])                 # local filters
+
+
+def _with_mask(params: dict, t: np.ndarray, mask=None,
+               transit: tuple[float, float, float] | None = None) -> dict:
+    """Kernel params carrying the known-signal mask (reference
+    ``flatten(..., mask=)``, wotan/flatten.py:194-197 — True = in-transit
+    point excluded from the fit): an explicit per-row ``mask`` array, or
+    the periodic mask of ``transit=(period, duration, T0)`` over the time
+    axis ``t``.  Unmasked runs get ``params`` itself."""
+    if mask is not None:
+        return dict(params, mask=np.asarray(mask, dtype=bool))
+    if transit is not None:
+        return dict(params, mask=transit_mask(t, *transit))
+    return params
+
+
+def _detrend_one(tokens: np.ndarray, params: dict, mask=None,
+                 transit: tuple[float, float, float] | None = None
+                 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(y, flat, trend) of one token array on the dense time axis
+    t = 0..n-1 (the token index)."""
+    y = decode_tokens(tokens)
     t = np.arange(len(y), dtype=np.float64)
-    res = detrend_series(t, y, **params)
-    return res.flatten_lc, res.trend_lc
+    res = detrend_series(t, y, **_with_mask(params, t, mask, transit))
+    return y, res.flatten_lc, res.trend_lc
 
 
 def _chunk_overlap(params: dict) -> int:
     """Overlap (in tokens) that makes a chunk's core slice detrend exactly
     as the full series would: window_length + break_tolerance, ceiled, +1.
-    ONE definition, shared by ``detrend_sequences_chunked`` and the fused
-    rollup's chunked pass — the defaults here must stay in lockstep with
-    ``detrend_series`` or chunked output silently diverges from
-    unchunked."""
+    The defaults here must stay in lockstep with ``detrend_series`` or
+    chunked output silently diverges from unchunked."""
     wl = params.get("window_length") or 2
     bt = params.get("break_tolerance")
     if bt is None:
@@ -70,76 +102,238 @@ def _chunk_overlap(params: dict) -> int:
     return int(math.ceil(wl + bt)) + 1
 
 
-def detrend_sequences(df: DataFrame, method: str = "biweight",
+# emit(pdf, pieces) -> output frame; one piece per input row:
+# (tokens, y, flat, trend, t0), already trimmed to the chunk core
+Emitter = Callable[[pd.DataFrame, list], pd.DataFrame]
+
+
+def _detrend_pass(df: DataFrame, params: dict, emit: Emitter,
+                  schema: StructType, chunked: bool,
+                  mask_col: str | None = None,
+                  mask_transit: tuple[float, float, float] | None = None
+                  ) -> DataFrame:
+    """THE per-row detrend pass: decode -> mask -> kernel -> emit.
+
+    ``chunked`` rows come from ``split_chunks``: each is detrended whole
+    (overlap included) and only its ``lead:lead+core`` slice is emitted,
+    with its first token index ``t0``.  Unchunked rows read no chunk
+    columns, so none crosses Arrow on the packed path."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            n = len(pdf)
+            masks = pdf[mask_col] if mask_col is not None else [None] * n
+            spans = (zip(pdf["lead"], pdf["core"], pdf["t0"]) if chunked
+                     else [(0, None, 0)] * n)
+            pieces = []
+            for toks, mask, (lead, core, t0) in zip(pdf["tokens"], masks,
+                                                    spans):
+                toks = np.asarray(toks, dtype=np.int32)
+                y, flat, trend = _detrend_one(toks, params, mask,
+                                              mask_transit)
+                if core is not None:
+                    sl = slice(int(lead), int(lead) + int(core))
+                    toks, y, flat, trend = toks[sl], y[sl], flat[sl], trend[sl]
+                pieces.append((toks, y, flat, trend, int(t0)))
+            yield emit(pdf, pieces)
+
+    return df.mapInPandas(run, schema=schema)
+
+
+def _route(df: DataFrame, params: dict, run: Callable[..., DataFrame],
+           chunk_threshold: int | None, chunk_size: int | None,
+           masked: bool, align: int = 1) -> DataFrame:
+    """THE skew router: ``run(part, chunked)`` is the pass for one branch.
+
+    ``chunk_threshold=None``, a non-chunkable (global-fit) method or a
+    masked run take the zero-shuffle packed pass for all rows (a mask's
+    irregular NaN pattern breaks the chunk-core exactness argument).
+    Otherwise rows with ``n_tok <= chunk_threshold`` take the packed pass
+    and longer rows are overlap-chunked (``chunk_size`` rounded down to a
+    multiple of ``align``) and spread across tasks; ``chunk_threshold=0``
+    chunks every row.
+
+    Plan shape: two branches of one union, each with the ``n_tok``
+    predicate pushed to the parquet scan.  At 100 TB the long-branch scan
+    skips every row group whose n_tok max is under the threshold (the
+    lognormal tail is rare), so the second scan costs proportional to the
+    skewed tail, not the corpus."""
+    if (chunk_threshold is None or params["method"] not in _CHUNKABLE_METHODS
+            or masked):
+        return run(df, chunked=False)
+    size = chunk_size or chunk_threshold or _DEFAULT_CHUNK_SIZE
+    size = max(align, (size // align) * align)
+    long_ = df if chunk_threshold == 0 else \
+        df.filter(F.col("n_tok") > chunk_threshold)
+    chunks = split_chunks(long_, size, _chunk_overlap(params))
+    # salt: spread one doc's chunks across tasks by (doc_id, chunk_id) hash.
+    # The partition count MUST be explicit — a bare column repartition is
+    # AQE-coalescible, and chunk rows are few BYTES but heavy CPU, so AQE's
+    # byte-targeted coalescing would fold them back into one task and
+    # recreate the straggler this operator exists to remove.
+    n_parts = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    chunks = chunks.repartition(n_parts, F.col("doc_id"), F.col("chunk_id"))
+    long_out = run(chunks, chunked=True)
+    if chunk_threshold == 0:
+        return long_out
+    return run(df.filter(F.col("n_tok") <= chunk_threshold),
+               chunked=False).unionByName(long_out)
+
+
+def _series_schema(outputs: tuple[str, ...], keep_tokens: bool,
+                   chunked: bool) -> StructType:
+    fields = [StructField("doc_id", StringType(), False)]
+    if chunked:
+        fields.append(StructField("chunk_id", IntegerType(), False))
+    fields += [StructField("n_tok", IntegerType(), False),
+               StructField("source", StringType(), True)]
+    fields += [StructField(name, ArrayType(DoubleType(), True), True)
+               for name in ("flat", "trend") if name in outputs]
+    if keep_tokens:
+        fields.append(StructField("tokens", ArrayType(IntegerType(), True),
+                                  False))
+    return StructType(fields)
+
+
+def _series_emitter(outputs: tuple[str, ...], keep_tokens: bool,
+                    chunked: bool) -> Emitter:
+    """Packed per-series output: one row per input row (per chunk core
+    when ``chunked``), result arrays pruned to ``outputs``."""
+
+    def emit(pdf: pd.DataFrame, pieces: list) -> pd.DataFrame:
+        out = pd.DataFrame({"doc_id": pdf["doc_id"]})
+        if chunked:
+            out["chunk_id"] = pdf["chunk_id"].astype("int32")
+        out["n_tok"] = pdf["n_tok"].astype("int32")
+        out["source"] = pdf["source"]
+        for i, name in ((2, "flat"), (3, "trend")):
+            if name in outputs:
+                out[name] = [p[i] for p in pieces]
+        if keep_tokens:
+            out["tokens"] = [p[0] for p in pieces]
+        return out
+
+    return emit
+
+
+def _reassemble(outputs: tuple[str, ...], keep_tokens: bool):
+    """applyInPandas body: one doc's chunk cores -> its packed row."""
+    arrays = [(name, np.float64) for name in ("flat", "trend")
+              if name in outputs]
+    if keep_tokens:
+        arrays.append(("tokens", np.int32))
+
+    def reassemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("chunk_id")
+        out = pd.DataFrame({
+            "doc_id": [key[0]],
+            "n_tok": [np.int32(pdf["n_tok"].iloc[0])],
+            "source": [pdf["source"].iloc[0]],
+        })
+        for name, dtype in arrays:
+            out[name] = [np.concatenate([np.asarray(a, dtype=dtype)
+                                         for a in pdf[name]])]
+        return out
+
+    return reassemble
+
+
+def detrend_sequences(df: DataFrame, method: str = "biweight", *,
+                      chunk_threshold: int | None = None,
+                      chunk_size: int | None = None,
                       keep_tokens: bool = False,
+                      outputs: tuple[str, ...] = ("flat", "trend"),
                       mask_col: str | None = None,
                       mask_transit: tuple[float, float, float] | None = None,
-                      outputs: tuple[str, ...] = ("flat", "trend"),
                       **params) -> DataFrame:
     """sequences(doc_id, tokens, n_tok, source) ->
     (doc_id, n_tok, source[, flat][, trend][, tokens]) with packed arrays.
 
-    Known-signal exclusion (reference ``flatten(..., mask=)``,
-    wotan/flatten.py:194-197 — True = in-transit point excluded from the
-    fit): pass ``mask_col`` naming an array<boolean> column aligned with
-    ``tokens``, or ``mask_transit=(period, duration, T0)`` to derive the
-    periodic mask from the token index inside the same packed pass.
+    Known-signal exclusion (reference ``flatten(..., mask=)``): pass
+    ``mask_col`` naming an array<boolean> column aligned with ``tokens``,
+    or ``mask_transit=(period, duration, T0)`` to derive the periodic mask
+    from the token index inside the same packed pass.
 
     ``outputs`` selects which result arrays cross back into the JVM:
     Catalyst cannot prune columns INSIDE a pandas UDF, so a caller that
     only consumes ``flat`` should pass ``outputs=("flat",)`` and skip the
-    trend array's Arrow egress entirely (~40% of the UDF output bytes)."""
+    trend array's Arrow egress entirely (~40% of the UDF output bytes) —
+    twice on the chunked branch (pieces, then reassembly).
+
+    ``chunk_threshold`` turns on skew routing (see ``_route``; the
+    pipeline uses ``AUTO_CHUNK_THRESHOLD``): chunked rows are detrended,
+    trimmed and reassembled with one shuffle on doc_id, exact for the
+    local methods; ``keep_tokens`` rebuilds the original token arrays
+    bit-exactly.  ``None`` (the default) is the exchange-free packed
+    plan."""
     params = dict(params, method=method)
-    want_flat = "flat" in outputs
-    want_trend = "trend" in outputs
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from wotan_spark.kernels.series import transit_mask as _tmask
+    def run(part: DataFrame, chunked: bool) -> DataFrame:
+        out = _detrend_pass(
+            part, params, _series_emitter(outputs, keep_tokens, chunked),
+            _series_schema(outputs, keep_tokens, chunked), chunked,
+            mask_col, mask_transit)
+        if not chunked:
+            return out
+        return out.groupBy("doc_id").applyInPandas(
+            _reassemble(outputs, keep_tokens),
+            schema=_series_schema(outputs, keep_tokens, chunked=False))
 
-        for pdf in batches:
-            flats, trends = [], []
-            if mask_col is not None:
-                masks = [np.asarray(m, dtype=bool) for m in pdf[mask_col]]
-            elif mask_transit is not None:
-                period, duration, t0 = mask_transit
-                masks = [_tmask(np.arange(len(toks), dtype=np.float64),
-                                period, duration, t0)
-                         for toks in pdf["tokens"]]
-            else:
-                masks = None
-            for row_i, toks in enumerate(pdf["tokens"]):
-                p = (params if masks is None
-                     else dict(params, mask=masks[row_i]))
-                flat, trend = _detrend_one(np.asarray(toks, dtype=np.int32),
-                                           p)
-                if want_flat:
-                    flats.append(flat)
-                if want_trend:
-                    trends.append(trend)
-            out = pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_tok": pdf["n_tok"].astype("int32"),
-                "source": pdf["source"],
-            })
-            if want_flat:
-                out["flat"] = flats
-            if want_trend:
-                out["trend"] = trends
-            if keep_tokens:
-                out["tokens"] = pdf["tokens"]
-            yield out
+    return _route(df, params, run, chunk_threshold, chunk_size,
+                  masked=mask_col is not None or mask_transit is not None)
 
-    fields = [f for f in DETREND_SCHEMA.fields
-              if f.name not in ("flat", "trend")]
-    if want_flat:
-        fields.append(StructField("flat", ArrayType(DoubleType(), True), True))
-    if want_trend:
-        fields.append(StructField("trend", ArrayType(DoubleType(), True),
-                                  True))
-    if keep_tokens:
-        fields.append(StructField("tokens", ArrayType(IntegerType(), True),
-                                  False))
-    return df.mapInPandas(run, schema=StructType(fields))
+
+def detrend_sequences_auto(df: DataFrame, method: str = "biweight",
+                           chunk_threshold: int = AUTO_CHUNK_THRESHOLD,
+                           chunk_size: int | None = None,
+                           keep_tokens: bool = False,
+                           outputs: tuple[str, ...] = ("flat", "trend"),
+                           **params) -> DataFrame:
+    """``detrend_sequences`` with skew routing on at
+    ``AUTO_CHUNK_THRESHOLD`` by default."""
+    return detrend_sequences(df, method, chunk_threshold=chunk_threshold,
+                             chunk_size=chunk_size, keep_tokens=keep_tokens,
+                             outputs=outputs, **params)
+
+
+def detrend_rollup_fused(df: DataFrame, method: str = "biweight",
+                         factor: int = 10, *,
+                         chunk_threshold: int | None = None,
+                         chunk_size: int | None = None,
+                         mask_col: str | None = None,
+                         mask_transit: tuple[float, float, float]
+                         | None = None, **params) -> DataFrame:
+    """Fused detrend + tier rollup in ONE ``mapInPandas`` pass: half the
+    Arrow traffic of chaining ``detrend_sequences`` and ``rollup_tier10``
+    (the full-resolution flat/trend arrays never cross back into the JVM),
+    zero shuffle.  The pipeline hot path when only tier tables are needed.
+
+    Masks work as in ``detrend_sequences``.  With a ``chunk_threshold``
+    long rows are routed as there, but the chunk size is rounded to a
+    multiple of ``factor``, so every tier bucket lies wholly inside exactly
+    ONE chunk's core slice and each chunk emits its core's tier rows
+    directly: all stats (including the non-additive per-bucket median) are
+    exact, the bucket rows of different chunks are disjoint, and no
+    full-resolution array is ever shuffled or reassembled."""
+    params = dict(params, method=method)
+
+    def emit(pdf: pd.DataFrame, pieces: list) -> pd.DataFrame:
+        doc_ids: list[np.ndarray] = []
+        rows: list[tuple] = []
+        for doc_id, (_, y, flat, trend, t0) in zip(pdf["doc_id"], pieces):
+            # chunk cores start on a bucket boundary (t0 % factor == 0)
+            cols = _tier_arrays(y, flat, trend, factor, b0=t0 // factor)
+            doc_ids.append(np.repeat(doc_id, len(cols[0])))
+            rows.append(cols)
+        return _tier_frame(doc_ids, rows)
+
+    def run(part: DataFrame, chunked: bool) -> DataFrame:
+        return _detrend_pass(part, params, emit, TIER_SCHEMA, chunked,
+                             mask_col, mask_transit)
+
+    return _route(df, params, run, chunk_threshold, chunk_size,
+                  masked=mask_col is not None or mask_transit is not None,
+                  align=factor)
 
 
 def detrend_points(points: DataFrame, method: str = "biweight",
@@ -147,8 +341,9 @@ def detrend_points(points: DataFrame, method: str = "biweight",
                    **params) -> DataFrame:
     """Long-form entry point: (doc_id, t, y[, ...]) -> adds trend/flat.
 
-    For callers whose data is already exploded.  One ``applyInPandas`` per
-    doc_id (shuffle on doc_id — unavoidable in long form; the packed
+    For callers whose data is already exploded, and the only one that
+    takes an irregular time axis.  One ``applyInPandas`` per doc_id
+    (shuffle on doc_id — unavoidable in long form; the packed
     ``detrend_sequences`` is the shuffle-free fast path and produces
     identical values, tested).  ``mask_transit=(period, duration, T0)``
     derives the known-signal exclusion mask from ``t``, as in the packed
@@ -163,16 +358,11 @@ def detrend_points(points: DataFrame, method: str = "biweight",
     ])
 
     def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from wotan_spark.kernels.series import transit_mask as _tmask
-
         pdf = pdf.sort_values("t")
         t = pdf["t"].to_numpy(dtype=np.float64)
         y = pdf["y"].to_numpy(dtype=np.float64)
-        p = params
-        if mask_transit is not None:
-            period, duration, t0 = mask_transit
-            p = dict(params, mask=_tmask(t, period, duration, t0))
-        res = detrend_series(t, y, **p)
+        res = detrend_series(t, y, **_with_mask(params, t,
+                                                transit=mask_transit))
         return pd.DataFrame({
             "doc_id": np.repeat(key[0], len(t)),
             "t": t.astype(np.int64),
@@ -182,63 +372,6 @@ def detrend_points(points: DataFrame, method: str = "biweight",
         })
 
     return points.groupBy("doc_id").applyInPandas(run, schema=schema)
-
-
-# routing threshold: a doc only benefits from chunking when its solo kernel
-# time rivals a whole task's mean wall (the vectorized sliders run
-# ~300k pts/s/core, so 64k tokens ~ 0.2s — below that, chunking's extra
-# shuffle + reassembly stages cost more than the straggler they remove)
-AUTO_CHUNK_THRESHOLD = 65536
-
-# methods whose trend estimate is local (window/kernel-bounded), so
-# overlap-chunking reproduces the unchunked output exactly (tested);
-# global fits (splines, gp, cofiam, regressions, ...) are not chunkable
-_CHUNKABLE_METHODS = frozenset(
-    ["biweight", "andrewsinewave", "welsch", "hodges", "median", "mean",
-     "trim_mean", "winsorize", "huber_psi", "hampelfilt", "tau",  # sliders
-     "huber", "hampel", "ramsay",                    # iterative sliders
-     "medfilt", "savgol", "lowess"])                 # local filters
-
-
-def detrend_sequences_auto(df: DataFrame, method: str = "biweight",
-                           chunk_threshold: int = AUTO_CHUNK_THRESHOLD,
-                           chunk_size: int | None = None,
-                           keep_tokens: bool = False,
-                           outputs: tuple[str, ...] = ("flat", "trend"),
-                           **params) -> DataFrame:
-    """Single routing entry point for skewed sequence lengths (north_rule:
-    salted repartitioning for skewed long sequences): rows with
-    ``n_tok <= chunk_threshold`` take the zero-shuffle packed path; longer
-    rows are overlap-chunked, salted across tasks, detrended, and
-    reassembled — so one 500k-token doc no longer pins a single task for
-    the whole stage.  Non-chunkable (global-fit) methods and masked runs
-    fall back to the packed path for all rows.
-
-    Plan shape: two branches of one union, each with the ``n_tok``
-    predicate pushed to the parquet scan.  At 100 TB the long-branch scan
-    skips every row group whose n_tok max is under the threshold (the
-    lognormal tail is rare), so the second scan costs proportional to the
-    skewed tail, not the corpus.
-    """
-    if (method not in _CHUNKABLE_METHODS or "mask_col" in params
-            or "mask_transit" in params):
-        return detrend_sequences(df, method=method, keep_tokens=keep_tokens,
-                                 outputs=outputs, **params)
-    if chunk_size is None:
-        chunk_size = chunk_threshold
-    short = df.filter(F.col("n_tok") <= chunk_threshold)
-    long_ = df.filter(F.col("n_tok") > chunk_threshold)
-    # both branches take ``outputs`` as an explicit kwarg, so the pruning
-    # happens INSIDE each UDF (an unwanted array never crosses Arrow —
-    # twice, for the chunked branch) and the union's schemas agree by
-    # construction; **params carries only detrend_series kwargs
-    chunked = detrend_sequences_chunked(long_, method=method,
-                                        chunk_size=chunk_size,
-                                        keep_tokens=keep_tokens,
-                                        outputs=outputs, **params)
-    return (detrend_sequences(short, method=method, keep_tokens=keep_tokens,
-                              outputs=outputs, **params)
-            .unionByName(chunked))
 
 
 def split_chunks(df: DataFrame, chunk_size: int, overlap: int) -> DataFrame:
@@ -276,117 +409,3 @@ def split_chunks(df: DataFrame, chunk_size: int, overlap: int) -> DataFrame:
             yield pd.DataFrame(out)
 
     return df.mapInPandas(split, schema=CHUNK_SCHEMA)
-
-
-def detrend_sequences_chunked(df: DataFrame, method: str = "biweight",
-                              chunk_size: int = 8192,
-                              overlap: int | None = None,
-                              num_partitions: int | None = None,
-                              keep_tokens: bool = False,
-                              outputs: tuple[str, ...] = ("flat", "trend"),
-                              **params) -> DataFrame:
-    """Skew-safe detrend: chunk, spread, detrend, reassemble.
-
-    Exact for the local (slider/filter) methods when
-    ``overlap >= window_length + break_tolerance``.  ``keep_tokens``
-    carries the core token slices through the pieces and reassembles the
-    original arrays bit-exactly (the per-row invariant).  ``outputs``
-    prunes result arrays at the UDF boundary like ``detrend_sequences``:
-    an unwanted array is dropped before it crosses Arrow — and here it
-    crosses TWICE (pieces, then reassembly), so the saving doubles.
-    """
-    params = dict(params, method=method)
-    want_flat = "flat" in outputs
-    want_trend = "trend" in outputs
-    if overlap is None:
-        overlap = _chunk_overlap(params)
-
-    chunks = split_chunks(df, chunk_size, overlap)
-    # salt: spread one doc's chunks across tasks by (doc_id, chunk_id) hash.
-    # The partition count MUST be explicit — a bare column repartition is
-    # AQE-coalescible, and chunk rows are few BYTES but heavy CPU, so AQE's
-    # byte-targeted coalescing would fold them back into one task and
-    # recreate the straggler this operator exists to remove.
-    if num_partitions is None:
-        num_partitions = max(
-            df.sparkSession.sparkContext.defaultParallelism, 8)
-    chunks = chunks.repartition(num_partitions,
-                                F.col("doc_id"), F.col("chunk_id"))
-
-    piece_fields = [
-        StructField("doc_id", StringType(), False),
-        StructField("chunk_id", IntegerType(), False),
-        StructField("n_tok", IntegerType(), False),
-        StructField("source", StringType(), True),
-    ]
-    if want_flat:
-        piece_fields.append(
-            StructField("flat", ArrayType(DoubleType(), True), True))
-    if want_trend:
-        piece_fields.append(
-            StructField("trend", ArrayType(DoubleType(), True), True))
-    if keep_tokens:
-        piece_fields.append(
-            StructField("tokens", ArrayType(IntegerType(), True), False))
-    piece_schema = StructType(piece_fields)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            flats, trends, toks_out = [], [], []
-            for toks, lead, core in zip(pdf["tokens"], pdf["lead"], pdf["core"]):
-                toks = np.asarray(toks, dtype=np.int32)
-                flat, trend = _detrend_one(toks, params)
-                sl = slice(int(lead), int(lead) + int(core))
-                if want_flat:
-                    flats.append(flat[sl])
-                if want_trend:
-                    trends.append(trend[sl])
-                if keep_tokens:
-                    toks_out.append(toks[sl])
-            out = pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "chunk_id": pdf["chunk_id"].astype("int32"),
-                "n_tok": pdf["n_tok"].astype("int32"),
-                "source": pdf["source"],
-            })
-            if want_flat:
-                out["flat"] = flats
-            if want_trend:
-                out["trend"] = trends
-            if keep_tokens:
-                out["tokens"] = toks_out
-            yield out
-
-    pieces = chunks.mapInPandas(run, schema=piece_schema)
-
-    def reassemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("chunk_id")
-        out = pd.DataFrame({
-            "doc_id": [key[0]],
-            "n_tok": [np.int32(pdf["n_tok"].iloc[0])],
-            "source": [pdf["source"].iloc[0]],
-        })
-        if want_flat:
-            out["flat"] = [np.concatenate([np.asarray(a, dtype=np.float64)
-                                           for a in pdf["flat"]])]
-        if want_trend:
-            out["trend"] = [np.concatenate([np.asarray(a, dtype=np.float64)
-                                            for a in pdf["trend"]])]
-        if keep_tokens:
-            out["tokens"] = [np.concatenate(
-                [np.asarray(a, dtype=np.int32) for a in pdf["tokens"]])]
-        return out
-
-    out_fields = [f for f in DETREND_SCHEMA.fields
-                  if f.name not in ("flat", "trend")]
-    if want_flat:
-        out_fields.append(
-            StructField("flat", ArrayType(DoubleType(), True), True))
-    if want_trend:
-        out_fields.append(
-            StructField("trend", ArrayType(DoubleType(), True), True))
-    if keep_tokens:
-        out_fields.append(
-            StructField("tokens", ArrayType(IntegerType(), True), False))
-    return pieces.groupBy("doc_id").applyInPandas(
-        reassemble, schema=StructType(out_fields))

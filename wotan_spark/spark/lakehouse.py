@@ -629,7 +629,13 @@ class SnapshotTable:
         not — acceptable for FILE-level pruning, and it keeps the whole
         computation one scan + scalar broadcast with no sampling pass.
         Returns ``(z_column, row_count)`` — the count rides the same agg
-        so compact() pays one metadata pass, not two."""
+        so compact() pays one metadata pass, not two.  ``bits`` shrinks
+        so every interleaved bit lands below the sign bit of the long
+        z-value (a wider shift would wrap onto the low bits)."""
+        bits = min(bits, 63 // len(cols))
+        if bits == 0:
+            raise ValueError(f"z-order over {len(cols)} columns: at most "
+                             "63 fit one 64-bit z-value")
         numeric = {"int", "bigint", "smallint", "tinyint", "float",
                    "double", "decimal", "date", "timestamp",
                    "timestamp_ntz"}
@@ -821,6 +827,9 @@ class SnapshotTable:
             raise ValueError("pass where or where_in, not both")
         vals: list = []
         if where is not None:
+            if not where:
+                raise ValueError("where needs at least one (col, lo, hi) "
+                                 "clause")
             clauses = ([tuple(where)] if isinstance(where[0], str)
                        else [tuple(cl) for cl in where])
             for cl in clauses:

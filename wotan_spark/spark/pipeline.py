@@ -33,7 +33,9 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from wotan_spark.spark.blocks import encode_blocks
-from wotan_spark.spark.detrend_op import detrend_sequences_auto
+from wotan_spark.spark.detrend_op import (AUTO_CHUNK_THRESHOLD,
+                                          detrend_rollup_fused,
+                                          detrend_sequences)
 from wotan_spark.spark.lakehouse import SnapshotTable, newest_stamped
 from wotan_spark.spark.rollup import cascade_tier, rollup_tier10
 
@@ -285,9 +287,10 @@ class Pipeline:
             t0 = time.time()
             # auto skew routing (north_rule): long-tail docs are chunked +
             # salted across tasks instead of pinning one straggler task
-            det = detrend_sequences_auto(seq_df, method=cfg.method,
-                                         window_length=cfg.window_length,
-                                         keep_tokens=True, **cfg.params)
+            det = detrend_sequences(seq_df, method=cfg.method,
+                                    chunk_threshold=AUTO_CHUNK_THRESHOLD,
+                                    window_length=cfg.window_length,
+                                    keep_tokens=True, **cfg.params)
             out["detrended"] = self._commit_stage("detrended", det, dfp,
                                                   seq_sid, run_id, t0)
         if stop_after == "detrended":
@@ -500,8 +503,6 @@ class Pipeline:
         are deterministic keyed replaces, so replaying the same doc set
         rewrites identical rows — the streaming sink leans on this for
         crash-replay safety (``streaming.run_pipeline_ingestion``)."""
-        from wotan_spark.spark.rollup import (cascade_tier,
-                                              detrend_rollup_fused_auto)
         cfg = self.config
         t0 = time.time()
         seq_sid = self.tables["sequences"].current_snapshot_id()
@@ -547,8 +548,9 @@ class Pipeline:
             return self.tables[name].merge_buckets(
                 self.spark, df, keys=["doc_id"], **meta)
 
-        t10_full = detrend_rollup_fused_auto(
+        t10_full = detrend_rollup_fused(
             seq_changed, cfg.method, factor=factor,
+            chunk_threshold=AUTO_CHUNK_THRESHOLD,
             window_length=cfg.window_length, **cfg.params).persist()
         try:
             sid10 = _merge("tier10", _gate("tier10", t10_full),

@@ -3,9 +3,10 @@
 Tier-10 aggregates are computed inside the same packed, shuffle-free pass
 shape as the detrend itself: bucket membership (``t div 10``) is a
 within-series property, so one ``mapInPandas`` over the packed arrays emits
-bucket rows with no exchange.  Tier-100 is then *cascaded from tier-10*
-(never from raw) as a plain ``groupBy`` over additive components — the
-continuous-aggregate pattern: count/sum/min/max re-aggregate exactly;
+bucket rows with no exchange (``detrend_op.detrend_rollup_fused`` does the
+same inside the detrend pass itself).  Tier-100 is then *cascaded from
+tier-10* (never from raw) as a plain ``groupBy`` over additive components —
+the continuous-aggregate pattern: count/sum/min/max re-aggregate exactly;
 ``*_mean`` is re-derived as sum/count; the non-additive median exists only
 at tier-10.
 
@@ -85,8 +86,8 @@ def _tier_arrays(y: np.ndarray, flat: np.ndarray, trend: np.ndarray,
                  factor: int, b0: int = 0) -> tuple:
     """The 13 ``TIER_SCHEMA`` column arrays for one series (bucket ids
     offset by ``b0`` for chunked cores) — the ONE definition of the
-    tier-row layout, shared by the chained, fused and chunked passes
-    (three hand-copied assembly loops had already started drifting)."""
+    tier-row layout, shared by ``rollup_tier10`` and the fused pass
+    (``detrend_op.detrend_rollup_fused``)."""
     ids, cnt, ysum, ymean, ymed, ymin, ymax = _bucket_stats(y, factor)
     _, tcnt, tsum, tmean, _, _, _ = _bucket_stats(
         trend, factor, with_median=False)
@@ -126,122 +127,6 @@ def rollup_tier10(detrended: DataFrame, factor: int = 10) -> DataFrame:
             yield _tier_frame(doc_ids, rows)
 
     return detrended.mapInPandas(roll, schema=TIER_SCHEMA)
-
-
-def detrend_rollup_fused(df: DataFrame, method: str = "biweight",
-                         factor: int = 10, mask_col: str | None = None,
-                         mask_transit: tuple[float, float, float]
-                         | None = None, **params) -> DataFrame:
-    """Fused detrend + tier rollup in ONE ``mapInPandas`` pass: half the
-    Arrow traffic of chaining the two operators (the full-resolution
-    flat/trend arrays never cross back into the JVM), zero shuffle.  The
-    pipeline hot path when only tier tables are needed.
-
-    ``mask_col`` / ``mask_transit`` carry the known-signal mask exactly as
-    in ``detrend_sequences`` (they become the per-row ``mask`` kernel
-    parameter; forwarding them into the kernel verbatim was a crash —
-    round-5b review finding)."""
-    from wotan_spark.spark.detrend_op import _detrend_one
-    params = dict(params, method=method)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from wotan_spark.kernels.series import transit_mask as _tmask
-
-        for pdf in batches:
-            if mask_col is not None:
-                masks = [np.asarray(m, dtype=bool) for m in pdf[mask_col]]
-            elif mask_transit is not None:
-                period, duration, t0 = mask_transit
-                masks = [_tmask(np.arange(len(toks), dtype=np.float64),
-                                period, duration, t0)
-                         for toks in pdf["tokens"]]
-            else:
-                masks = None
-            doc_ids: list[np.ndarray] = []
-            rows: list[tuple] = []
-            for row_i, (doc_id, toks) in enumerate(zip(pdf["doc_id"],
-                                                       pdf["tokens"])):
-                toks = np.asarray(toks, dtype=np.int32)
-                p = (params if masks is None
-                     else dict(params, mask=masks[row_i]))
-                flat, trend = _detrend_one(toks, p)
-                cols = _tier_arrays(decode_tokens(toks), flat, trend, factor)
-                doc_ids.append(np.repeat(doc_id, len(cols[0])))
-                rows.append(cols)
-            yield _tier_frame(doc_ids, rows)
-
-    return df.mapInPandas(run, schema=TIER_SCHEMA)
-
-
-def detrend_rollup_fused_auto(df: DataFrame, method: str = "biweight",
-                              factor: int = 10,
-                              chunk_threshold: int | None = None,
-                              chunk_size: int | None = None,
-                              num_partitions: int | None = None,
-                              **params) -> DataFrame:
-    """Skew-safe fused detrend + tier rollup.
-
-    Short rows take the zero-shuffle fused pass (``detrend_rollup_fused``).
-    Rows past ``chunk_threshold`` tokens are overlap-chunked and salted
-    across tasks — and because the chunk size is rounded to a bucket
-    multiple, every tier bucket lies wholly inside exactly ONE chunk's core
-    slice, so each chunk emits its core's tier rows directly: all stats
-    (including the non-additive per-bucket median) are exact, the bucket
-    rows of different chunks are disjoint, and no full-resolution
-    flat/trend array is ever shuffled or reassembled.  Exactness vs the
-    unchunked fused pass is pytest-asserted column-for-column.
-    """
-    from wotan_spark.spark.detrend_op import (_CHUNKABLE_METHODS,
-                                              AUTO_CHUNK_THRESHOLD,
-                                              _chunk_overlap, _detrend_one,
-                                              split_chunks)
-
-    if chunk_threshold is None:
-        chunk_threshold = AUTO_CHUNK_THRESHOLD
-    if method not in _CHUNKABLE_METHODS or "mask_col" in params \
-            or "mask_transit" in params:
-        # masked runs take the unchunked fused pass, which handles the
-        # mask kwargs itself (a mask's irregular NaN pattern breaks the
-        # chunk-core exactness argument)
-        return detrend_rollup_fused(df, method, factor=factor, **params)
-    if chunk_size is None:
-        chunk_size = chunk_threshold
-    chunk_size = max(factor, (chunk_size // factor) * factor)  # bucket-align
-
-    run_params = dict(params, method=method)
-    overlap = _chunk_overlap(run_params)
-
-    short = df.filter(F.col("n_tok") <= chunk_threshold)
-    long_ = df.filter(F.col("n_tok") > chunk_threshold)
-    chunks = split_chunks(long_, chunk_size, overlap)
-    if num_partitions is None:
-        num_partitions = max(
-            df.sparkSession.sparkContext.defaultParallelism, 8)
-    # explicit count: a bare column repartition is AQE-coalescible (bytes
-    # small, CPU heavy) — see detrend_sequences_chunked
-    chunks = chunks.repartition(num_partitions,
-                                F.col("doc_id"), F.col("chunk_id"))
-
-    def roll_chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids: list[np.ndarray] = []
-            rows: list[tuple] = []
-            for doc_id, toks, t0, lead, core in zip(
-                    pdf["doc_id"], pdf["tokens"], pdf["t0"], pdf["lead"],
-                    pdf["core"]):
-                toks = np.asarray(toks, dtype=np.int32)
-                flat, trend = _detrend_one(toks, run_params)
-                sl = slice(int(lead), int(lead) + int(core))
-                cols = _tier_arrays(decode_tokens(toks[sl]), flat[sl],
-                                    trend[sl], factor,
-                                    b0=int(t0) // factor)  # t0 bucket-aligned
-                doc_ids.append(np.repeat(doc_id, len(cols[0])))
-                rows.append(cols)
-            yield _tier_frame(doc_ids, rows)
-
-    long_tiers = chunks.mapInPandas(roll_chunk, schema=TIER_SCHEMA)
-    return detrend_rollup_fused(short, method, factor=factor,
-                                **params).unionByName(long_tiers)
 
 
 def cascade_tier(tier: DataFrame, step: int = 10) -> DataFrame:

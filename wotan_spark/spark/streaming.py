@@ -23,7 +23,8 @@ from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType, TimestampType)
 
 from wotan_spark.spark.lakehouse import SnapshotTable
-from wotan_spark.spark.rollup import detrend_rollup_fused_auto
+from wotan_spark.spark.detrend_op import (AUTO_CHUNK_THRESHOLD,
+                                          detrend_rollup_fused)
 from wotan_spark.spark.synth import SEQUENCES_SCHEMA
 
 
@@ -54,9 +55,9 @@ def run_ingestion(spark: SparkSession, landing_dir: str, table_root: str,
 
         # skew-safe fused pass: a long landing doc is chunked+salted, each
         # chunk emits its bucket-aligned core's tier rows directly
-        t10 = detrend_rollup_fused_auto(batch_df, method,
-                                        window_length=window_length,
-                                        factor=factor)
+        t10 = detrend_rollup_fused(batch_df, method, factor=factor,
+                                   chunk_threshold=AUTO_CHUNK_THRESHOLD,
+                                   window_length=window_length)
         # late data never resurrects aged-out buckets (retention gate)
         cut = retention_cutoff(tier_table)
         if cut is not None:
