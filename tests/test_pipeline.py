@@ -188,6 +188,83 @@ def test_pipeline_compaction_with_lineage(spark, tmp_path):
                                t10_after["y_sum"].to_numpy(), rtol=0)
     lin = pipe.tables["lineage"].read(spark)
     assert lin.filter("stage = 'compact-tier10'").count() >= 1
+    # one lineage row per data file of the compaction snapshot, and the
+    # rows column accounts for the whole compacted table
+    lin_c = lin.filter("stage = 'compact-tier10'")
+    sid = report["tier10"]["snapshot_id"]
+    assert lin_c.count() == len(pipe.tables["tier10"].data_files(sid))
+    assert (lin_c.agg(F.sum("rows")).collect()[0][0]
+            == pipe.tables["tier10"].read(spark).count())
+
+
+def _two_file_table(spark, pipe: Pipeline) -> int:
+    """Commit a tiny two-file tier10 snapshot to log lineage for."""
+    return pipe.tables["tier10"].overwrite(
+        spark.range(10).repartition(2).withColumnRenamed("id", "bucket"))
+
+
+def test_lineage_commit_starts_no_spark_job(spark, tmp_path):
+    """Lineage rows are written from the driver: logging a commit's rows
+    starts no Spark job."""
+    pipe = Pipeline(spark, str(tmp_path / "tables"))
+    sid = _two_file_table(spark, pipe)
+    sc = spark.sparkContext
+    group = f"lineage-{tmp_path.name}"
+    sc.setJobGroup(group, "lineage commit")
+    try:
+        pipe._log_lineage("tier10", sid, None, "r1", "tier10", 0.5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    lin = pipe.tables["lineage"].read(spark)
+    assert lin.count() == len(pipe.tables["tier10"].data_files(sid)) == 2
+    assert lin.agg(F.sum("rows")).collect()[0][0] == 10
+
+
+def test_lineage_schema_is_what_spark_infers(spark, tmp_path):
+    """LINEAGE_SCHEMA pins exactly the schema Spark infers from the same
+    row dicts, so pre-existing Spark-written lineage dirs stay one
+    schema with the driver-written ones."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from wotan_spark.spark.pipeline import LINEAGE_SCHEMA
+    pipe = Pipeline(spark, str(tmp_path / "tables"))
+    sid = _two_file_table(spark, pipe)
+    pipe._log_lineage("tier10", sid, 3, "r1", "tier10", 0.5)
+    (path,) = pipe.tables["lineage"].data_files()
+    rows = pq.read_table(path).to_pylist()
+    assert pq.read_schema(path).remove_metadata() == LINEAGE_SCHEMA
+    assert spark.createDataFrame(rows).schema == \
+        from_arrow_schema(LINEAGE_SCHEMA)
+
+
+def test_lineage_table_mixing_old_and_new_dirs(spark, tmp_path):
+    """A lineage table holding one dir written through Spark (the old
+    way) and one written from the driver reads back as one frame with
+    every row, has one dir schema, and compacts to the same rows."""
+    import pyarrow.parquet as pq
+    pipe = Pipeline(spark, str(tmp_path / "tables"))
+    sid = _two_file_table(spark, pipe)
+    lineage = pipe.tables["lineage"]
+    pipe._log_lineage("tier10", sid, None, "new", "tier10", 0.5)
+    new_rows = pq.read_table(lineage.data_files()[0]).to_pylist()
+    old_rows = [dict(r, run_id="old") for r in new_rows]
+    lineage.append(spark.createDataFrame(old_rows), stage="tier10",
+                   run_id="old")
+
+    def multiset(df):
+        return sorted(tuple(r[c] for c in sorted(r.asDict()))
+                      for r in df.collect())
+
+    want = sorted(tuple(r[c] for c in sorted(r))
+                  for r in old_rows + new_rows)
+    assert multiset(lineage.read(spark)) == want
+    dirs = lineage._manifest(lineage.current_snapshot_id())["files"]
+    assert len(dirs) == 2
+    assert lineage._dir_schema(dirs[0]) == lineage._dir_schema(dirs[1])
+    lineage.compact(spark, target_file_rows=100)
+    assert multiset(lineage.read(spark)) == want
 
 
 def test_incremental_read_returns_only_new_files(spark, tmp_path):

@@ -97,6 +97,13 @@ def test_pipeline_enforce_retention_with_lineage(spark, tmp_path):
     assert t10.agg(F.min("bucket")).collect()[0][0] == hi - 10 + 1
     lineage = pipe.tables["lineage"].read(spark)
     assert lineage.filter("stage = 'retention-tier10'").count() >= 1
+    # one lineage row per data file of the retention snapshot, and the
+    # rows column accounts for the whole retained table
+    lin_r = lineage.filter("stage = 'retention-tier10'")
+    sid = report["tier10"]["snapshot_id"]
+    assert lin_r.count() == len(pipe.tables["tier10"].data_files(sid))
+    assert (lin_r.agg(F.sum("rows")).collect()[0][0]
+            == pipe.tables["tier10"].read(spark).count())
 
 
 def test_late_data_does_not_resurrect_aged_out_buckets(spark, tmp_path):

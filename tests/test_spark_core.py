@@ -3,6 +3,8 @@ chunked-path exactness, rollup cascade, gap-fill, clip, masks."""
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import numpy.testing as npt
 import pyspark.sql.functions as F
@@ -94,8 +96,11 @@ def test_detrend_points_mask_matches_packed(spark):
                                 mask_transit=mt).collect()}
     pts = seq.select("doc_id", F.posexplode("tokens").alias("t", "tok")) \
         .select("doc_id", "t", (1.0 + F.col("tok") / 1e6).alias("y"))
-    long = detrend_points(pts, method="mean", window_length=17,
-                          mask_transit=mt)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        long = detrend_points(pts, method="mean", window_length=17,
+                              mask_transit=mt)
+    assert not [w for w in caught if "eval type" in str(w.message)]
     long_pdf = long.orderBy("doc_id", "t").toPandas()
     for doc_id, grp in long_pdf.groupby("doc_id"):
         got = grp["trend"].to_numpy(dtype=np.float64)
@@ -126,8 +131,14 @@ def test_chunked_detrend_exact_and_token_invariant(spark):
     plain = {r.doc_id: r for r in
              detrend_sequences(seq, method="biweight",
                                window_length=17).collect()}
-    chunked = detrend_sequences(seq, method="biweight", window_length=17,
-                                chunk_threshold=0, chunk_size=256)
+    # the chunk reassembly's applyInPandas must not warn that it cannot
+    # infer its eval type from the body's type hints
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        chunked = detrend_sequences(seq, method="biweight",
+                                    window_length=17, chunk_threshold=0,
+                                    chunk_size=256)
+    assert not [w for w in caught if "eval type" in str(w.message)]
     rows = chunked.collect()
     assert len(rows) == N_DOCS
     for row in rows:

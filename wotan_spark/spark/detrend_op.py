@@ -223,7 +223,9 @@ def _reassemble(outputs: tuple[str, ...], keep_tokens: bool):
     if keep_tokens:
         arrays.append(("tokens", np.int32))
 
-    def reassemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # grouped-map bodies stay unannotated: applyInPandas infers its eval
+    # type from hints and warns on every call when they are partial
+    def reassemble(key, pdf):
         pdf = pdf.sort_values("chunk_id")
         out = pd.DataFrame({
             "doc_id": [key[0]],
@@ -357,7 +359,7 @@ def detrend_points(points: DataFrame, method: str = "biweight",
         StructField("flat", DoubleType(), True),
     ])
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key, pdf):          # unannotated, as in _reassemble
         pdf = pdf.sort_values("t")
         t = pdf["t"].to_numpy(dtype=np.float64)
         y = pdf["y"].to_numpy(dtype=np.float64)

@@ -385,9 +385,19 @@ class SnapshotTable:
             os.rename(tmp_head, self._head_path())
         return sid
 
-    def _write_data(self, df: DataFrame) -> str:
+    def _write_data(self, df: "DataFrame | pa.Table") -> str:
+        """Write one fresh data dir.  A Spark frame goes through a Spark
+        write job; a driver-held ``pyarrow.Table`` (a few lineage rows)
+        is written as one parquet file with no Spark job at all.  Either
+        way the dir gets the same stats and schema stamp."""
         d = os.path.join(self.root, "data", uuid.uuid4().hex)
-        df.write.mode("overwrite").parquet(d)
+        if isinstance(df, DataFrame):
+            df.write.mode("overwrite").parquet(d)
+        else:
+            import pyarrow.parquet as pq
+            os.makedirs(d)
+            pq.write_table(df, os.path.join(
+                d, f"part-00000-{uuid.uuid4().hex}.parquet"))
         self._write_file_stats(d)
         return d
 
@@ -477,7 +487,7 @@ class SnapshotTable:
             # every merge into a full-table rewrite
             return None
 
-    def append(self, df: DataFrame, **meta) -> int:
+    def append(self, df: "DataFrame | pa.Table", **meta) -> int:
         d = self._write_data(df)
         parent = self.current_snapshot_id()
         manifests = (self._as_manifest_list(parent)

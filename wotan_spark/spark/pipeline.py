@@ -18,7 +18,9 @@ stages and re-running completes the remainder and yields identical tables
 Lineage (north-rule metrics contract): one row per written data file:
 (partition_id, input_snapshot, rows, checksum, wall_time_s, run_id, stage).
 Row counts/checksums come from the parquet footers — metadata-only, no
-second scan of the data.
+second scan of the data.  Every stage, merge, retention and compaction
+commit appends its rows as ONE parquet file written from the driver with
+pyarrow (no Spark job), in the format pinned by ``LINEAGE_SCHEMA``.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
@@ -126,25 +129,19 @@ class PipelineConfig:
         return hashlib.md5(blob.encode()).hexdigest()[:16]
 
 
-def _file_lineage(table: SnapshotTable, snapshot_id: int, input_snapshot,
-                  run_id: str, stage: str, wall_time_s: float) -> list[dict]:
-    rows = []
-    for i, path in enumerate(table.data_files(snapshot_id)):
-        meta = pq.read_metadata(path)
-        with open(path, "rb") as f:
-            head = f.read(65536)
-        checksum = hashlib.md5(head).hexdigest()
-        rows.append({
-            "partition_id": i,
-            "input_snapshot": (int(input_snapshot)
-                               if input_snapshot is not None else -1),
-            "rows": int(meta.num_rows),
-            "checksum": checksum,
-            "wall_time_s": float(wall_time_s),
-            "run_id": run_id,
-            "stage": stage,
-        })
-    return rows
+# one lineage row's format: exactly the schema Spark inferred from the
+# row dicts when lineage rows went through a Spark write (sorted names,
+# long ints, double wall time), so a table holding dirs written either
+# way reads back, merges and compacts as one schema
+LINEAGE_SCHEMA = pa.schema([
+    ("checksum", pa.string()),
+    ("input_snapshot", pa.int64()),
+    ("partition_id", pa.int64()),
+    ("rows", pa.int64()),
+    ("run_id", pa.string()),
+    ("stage", pa.string()),
+    ("wall_time_s", pa.float64()),
+])
 
 
 class Pipeline:
@@ -177,15 +174,37 @@ class Pipeline:
 
     def _commit_stage(self, name: str, df: DataFrame, fingerprint: str,
                       input_snapshot, run_id: str, t_start: float) -> int:
-        table = self.tables[name]
-        sid = table.overwrite(df, fingerprint=fingerprint, run_id=run_id)
-        wall = time.time() - t_start
-        lineage_rows = _file_lineage(table, sid, input_snapshot, run_id,
-                                     name, wall)
-        if lineage_rows:
-            ldf = self.spark.createDataFrame(lineage_rows)
-            self.tables["lineage"].append(ldf, stage=name, run_id=run_id)
+        sid = self.tables[name].overwrite(df, fingerprint=fingerprint,
+                                          run_id=run_id)
+        self._log_lineage(name, sid, input_snapshot, run_id, name,
+                          time.time() - t_start)
         return sid
+
+    def _log_lineage(self, name: str, snapshot_id: int, input_snapshot,
+                     run_id: str, stage: str, wall_time_s: float) -> None:
+        """Append one lineage row per data file of ``snapshot_id`` of
+        table ``name``.  Rows and checksums come from the files' footers
+        and heads, and the rows are written from the driver as one parquet
+        file: a handful of rows costs no Spark job."""
+        rows = []
+        for i, path in enumerate(
+                self.tables[name].data_files(snapshot_id)):
+            with open(path, "rb") as f:
+                head = f.read(65536)
+            rows.append({
+                "partition_id": i,
+                "input_snapshot": (int(input_snapshot)
+                                   if input_snapshot is not None else -1),
+                "rows": int(pq.read_metadata(path).num_rows),
+                "checksum": hashlib.md5(head).hexdigest(),
+                "wall_time_s": float(wall_time_s),
+                "run_id": run_id,
+                "stage": stage,
+            })
+        if rows:
+            self.tables["lineage"].append(
+                pa.Table.from_pylist(rows, schema=LINEAGE_SCHEMA),
+                stage=stage, run_id=run_id)
 
     # ------------------------------------------------------------------
     def ingest(self, sequences: DataFrame, run_id: str) -> int:
@@ -416,12 +435,8 @@ class Pipeline:
                                  run_id=run_id)
         wall = time.time() - t0
         for name, r in report.items():
-            rows = _file_lineage(self.tables[name], r["snapshot_id"], None,
-                                 run_id, f"retention-{name}", wall)
-            if rows:
-                self.tables["lineage"].append(
-                    self.spark.createDataFrame(rows),
-                    stage=f"retention-{name}", run_id=run_id)
+            self._log_lineage(name, r["snapshot_id"], None, run_id,
+                              f"retention-{name}", wall)
         return report
 
     # ------------------------------------------------------------------
@@ -449,13 +464,8 @@ class Pipeline:
             t0 = time.time()
             sid = table.compact(self.spark, target_file_rows=target_file_rows,
                                 cluster_by=cluster_by, run_id=run_id)
-            wall = time.time() - t0
-            rows = _file_lineage(table, sid, None, run_id,
-                                 f"compact-{name}", wall)
-            if rows:
-                self.tables["lineage"].append(
-                    self.spark.createDataFrame(rows),
-                    stage=f"compact-{name}", run_id=run_id)
+            self._log_lineage(name, sid, None, run_id, f"compact-{name}",
+                              time.time() - t0)
             report[name] = {"files_before": before,
                             "files_after": len(table.data_files()),
                             "snapshot_id": sid}
@@ -591,11 +601,6 @@ class Pipeline:
                                    n_freqs=cfg.periodogram_freqs)
             sketch_sids["periods"] = self.tables["periods"].merge_buckets(
                 self.spark, per, keys=["doc_id"], **pmeta)
-        wall = time.time() - t0
-        lineage = _file_lineage(self.tables["tier10"], sid10, seq_sid,
-                                run_id, "tier10-incremental", wall)
-        if lineage:
-            self.tables["lineage"].append(
-                self.spark.createDataFrame(lineage), stage="tier10-inc",
-                run_id=run_id)
+        self._log_lineage("tier10", sid10, seq_sid, run_id,
+                          "tier10-incremental", time.time() - t0)
         return {"tier10": sid10, "tier100": sid100, **sketch_sids}
