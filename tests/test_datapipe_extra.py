@@ -232,27 +232,6 @@ def test_curate_corpus_funnel_consistency(spark):
     assert kept.count() == counts[-1]
 
 
-def test_component_survivors_by_quality(spark):
-    """Highest score wins within each component; ties fall back to min
-    doc_id."""
-    from wotan_spark.spark.datapipe import component_survivors
-    comp = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)],
-        "doc_id long, component long")
-    scores = spark.createDataFrame(
-        [(1, 0.2), (2, 0.9), (3, 0.9), (7, 0.5), (8, 0.1)],
-        "doc_id long, score double")
-    got = {r.component: r.doc_id
-           for r in component_survivors(comp, scores).collect()}
-    assert got == {1: 2, 7: 7}   # doc 2 ties doc 3 at 0.9 -> min id wins
-    # unscored members rank last but never vanish: a fully-unscored
-    # component still emits a survivor (min doc_id)
-    sparse = spark.createDataFrame([(3, 0.1)], "doc_id long, score double")
-    got2 = {r.component: r.doc_id
-            for r in component_survivors(comp, sparse).collect()}
-    assert got2 == {1: 3, 7: 7}
-
-
 def test_repetition_stats_hand_computed(spark):
     """Gopher repetition signals on hand-counted docs."""
     from wotan_spark.spark.datapipe import repetition_stats

@@ -504,25 +504,6 @@ def dedup_components(pairs: DataFrame, id_a: str = "doc_a",
                          F.col("lbl").alias("component"))
 
 
-def component_survivors(components: DataFrame, scores: DataFrame,
-                        score_col: str = "score") -> DataFrame:
-    """Pick ONE survivor doc per dedup component by a quality score
-    (highest wins, ties broken by min doc_id) instead of the default
-    min-id representative — curation pipelines keep the BEST duplicate,
-    not the lexicographically first.  ``components`` is dedup_components
-    output; ``scores`` maps doc_id -> score.  Members missing from
-    ``scores`` rank last (NULL score, left join) rather than silently
-    vanishing — every component always emits exactly one survivor.  One
-    shuffle on component id; docs outside any component are unaffected
-    (they are their own survivors and never enter the pair graph)."""
-    w = Window.partitionBy("component").orderBy(
-        F.col(score_col).desc_nulls_last(), F.col("doc_id"))
-    return (components.join(scores, "doc_id", "left")
-            .withColumn("__r", F.row_number().over(w))
-            .filter(F.col("__r") == 1)
-            .select("component", "doc_id", score_col))
-
-
 def minhash_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, h0..h7) MinHash signature over word n-gram shingles."""
     sh = word_shingles(docs, n).withColumn(
@@ -536,10 +517,9 @@ def minhash_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
 def minhash_bands(docs: DataFrame, n: int = 3,
                   band_size: int = 2) -> DataFrame:
     """(doc_id, band_id, band_hash) — the banded MinHash signature frame,
-    the LSH bucket key material.  Signatures are corpus-independent (each
-    doc's bands depend only on its own shingles), which is what makes the
-    index INCREMENTALLY maintainable: new docs' bands never change old
-    rows (see ``neardup_index.NearDupIndex``)."""
+    the LSH bucket key material of ``minhash_lsh_pairs``.  Signatures are
+    corpus-independent: each doc's bands depend only on its own
+    shingles."""
     sig = minhash_signatures(docs, n)
     n_bands = len(MINHASH_COEFFS) // band_size
     # one explode instead of a union of n_bands selects: the signature
@@ -753,24 +733,19 @@ def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 3,
 
 def _rerank_candidates(emb: DataFrame, cand: DataFrame,
                        query_ids: list[int], k: int,
-                       round_to: int, qpdf=None) -> DataFrame:
+                       round_to: int) -> DataFrame:
     """Exact cosine rerank of (query_id, neighbor_id) candidates: one join
     to fetch neighbor vectors, query matrix closed over, NumPy scoring per
-    Arrow batch, global top-k window.  Shared by the LSH and IVF paths.
-
-    ``qpdf``: optional pre-collected (vec_id, embedding) pandas frame for
-    the query ids — callers that already collected the query vectors (the
-    maintained ``AnnIndex.search`` builds its ADC LUT from them) pass it
-    through so the raw table is scanned once per search, not twice."""
+    Arrow batch, global top-k window.  Shared by the LSH, IVF and PQ
+    paths."""
     import numpy as np
     import pandas as pd
     from typing import Iterator
     from pyspark.sql.types import (DoubleType, LongType, StructField,
                                    StructType)
 
-    if qpdf is None:
-        qpdf = (emb.filter(F.col("vec_id").isin(query_ids))
-                .select("vec_id", "embedding").toPandas())
+    qpdf = (emb.filter(F.col("vec_id").isin(query_ids))
+            .select("vec_id", "embedding").toPandas())
     qvecs = {int(i): np.asarray(v, dtype=np.float64)
              for i, v in zip(qpdf["vec_id"], qpdf["embedding"])}
     # zero-norm clip: see cosine_topk — NaN cos_sim inverts the global rank
@@ -1088,44 +1063,12 @@ def cosine_topk_ivf(emb: DataFrame, query_ids: list[int], k: int = 3,
 
 
 
-def verify_jaccard_pairs(docs: DataFrame, pairs: DataFrame, n: int = 3,
-                         threshold: float = 0.5) -> DataFrame:
-    """Exact n-gram Jaccard verification of CANDIDATE pairs — the verify
-    half of the LSH->verify flow: ``(doc_a, doc_b, jaccard)`` for exactly
-    the candidates whose true Jaccard clears ``threshold``.
-
-    Gram arrays are computed only for docs that appear in some candidate
-    pair (semi-join first), so the cost is O(candidate docs) gram work
-    plus one equi-join per pair side — never a corpus-wide shingle pass
-    and never a self-join.  This is what makes a maintained LSH index
-    (``neardup_index.NearDupIndex``) usable as the pair source in the
-    curation funnel: the index bounds RECALL (pairs LSH never bucketed
-    together are not checked), verification makes everything it emits
-    exact.  Docs too short to produce any n-gram verify to jaccard 0 and
-    are dropped (threshold > 0 semantics)."""
-    ids = (pairs.select(F.col("doc_a").alias("doc_id"))
-           .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-           .distinct())
-    g = (_gram_frame(docs.join(ids, "doc_id", "left_semi"), n)
-         .select("doc_id", "gr", F.size("gr").alias("n_sh")))
-    a = g.select(F.col("doc_id").alias("doc_a"), F.col("gr").alias("g_a"),
-                 F.col("n_sh").alias("n_a"))
-    b = g.select(F.col("doc_id").alias("doc_b"), F.col("gr").alias("g_b"),
-                 F.col("n_sh").alias("n_b"))
-    inter = F.size(F.array_intersect("g_a", "g_b"))
-    return (pairs.select("doc_a", "doc_b").join(a, "doc_a").join(b, "doc_b")
-            .select("doc_a", "doc_b",
-                    (inter / (F.col("n_a") + F.col("n_b") - inter))
-                    .alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold))
-
-
 def curate_corpus(docs: DataFrame, benchmark: DataFrame | None = None,
                   min_tokens: int = 50, jaccard_n: int = 3,
                   jaccard_threshold: float = 0.5,
                   fractions: dict[str, float] | None = None,
                   sample_default: float = 0.0, seed: int = 17,
-                  persist: bool = True, neardup_index=None):
+                  persist: bool = True):
     """One-call training-corpus curation funnel, composed from the
     first-class operators in cost order (cheapest cuts first, so each
     expensive stage sees an already-reduced corpus):
@@ -1136,16 +1079,6 @@ def curate_corpus(docs: DataFrame, benchmark: DataFrame | None = None,
               -> near-dup removal (PPJoin Jaccard pairs -> components,
                  component representative kept)
               -> stratified sample (deterministic hash mixture weights)
-
-    ``neardup_index`` (a built ``neardup_index.NearDupIndex`` over this
-    corpus) switches the near-dup stage to the LSH->verify warm path: the
-    maintained index supplies candidate pairs (no corpus-wide shingle
-    pass per funnel run — the measured cold-index cost disappears) and
-    ``verify_jaccard_pairs`` makes every removal exact at the same
-    threshold.  Recall is then bounded by LSH (a pair the bands never
-    bucketed together is not checked), so the indexed funnel keeps a
-    SUPERSET of the exact funnel's docs — every doc it removes is a true
-    near-dup, tested.
 
     Returns ``(kept, funnel)``: the surviving docs DataFrame and a small
     (stage_idx, stage, n_docs) funnel report, computed EAGERLY so the
@@ -1180,18 +1113,8 @@ def curate_corpus(docs: DataFrame, benchmark: DataFrame | None = None,
         cur = _cut(cur.join(clean_ids, "doc_id", "left_semi"))
         stages.append(("decontaminate", cur))
 
-    if neardup_index is not None:
-        ids = cur.select("doc_id")
-        cand = (neardup_index.candidate_pairs(docs.sparkSession)
-                .join(ids.withColumnRenamed("doc_id", "doc_a"),
-                      "doc_a", "left_semi")
-                .join(ids.withColumnRenamed("doc_id", "doc_b"),
-                      "doc_b", "left_semi"))
-        pairs = verify_jaccard_pairs(cur, cand, n=jaccard_n,
-                                     threshold=jaccard_threshold)
-    else:
-        pairs = ngram_jaccard_pairs_prefix(cur, n=jaccard_n,
-                                           threshold=jaccard_threshold)
+    pairs = ngram_jaccard_pairs_prefix(cur, n=jaccard_n,
+                                       threshold=jaccard_threshold)
     removed = (dedup_components(pairs)
                .filter(F.col("doc_id") != F.col("component"))
                .select("doc_id"))
@@ -1234,7 +1157,7 @@ def pq_codebooks(emb: DataFrame, m: int = 8, n_centroids: int = 16,
         Xs = X[:, s * dsub:(s + 1) * dsub]
         # a corpus smaller than n_centroids seeds with replacement so the
         # codebook keeps its full (m, n_centroids, dsub) shape — callers
-        # (AnnIndex._load_model's reshape, pq_encode's argmin) rely on it;
+        # (pq_encode's argmin, cosine_topk_pq's LUT) rely on it;
         # duplicated centroids are harmless (ties resolve to the lowest
         # index, empty clusters keep their seed)
         C = Xs[rng.choice(len(Xs), size=n_centroids,

@@ -50,10 +50,10 @@ _MANIFEST_GROUP = 16
 
 def delta_fingerprint(df: DataFrame) -> dict:
     """Order-independent content fingerprint of a delta frame (row count +
-    summed per-row hash), stamped into appends so a half-done retry can
-    prove it is replaying the same batch (used by the near-dup and ANN
-    index maintainers).  Sum in decimal(38,0): a long sum of xxhash64
-    values overflows under ANSI mode on even small deltas."""
+    summed per-row hash).  ``Pipeline.ingest`` stamps it into the
+    sequences fingerprint, so replaying the same input is a no-op and a
+    different input re-ingests.  Sum in decimal(38,0): a long sum of
+    xxhash64 values overflows under ANSI mode on even small deltas."""
     row = df.agg(
         F.count(F.lit(1)).alias("c"),
         F.sum(F.xxhash64(*df.columns)
@@ -69,10 +69,9 @@ def newest_stamped(table: "SnapshotTable", key: str) -> dict | None:
     read off HEAD: data-preserving maintenance (compact,
     rewrite_manifests, merge_buckets, retention) commits new snapshots
     WITHOUT the stamps, and a HEAD-only read bricks the consumer after
-    routine maintenance.  Shared by the ANN and near-dup index
-    maintainers, the retention cutoff gates and pipeline stage resume
-    (no writer stamps a key with value None, so key-presence is the
-    whole test)."""
+    routine maintenance.  Shared by the retention cutoff gates and
+    pipeline stage resume (no writer stamps a key with value None, so
+    key-presence is the whole test)."""
     return newest_stamped_in(table.snapshots(), key)
 
 
@@ -811,9 +810,9 @@ class SnapshotTable:
         probe then prunes on both dimensions at once, which is the point
         of Z-ordering.  ``where_in=(col, values)`` is the set-membership
         variant: a file is pruned when NO value can fall inside its stats
-        range — the posting-list access pattern (an IVF probe reads a
-        scattered set of cells, not one range, so a [min,max] envelope
-        over the set would prune nothing once probes span the key space).
+        range — the point-lookup access pattern (a sample of scattered
+        doc ids is not one range, so a [min,max] envelope over the set
+        would prune nothing once the ids span the key space).
         ``merge_schema=True`` unions the file schemas (schema-evolution
         reads: columns appended by later commits come back NULL for older
         files).  ``ref`` reads a named tag/branch instead of HEAD."""

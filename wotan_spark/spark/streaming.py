@@ -290,9 +290,9 @@ def _running_stats_fn(break_tolerance: int):
 
 
 def _merge_running_stats(state_tuple, chunks, break_tolerance: int):
-    """Shared cross-batch update: (state, [pdf chunks]) -> (state, out-row
-    dict).  Concat+sorts the whole micro-batch ONCE (chunks arrive with no
-    global t-order) before the segment count — see _running_stats_fn."""
+    """Cross-batch update of ``_running_stats_fn``: (state, [pdf chunks])
+    -> new state tuple.  Concat+sorts the whole micro-batch ONCE (chunks
+    arrive with no global t-order) before the segment count."""
     import numpy as np
 
     n, y_sum, y_min, y_max, last_t, n_seg = state_tuple
@@ -311,94 +311,6 @@ def _merge_running_stats(state_tuple, chunks, break_tolerance: int):
         y_max = max(y_max, float(y.max()))
         last_t = int(t[-1])
     return (n, y_sum, y_min, y_max, last_t, n_seg)
-
-
-def make_running_stats_processor(break_tolerance: int):
-    """StatefulProcessor (state-v2 / transformWithStateInPandas) twin of
-    the applyInPandasWithState running-stats operator: same per-series
-    cross-batch state, expressed in the modern API whose state store is
-    RocksDB-backed and supports typed value/list/map state + timers.
-
-    Self-contained on purpose: the TWS *driver-side* schema-discovery
-    worker deserializes this object WITHOUT the session's addPyFile path,
-    so any reference to wotan_spark modules would fail with
-    ModuleNotFoundError there — the class is defined inside this factory
-    (pickled by value) and touches only pandas/numpy."""
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class RunningStatsProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._state = handle.getValueState(
-                "stats",
-                "n long, y_sum double, y_min double, y_max double, "
-                "last_t long, n_segments long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
-            import pandas as _pd
-
-            prev = (self._state.get() if self._state.exists()
-                    else (0, 0.0, float("inf"), float("-inf"), -1, 0))
-            n, y_sum, y_min, y_max, last_t, n_seg = tuple(prev)
-            chunks = [pdf for pdf in rows if len(pdf)]
-            if chunks:
-                # concat + sort ONCE: chunks carry no global t-order
-                batch = (_pd.concat(chunks, ignore_index=True)
-                         if len(chunks) > 1 else chunks[0])
-                batch = batch.sort_values("t", kind="mergesort")
-                t = batch["t"].to_numpy()
-                y = batch["y"].to_numpy()
-                n_seg += int((np.diff(t) > break_tolerance).sum())
-                if n == 0 or t[0] - last_t > break_tolerance:
-                    n_seg += 1
-                n += len(t)
-                y_sum += float(y.sum())
-                y_min = min(y_min, float(y.min()))
-                y_max = max(y_max, float(y.max()))
-                last_t = int(t[-1])
-            self._state.update((n, y_sum, y_min, y_max, last_t, n_seg))
-            yield _pd.DataFrame({
-                "doc_id": [key[0]], "n": [n], "y_sum": [y_sum],
-                "y_min": [y_min], "y_max": [y_max], "last_t": [last_t],
-                "n_segments": [n_seg]})
-
-        def close(self) -> None:
-            pass
-
-    return RunningStatsProcessor()
-
-
-def streaming_running_stats_v2(spark: SparkSession, landing_dir: str,
-                               checkpoint_dir: str, query_name: str,
-                               break_tolerance: int = 10,
-                               max_files_per_trigger: int = 1):
-    """`transformWithStateInPandas` variant of streaming_running_stats —
-    the arbitrary-stateful-operator API v2 (typed state, RocksDB store,
-    timers).  Requires the RocksDB state store provider (set here) AND the
-    ``protobuf`` package (the TWS Python<->JVM state protocol; present on
-    standard Spark deployments, absent in this sandbox — the test
-    capability-skips, and the applyInPandasWithState operator above is the
-    env-independent twin with identical semantics)."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    stream = (spark.readStream.schema(POINTS_SCHEMA).format("parquet")
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .load(landing_dir))
-    updated = (stream.groupBy("doc_id")
-               .transformWithStateInPandas(
-                   make_running_stats_processor(break_tolerance),
-                   outputStructType=_STATS_SCHEMA,
-                   outputMode="Update",
-                   timeMode="None"))
-    q = (updated.writeStream.format("memory").queryName(query_name)
-         .outputMode("update")
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
 
 
 def streaming_running_stats(spark: SparkSession, landing_dir: str,
