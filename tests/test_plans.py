@@ -7,7 +7,10 @@ pushdown, these fail before any benchmark would notice.
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
+import pytest
 
 from wotan_spark.spark.datapipe import cosine_topk
 from wotan_spark.spark.detrend_op import (detrend_rollup_fused,
@@ -257,3 +260,90 @@ def test_token_histogram_topk_is_distributed(spark):
     # the only Window node runs over the already-limited (<=k) frame:
     # it must sit ABOVE the top-k cut in the plan text, not below it
     assert plan.index("Window") < plan.index("TakeOrderedAndProject"), plan
+
+
+class _Planned(Exception):
+    """Raised by the capturing wrappers once a detrend frame is built."""
+
+
+def _pipeline_detrend_plans(spark, root, monkeypatch, seq, prepare=None):
+    """Executed plans of the detrend frames ``Pipeline.run`` and
+    ``merge_changed`` build over sequences ``seq``, captured (and the
+    stage stopped) before they run.  ``prepare(pipe)`` runs after the
+    ingest."""
+    from wotan_spark.spark import pipeline as pl
+    plans = []
+
+    def capture(fn):
+        def wrapped(*args, **kwargs):
+            plans.append(_plan(fn(*args, **kwargs)))
+            raise _Planned
+        return wrapped
+
+    monkeypatch.setattr(pl, "detrend_sequences",
+                        capture(pl.detrend_sequences))
+    monkeypatch.setattr(pl, "detrend_rollup_fused",
+                        capture(pl.detrend_rollup_fused))
+    pipe = pl.Pipeline(spark, root,
+                       pl.PipelineConfig(method="mean", window_length=17))
+    pipe.ingest(seq, "r1")
+    if prepare is not None:
+        prepare(pipe)
+    with pytest.raises(_Planned):
+        pipe.run(run_id="r2")
+    with pytest.raises(_Planned):
+        pipe.merge_changed(seq.select("doc_id"), "r3")
+    return plans
+
+
+def _routed(plan: str) -> bool:
+    """The plan carries the skew router's long branch: the chunk split,
+    its (doc_id, chunk_id) salting exchange and the union with the packed
+    branch."""
+    return ("split(" in plan and "Union" in plan
+            and "hashpartitioning(doc_id" in plan and "chunk_id" in plan)
+
+
+def test_short_sequences_skip_the_long_branch(spark, tmp_path, monkeypatch):
+    """File stats proving every row is short give both pipeline detrend
+    frames the packed plan: no chunk split, no union.  The build's plan
+    has no exchange at all; the merge's only one is its changed-doc
+    semi-join."""
+    seq = synth_sequences(spark, 8, median_len=100, max_len=200)
+    run_plan, merge_plan = _pipeline_detrend_plans(
+        spark, str(tmp_path / "p"), monkeypatch, seq)
+    assert "Exchange" not in run_plan, run_plan
+    for plan in (run_plan, merge_plan):
+        assert not any(s in plan for s in ("split(", "Union", "chunk_id")), \
+            plan
+
+
+def test_one_long_row_restores_the_long_branch(spark, tmp_path,
+                                               monkeypatch):
+    from wotan_spark.spark.detrend_op import AUTO_CHUNK_THRESHOLD
+    from wotan_spark.spark.synth import SEQUENCES_SCHEMA
+    n = AUTO_CHUNK_THRESHOLD + 1
+    long_row = spark.createDataFrame(
+        [("doc_long", [1_000_000] * n, n, "web")], SEQUENCES_SCHEMA)
+    seq = synth_sequences(spark, 8, median_len=100, max_len=200) \
+        .unionByName(long_row)
+    plans = _pipeline_detrend_plans(spark, str(tmp_path / "p"),
+                                    monkeypatch, seq)
+    assert len(plans) == 2
+    assert all(_routed(plan) for plan in plans), plans
+
+
+def test_missing_file_stats_keep_the_long_branch(spark, tmp_path,
+                                                 monkeypatch):
+    def drop_stats(pipe):
+        dirs = {os.path.dirname(p)
+                for p in pipe.tables["sequences"].data_files()}
+        assert dirs
+        for d in dirs:
+            os.remove(os.path.join(d, "_file_stats.json"))
+
+    seq = synth_sequences(spark, 8, median_len=100, max_len=200)
+    plans = _pipeline_detrend_plans(spark, str(tmp_path / "p"),
+                                    monkeypatch, seq, prepare=drop_stats)
+    assert len(plans) == 2
+    assert all(_routed(plan) for plan in plans), plans

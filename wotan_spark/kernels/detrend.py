@@ -7,8 +7,12 @@ one (time, flux[, mask]) series:
     gap-segment -> per-segment trend estimate -> reassemble ->
     transplant into NaN-shaped output -> trend==0 -> NaN -> flux/trend
 
-This function runs inside Arrow-batched pandas UDFs on executors (one call
-per series) and is also the NumPy oracle used by the test-suite.
+``detrend_batch`` runs the lifecycle over every series of an Arrow batch
+at once inside the packed pandas UDF: the window estimators see the
+segments of all series together (one call per window length and row
+block, ``kernels.windows.slide_segments``), while global fits stay per
+segment.  ``detrend_series`` is the batch of one, and the NumPy oracle
+used by the test-suite.
 """
 
 from __future__ import annotations
@@ -20,8 +24,7 @@ import numpy as np
 from wotan_spark import constants
 from wotan_spark.kernels import filters, lowess as lowess_mod, regress, splines, trig
 from wotan_spark.kernels.series import segment_boundaries
-from wotan_spark.kernels.windows import (default_cval, running_slider,
-                                         running_slider_iterative)
+from wotan_spark.kernels.windows import default_cval, slide_segments
 
 
 @dataclass
@@ -48,6 +51,33 @@ def detrend_series(
     stdev_cut: int = constants.SPLINE_STDEV_CUT,
     mask=None,
 ) -> DetrendResult:
+    """One series: ``detrend_batch`` over a batch of one."""
+    return detrend_batch(
+        [(time, flux, mask)], window_length=window_length,
+        edge_cutoff=edge_cutoff, break_tolerance=break_tolerance, cval=cval,
+        method=method, kernel=kernel, kernel_size=kernel_size,
+        kernel_period=kernel_period, proportiontocut=proportiontocut,
+        robust=robust, max_splines=max_splines, stdev_cut=stdev_cut)[0]
+
+
+def detrend_batch(
+    series,
+    window_length: float | None = None,
+    edge_cutoff: float = 0,
+    break_tolerance: float | None = None,
+    cval=None,
+    method: str = "biweight",
+    kernel: str | None = None,
+    kernel_size: float | None = None,
+    kernel_period: float | None = None,
+    proportiontocut: float = constants.PROPORTIONTOCUT,
+    robust: bool = False,
+    max_splines: int = constants.SPLINE_MAX_SPLINES,
+    stdev_cut: int = constants.SPLINE_STDEV_CUT,
+) -> list[DetrendResult]:
+    """Detrend every ``(time, flux, mask)`` of ``series`` (``mask`` None or
+    True = exclude) with one set of parameters; bit-equal to one
+    ``detrend_series`` call per series."""
     if method not in constants.METHODS:
         raise ValueError(f"Unknown detrending method {method!r}")
     if not isinstance(proportiontocut, float) or not (0.0 < proportiontocut < 0.5):
@@ -66,78 +96,91 @@ def detrend_series(
     if break_tolerance == 0:
         break_tolerance = np.inf
 
-    time = np.asarray(time, dtype=np.float64)
-    flux = np.asarray(flux, dtype=np.float64)
-    if mask is None:
-        mask = np.ones(len(time))
-    else:
-        # invert on entry: caller marks True = exclude (TLS convention, Q14)
-        mask = np.asarray(~np.asarray(mask, dtype=bool), dtype=np.float64)
-
-    nan_positions = np.isnan(time * flux)
-    keep = ~nan_positions
-    t_c = time[keep]
-    f_c = flux[keep]
-    m_c = mask[keep]
-
-    bounds = segment_boundaries(t_c, break_tolerance)
-    trend_parts: list[np.ndarray] = []
-    nsplines_parts: list[float] = []
-
-    for i in range(len(bounds) - 1):
-        tv = t_c[bounds[i]:bounds[i + 1]]
-        fv = f_c[bounds[i]:bounds[i + 1]]
-        mv = m_c[bounds[i]:bounds[i + 1]]
-        if len(tv) == 0:
-            continue
-        if method in constants.SLIDER_METHODS:
-            seg = running_slider(tv, fv, mv.copy(), window_length,
-                                 edge_cutoff, cval, method)
-        elif method in constants.SLOW_SLIDER_METHODS:
-            seg = running_slider_iterative(tv, fv, mv.copy(), window_length,
-                                           edge_cutoff, cval, method)
-        elif method == "lowess":
-            seg = lowess_mod.lowess(tv, fv, mv, window_length)
-        elif method == "hspline":
-            seg = splines.hspline(tv, fv, mv, knot_distance=window_length)
-        elif method == "rspline":
-            seg = splines.rspline(tv, fv, mv, window_length)
-        elif method == "pspline":
-            seg, nspl = splines.pspline(tv, fv, edge_cutoff, max_splines,
-                                        stdev_cut)
-            nsplines_parts.append(nspl)
-        elif method == "cofiam":
-            seg = trig.detrend_cofiam(tv, fv, window_length)
-        elif method == "cosine":
-            seg = trig.detrend_cosine(tv, fv, window_length, robust, mv)
-        elif method == "savgol":
+    def segment_trend(time, tv, fv, mv):
+        """Trend of one segment for the global-fit / filter methods."""
+        if method == "lowess":
+            return lowess_mod.lowess(tv, fv, mv, window_length)
+        if method == "hspline":
+            return splines.hspline(tv, fv, mv, knot_distance=window_length)
+        if method == "rspline":
+            return splines.rspline(tv, fv, mv, window_length)
+        if method == "cofiam":
+            return trig.detrend_cofiam(tv, fv, window_length)
+        if method == "cosine":
+            return trig.detrend_cosine(tv, fv, window_length, robust, mv)
+        if method == "savgol":
             wl = int(window_length)
             if wl % 2 == 0:
                 wl += 1
-            seg = filters.savgol_filter(fv, wl, polyorder=int(cval))
-        elif method == "medfilt":
-            seg = filters.medfilt(fv, int(window_length))
-        elif method == "supersmoother":
+            return filters.savgol_filter(fv, wl, polyorder=int(cval))
+        if method == "medfilt":
+            return filters.medfilt(fv, int(window_length))
+        if method == "supersmoother":
             from wotan_spark.kernels.smoother import supersmoother_trend
             # Q7: the span is normalized by the *full input* time range
             win = window_length / (np.nanmax(time) - np.nanmin(time))
-            seg = supersmoother_trend(tv, fv, win, alpha=supersmoother_alpha)
-        elif method == "gp":
+            return supersmoother_trend(tv, fv, win, alpha=supersmoother_alpha)
+        if method == "gp":
             from wotan_spark.kernels.gp import gp_trend
-            seg = gp_trend(tv, fv, mv, kernel, kernel_size, kernel_period,
-                           robust)
-        elif method in ("ridge", "lasso", "elasticnet"):
-            seg = regress.regression_trend(tv, fv, method, window_length, cval)
-        else:  # pragma: no cover
-            raise ValueError(method)
-        trend_parts.append(np.asarray(seg, dtype=np.float64))
+            return gp_trend(tv, fv, mv, kernel, kernel_size, kernel_period,
+                            robust)
+        if method in ("ridge", "lasso", "elasticnet"):
+            return regress.regression_trend(tv, fv, method, window_length,
+                                            cval)
+        raise ValueError(method)  # pragma: no cover
 
-    trend_compressed = (np.concatenate(trend_parts) if trend_parts
-                        else np.zeros(0))
-    trend_lc = np.full(len(time), np.nan)
-    trend_lc[np.where(keep)[0]] = trend_compressed
-    trend_lc[trend_lc == 0.0] = np.nan  # avoid division by zero (Q10)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        flatten_lc = flux / trend_lc
-    return DetrendResult(flatten_lc, trend_lc,
-                         np.asarray(nsplines_parts, dtype=np.float64))
+    sliding = method in constants.SLIDER_METHODS \
+        or method in constants.SLOW_SLIDER_METHODS
+    rows = []          # per series: (flux, keep, segment trends, nsplines)
+    segments = []      # (time, flux, mask) of every sliding segment
+    for time, flux, mask in series:
+        time = np.asarray(time, dtype=np.float64)
+        flux = np.asarray(flux, dtype=np.float64)
+        if mask is None:
+            mask = np.ones(len(time))
+        else:
+            # invert on entry: caller marks True = exclude (TLS convention, Q14)
+            mask = np.asarray(~np.asarray(mask, dtype=bool), dtype=np.float64)
+
+        keep = ~np.isnan(time * flux)
+        t_c = time[keep]
+        f_c = flux[keep]
+        m_c = mask[keep]
+
+        bounds = segment_boundaries(t_c, break_tolerance)
+        parts: list = []
+        nsplines: list[float] = []
+        for i in range(len(bounds) - 1):
+            tv = t_c[bounds[i]:bounds[i + 1]]
+            fv = f_c[bounds[i]:bounds[i + 1]]
+            mv = m_c[bounds[i]:bounds[i + 1]]
+            if len(tv) == 0:
+                continue
+            if sliding:
+                parts.append(len(segments))   # filled in after the batch
+                segments.append((tv, fv, mv))
+            elif method == "pspline":
+                seg, nspl = splines.pspline(tv, fv, edge_cutoff,
+                                            max_splines, stdev_cut)
+                parts.append(seg)
+                nsplines.append(nspl)
+            else:
+                parts.append(segment_trend(time, tv, fv, mv))
+        rows.append((flux, keep, parts, nsplines))
+
+    slid = slide_segments(segments, window_length, edge_cutoff, cval, method)
+    out = []
+    for flux, keep, parts, nsplines in rows:
+        if sliding:
+            parts = [slid[j] for j in parts]
+        trend_compressed = (np.concatenate(
+            [np.asarray(p, dtype=np.float64) for p in parts]) if parts
+            else np.zeros(0))
+        trend_lc = np.full(len(flux), np.nan)
+        trend_lc[np.where(keep)[0]] = trend_compressed
+        trend_lc[trend_lc == 0.0] = np.nan  # avoid division by zero (Q10)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            flatten_lc = flux / trend_lc
+        out.append(DetrendResult(flatten_lc, trend_lc,
+                                 np.asarray(nsplines, dtype=np.float64)))
+    return out

@@ -1,4 +1,4 @@
-"""Time-windowed sliding robust estimation over one series segment.
+"""Time-windowed sliding robust estimation over a batch of series segments.
 
 Re-creates the window semantics of the reference slider
 (``wotan/slider.py:12-91``) with vectorized NumPy instead of a numba
@@ -17,11 +17,12 @@ per-point loop:
 * an empty window yields NaN.
 
 Vectorization strategy: window index bounds come from two ``searchsorted``
-calls (identical results to the reference's monotone two-pointer sweep);
-centers are then grouped by window *length* so each group is a dense
-``(n_windows, L)`` matrix evaluated by one vectorized estimator call.  On a
-regular token-index grid almost all interior windows share one length, so
-this runs at NumPy speed without numba.
+calls per segment (identical results to the reference's monotone
+two-pointer sweep).  The windows of EVERY segment handed to
+``slide_segments`` (all series of an Arrow batch) are then grouped by kept
+length, so each length is one dense ``(n_windows, L)`` gather evaluated by
+one vectorized estimator call per row block: the interpreter cost is paid
+per batch and window length, not per series.
 """
 
 from __future__ import annotations
@@ -63,33 +64,6 @@ _ITER_2D = {
 }
 
 
-def _grouped_ragged(out: np.ndarray, centers: np.ndarray,
-                    starts: np.ndarray, ends: np.ndarray,
-                    keep: np.ndarray, values: np.ndarray,
-                    est, cval, min_len: int) -> None:
-    """Batch ragged windows (mask/NaN-dropped contents) through the
-    row-vectorized estimators: windows are regrouped by their KEPT length —
-    ``kept_idx[pos[s] : pos[e]]`` enumerates a window's surviving values in
-    order — so each group is one dense (rows, K) matrix instead of a
-    per-window Python call.  The 2-D estimators are row-independent
-    (row-frozen iteration), so results are bit-equal to the per-window
-    path."""
-    kept_idx = np.where(keep)[0]
-    pos = np.concatenate(([0], np.cumsum(keep)))
-    ks, ke = pos[starts], pos[ends]
-    counts = ke - ks
-    for K in np.unique(counts):
-        if K < min_len:
-            continue  # too-small windows stay NaN
-        g = np.where(counts == K)[0]
-        offs = np.arange(K)[None, :]
-        block = max(int(32768 / max(K, 1)), 256)
-        for b in range(0, len(g), block):
-            gb = g[b:b + block]
-            rows = kept_idx[ks[gb][:, None] + offs]
-            out[centers[gb]] = est(values[rows], cval)
-
-
 def _center_selection(time: np.ndarray, window_length: float,
                       edge_cutoff: float) -> np.ndarray:
     half_window = window_length / 2.0
@@ -100,95 +74,99 @@ def _center_selection(time: np.ndarray, window_length: float,
     return (time >= lo) & (time <= hi)
 
 
+def slide_segments(segments, window_length: float, edge_cutoff: float,
+                   cval, method: str) -> list[np.ndarray]:
+    """Trend of every ``(time, flux, mask)`` segment, one estimator call per
+    (kept length, row block) across ALL segments.
+
+    Plan: each segment's centers, window bounds and kept positions are
+    those of the reference slider, offset into one concatenated value
+    array.  Evaluate: windows are grouped by their KEPT length K —
+    ``kept_idx[pos[s] : pos[e]]`` enumerates a window's surviving values
+    in order — and each (K, block) is one dense ``(rows, K)`` gather.
+    The 2-D estimators are row-independent (row-frozen iteration), so
+    the result is bit-equal to evaluating each segment on its own."""
+    if not segments:
+        return []
+    iterative = method in _ITER_2D
+    est = _ITER_2D[method] if iterative else _FAST_2D[method]
+    offsets = np.cumsum([0] + [len(seg[0]) for seg in segments])
+    values = np.empty(offsets[-1])
+    keep = np.ones(offsets[-1], dtype=bool)
+    centers, starts, ends = [], [], []
+    for (time, flux, mask), o in zip(segments, offsets):
+        n = len(time)
+        if n == 0:
+            continue
+        if iterative:
+            # reference running_segment_slow: masked points become NaN
+            mf = flux * np.where(mask == 0.0, np.nan, mask)
+            keep[o:o + n] = ~np.isnan(mf)
+        else:
+            # negative-sentinel drop; a segment with nothing to drop keeps
+            # every value (NaN included) as the dense reference loop does
+            mf = flux * np.where(mask == 0.0, -1.0, mask)
+            drop = mf <= _NEG_SENTINEL
+            if drop.any():
+                keep[o:o + n] = ~drop
+        values[o:o + n] = mf
+        c = np.flatnonzero(_center_selection(time, window_length,
+                                             edge_cutoff))
+        s, e = window_bounds(time, window_length / 2.0)
+        centers.append(c + o)
+        starts.append(s[c] + o)
+        ends.append(e[c] + o)
+
+    out = np.full(offsets[-1], np.nan)
+    if sum(len(c) for c in centers):
+        centers = np.concatenate(centers)
+        kept_idx = np.flatnonzero(keep)
+        pos = np.concatenate(([0], np.cumsum(keep)))
+        ks = pos[np.concatenate(starts)]
+        counts = pos[np.concatenate(ends)] - ks
+        order = np.argsort(counts, kind="stable")
+        cuts = np.flatnonzero(np.diff(counts[order])) + 1
+        # too-small windows stay NaN: empty ones, and (reference) those
+        # with <= 1 point for the iterative estimators
+        min_len = 2 if iterative else 1
+        for g in np.split(order, cuts):
+            K = int(counts[g[0]])
+            if K < min_len:
+                continue
+            # row blocks keep each gathered (block, K) matrix inside L2
+            # cache: the estimators are memory-bandwidth-bound under many
+            # concurrent workers
+            block = max(int(32768 / K), 256)
+            offs = np.arange(K)[None, :]
+            for b in range(0, len(g), block):
+                gb = g[b:b + block]
+                rows = kept_idx[ks[gb][:, None] + offs]
+                out[centers[gb]] = est(values[rows], cval)
+    return np.split(out, offsets[1:-1])
+
+
 def running_slider(time: np.ndarray, flux: np.ndarray, mask: np.ndarray,
                    window_length: float, edge_cutoff: float, cval,
                    method: str) -> np.ndarray:
-    """Fast-path slider (reference ``running_segment``, wotan/slider.py:12-91)."""
-    est = _FAST_2D[method]
-    n = len(time)
-    out = np.full(n, np.nan)
-    if n == 0:
-        return out
-    sel = _center_selection(time, window_length, edge_cutoff)
-    centers = np.where(sel)[0]
-    if len(centers) == 0:
-        return out
-
-    sentinel = np.where(mask == 0.0, -1.0, mask)
-    mf = flux * sentinel
-    starts, ends = window_bounds(time, window_length / 2.0)
-    starts, ends = starts[centers], ends[centers]
-    lengths = ends - starts
-
-    # Ragged path only when sentinel-dropping can change window contents:
-    # regroup by kept length and run the same row-vectorized estimators.
-    ragged = bool(np.any(mf <= _NEG_SENTINEL))
-    if ragged:
-        _grouped_ragged(out, centers, starts, ends, mf > _NEG_SENTINEL,
-                        mf, est, cval, min_len=1)
-        return out
-
-    # evaluate in row blocks sized to keep the gathered (block, L) window
-    # matrix inside L2 cache — materially better scaling under many
-    # concurrent workers (memory-bandwidth-bound otherwise)
-    for L in np.unique(lengths):
-        g = np.where(lengths == L)[0]
-        if L == 0:
-            continue  # empty window stays NaN
-        block = max(int(32768 / max(L, 1)), 256)
-        offs = np.arange(L)[None, :]
-        for b in range(0, len(g), block):
-            gb = g[b:b + block]
-            rows = starts[gb][:, None] + offs
-            out[centers[gb]] = est(mf[rows], cval)
-    return out
+    """Fast-path slider (reference ``running_segment``, wotan/slider.py:12-91)
+    over one segment: a batch of one."""
+    if method not in _FAST_2D:
+        raise ValueError(method)
+    return slide_segments([(time, flux, mask)], window_length, edge_cutoff,
+                          cval, method)[0]
 
 
 def running_slider_iterative(time: np.ndarray, flux: np.ndarray, mask: np.ndarray,
                              window_length: float, edge_cutoff: float, cval,
                              method: str) -> np.ndarray:
     """Iterative-estimator slider (reference ``running_segment_slow``,
-    wotan/slider.py:94-165): NaN-masking, windows with <=1 point give NaN.
-    Both the dense and the ragged path run the row-vectorized 2-D IRLS
-    (bit-equal per row to the 1-D reference twins in kernels/robust.py)."""
+    wotan/slider.py:94-165) over one segment: NaN-masking, windows with
+    <=1 point give NaN.  The row-vectorized 2-D IRLS is bit-equal per row
+    to the 1-D reference twins in kernels/robust.py."""
     if method not in _ITER_2D:
         raise ValueError(method)
-    n = len(time)
-    out = np.full(n, np.nan)
-    if n == 0:
-        return out
-    sel = _center_selection(time, window_length, edge_cutoff)
-    centers = np.where(sel)[0]
-    if len(centers) == 0:
-        return out
-
-    mf = flux * np.where(mask == 0.0, np.nan, mask)
-    starts, ends = window_bounds(time, window_length / 2.0)
-
-    # dense path: no NaN anywhere -> group equal-length windows into one
-    # (rows, L) matrix per length and run the row-vectorized IRLS (bit-equal
-    # per row to the 1D loop via freeze-at-convergence)
-    if not np.any(np.isnan(mf)):
-        est2 = _ITER_2D[method]
-        cs, ce = starts[centers], ends[centers]
-        lengths = ce - cs
-        for L in np.unique(lengths):
-            if L <= 1:
-                continue  # reference: windows with <=1 point stay NaN
-            g = np.where(lengths == L)[0]
-            offs = np.arange(L)[None, :]
-            block = max(int(32768 / L), 256)
-            for b in range(0, len(g), block):
-                gb = g[b:b + block]
-                rows = cs[gb][:, None] + offs
-                out[centers[gb]] = est2(mf[rows], cval)
-        return out
-
-    # ragged (NaN-masked) path: same kept-length regrouping into the
-    # row-vectorized IRLS (reference: windows with <=1 kept point stay NaN)
-    _grouped_ragged(out, centers, starts[centers], ends[centers],
-                    ~np.isnan(mf), mf, _ITER_2D[method], cval, min_len=2)
-    return out
+    return slide_segments([(time, flux, mask)], window_length, edge_cutoff,
+                          cval, method)[0]
 
 
 def default_cval(method: str, proportiontocut: float = PROPORTIONTOCUT):

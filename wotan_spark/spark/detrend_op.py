@@ -1,12 +1,14 @@
 """Distributed detrend over packed token arrays.
 
 The input table is one-series-per-row, so detrending is embarrassingly
-parallel: ONE ``mapInPandas`` pass (``_detrend_pass``) decodes each row's
-tokens, derives its known-signal mask, runs the per-series pipeline kernel
-(``wotan_spark.kernels.detrend.detrend_series``) and hands the result to an
-emitter — packed ``flat``/``trend`` arrays (``detrend_sequences``) or tier
-bucket rows (``detrend_rollup_fused``) — **zero shuffle**, unlike an
-explode -> groupBy plan which would multiply 10^12 rows by sequence length.
+parallel: ONE ``mapInPandas`` pass (``_detrend_pass``) decodes each Arrow
+batch's rows, derives their known-signal masks, runs the batch kernel
+(``wotan_spark.kernels.detrend.detrend_batch``: one estimator call per
+window length and row block for the whole batch, not per series) and hands
+the results to an emitter — packed ``flat``/``trend`` arrays
+(``detrend_sequences``) or tier bucket rows (``detrend_rollup_fused``) —
+**zero shuffle**, unlike an explode -> groupBy plan which would multiply
+10^12 rows by sequence length.
 
 Skew handling for heavy-tailed sequence lengths (the ``n_tok`` lognormal
 tail): with a ``chunk_threshold`` the router (``_route``) splits rows past it
@@ -29,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
-from wotan_spark.kernels.detrend import detrend_series
+from wotan_spark.kernels.detrend import detrend_batch, detrend_series
 from wotan_spark.kernels.series import transit_mask
 from wotan_spark.spark.rollup import TIER_SCHEMA, _tier_arrays, _tier_frame
 from wotan_spark.spark.synth import decode_tokens
@@ -65,29 +67,18 @@ _CHUNKABLE_METHODS = frozenset(
      "medfilt", "savgol", "lowess"])                 # local filters
 
 
-def _with_mask(params: dict, t: np.ndarray, mask=None,
-               transit: tuple[float, float, float] | None = None) -> dict:
-    """Kernel params carrying the known-signal mask (reference
-    ``flatten(..., mask=)``, wotan/flatten.py:194-197 — True = in-transit
-    point excluded from the fit): an explicit per-row ``mask`` array, or
-    the periodic mask of ``transit=(period, duration, T0)`` over the time
-    axis ``t``.  Unmasked runs get ``params`` itself."""
+def _mask_of(t: np.ndarray, mask=None,
+             transit: tuple[float, float, float] | None = None):
+    """The known-signal mask of one series (reference ``flatten(...,
+    mask=)``, wotan/flatten.py:194-197 — True = in-transit point excluded
+    from the fit): an explicit per-row ``mask`` array, or the periodic mask
+    of ``transit=(period, duration, T0)`` over the time axis ``t``; None
+    for an unmasked run."""
     if mask is not None:
-        return dict(params, mask=np.asarray(mask, dtype=bool))
+        return np.asarray(mask, dtype=bool)
     if transit is not None:
-        return dict(params, mask=transit_mask(t, *transit))
-    return params
-
-
-def _detrend_one(tokens: np.ndarray, params: dict, mask=None,
-                 transit: tuple[float, float, float] | None = None
-                 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(y, flat, trend) of one token array on the dense time axis
-    t = 0..n-1 (the token index)."""
-    y = decode_tokens(tokens)
-    t = np.arange(len(y), dtype=np.float64)
-    res = detrend_series(t, y, **_with_mask(params, t, mask, transit))
-    return y, res.flatten_lc, res.trend_lc
+        return transit_mask(t, *transit)
+    return None
 
 
 def _chunk_overlap(params: dict) -> int:
@@ -112,7 +103,8 @@ def _detrend_pass(df: DataFrame, params: dict, emit: Emitter,
                   mask_col: str | None = None,
                   mask_transit: tuple[float, float, float] | None = None
                   ) -> DataFrame:
-    """THE per-row detrend pass: decode -> mask -> kernel -> emit.
+    """THE detrend pass, per Arrow batch: decode -> mask -> batch
+    kernel -> emit.
 
     ``chunked`` rows come from ``split_chunks``: each is detrended whole
     (overlap included) and only its ``lead:lead+core`` slice is emitted,
@@ -123,18 +115,24 @@ def _detrend_pass(df: DataFrame, params: dict, emit: Emitter,
         for pdf in batches:
             n = len(pdf)
             masks = pdf[mask_col] if mask_col is not None else [None] * n
+            toks = [np.asarray(tk, dtype=np.int32) for tk in pdf["tokens"]]
+            ys = [decode_tokens(tk) for tk in toks]
+            series = []
+            for y, mask in zip(ys, masks):
+                # dense time axis t = 0..n-1 (the token index)
+                t = np.arange(len(y), dtype=np.float64)
+                series.append((t, y, _mask_of(t, mask, mask_transit)))
+            results = detrend_batch(series, **params)
             spans = (zip(pdf["lead"], pdf["core"], pdf["t0"]) if chunked
                      else [(0, None, 0)] * n)
             pieces = []
-            for toks, mask, (lead, core, t0) in zip(pdf["tokens"], masks,
+            for tk, y, res, (lead, core, t0) in zip(toks, ys, results,
                                                     spans):
-                toks = np.asarray(toks, dtype=np.int32)
-                y, flat, trend = _detrend_one(toks, params, mask,
-                                              mask_transit)
+                flat, trend = res.flatten_lc, res.trend_lc
                 if core is not None:
                     sl = slice(int(lead), int(lead) + int(core))
-                    toks, y, flat, trend = toks[sl], y[sl], flat[sl], trend[sl]
-                pieces.append((toks, y, flat, trend, int(t0)))
+                    tk, y, flat, trend = tk[sl], y[sl], flat[sl], trend[sl]
+                pieces.append((tk, y, flat, trend, int(t0)))
             yield emit(pdf, pieces)
 
     return df.mapInPandas(run, schema=schema)
@@ -363,8 +361,8 @@ def detrend_points(points: DataFrame, method: str = "biweight",
         pdf = pdf.sort_values("t")
         t = pdf["t"].to_numpy(dtype=np.float64)
         y = pdf["y"].to_numpy(dtype=np.float64)
-        res = detrend_series(t, y, **_with_mask(params, t,
-                                                transit=mask_transit))
+        res = detrend_series(t, y, mask=_mask_of(t, transit=mask_transit),
+                             **params)
         return pd.DataFrame({
             "doc_id": np.repeat(key[0], len(t)),
             "t": t.astype(np.int64),

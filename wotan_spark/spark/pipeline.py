@@ -206,6 +206,23 @@ class Pipeline:
                 pa.Table.from_pylist(rows, schema=LINEAGE_SCHEMA),
                 stage=stage, run_id=run_id)
 
+    def _chunk_threshold(self, seq_sid) -> int | None:
+        """The skew router's threshold for snapshot ``seq_sid`` of the
+        sequences table: ``None`` (no long branch: no ``n_tok`` filter,
+        chunk split or exchange) only when every data file's ``n_tok``
+        max in ``_file_stats.json`` is <= ``AUTO_CHUNK_THRESHOLD``; a
+        missing stat keeps routing."""
+        table = self.tables["sequences"]
+        stats: dict = {}
+        for path in table.data_files(seq_sid):
+            d, fn = os.path.split(path)
+            if d not in stats:
+                stats[d] = table._load_stats(d) or {}
+            hi = stats[d].get(fn, {}).get("columns", {}).get("n_tok")
+            if hi is None or hi[1] > AUTO_CHUNK_THRESHOLD:
+                return AUTO_CHUNK_THRESHOLD
+        return None
+
     # ------------------------------------------------------------------
     def ingest(self, sequences: DataFrame, run_id: str) -> int:
         """Idempotent base-corpus ingest: the stage fingerprint is the
@@ -307,7 +324,8 @@ class Pipeline:
             # auto skew routing (north_rule): long-tail docs are chunked +
             # salted across tasks instead of pinning one straggler task
             det = detrend_sequences(seq_df, method=cfg.method,
-                                    chunk_threshold=AUTO_CHUNK_THRESHOLD,
+                                    chunk_threshold=self._chunk_threshold(
+                                        seq_sid),
                                     window_length=cfg.window_length,
                                     keep_tokens=True, **cfg.params)
             out["detrended"] = self._commit_stage("detrended", det, dfp,
@@ -560,7 +578,7 @@ class Pipeline:
 
         t10_full = detrend_rollup_fused(
             seq_changed, cfg.method, factor=factor,
-            chunk_threshold=AUTO_CHUNK_THRESHOLD,
+            chunk_threshold=self._chunk_threshold(seq_sid),
             window_length=cfg.window_length, **cfg.params).persist()
         try:
             sid10 = _merge("tier10", _gate("tier10", t10_full),
