@@ -314,3 +314,85 @@ def test_expiry_spares_in_flight_snapshot(spark, tmp_path):
     assert not os.path.exists(
         os.path.join(t.manifest_dir, f"snapshot-{sid}.json"))
     assert not os.path.isdir(d)
+
+
+def test_cutoffs_from_policy_starts_no_spark_job(spark, tier_tables,
+                                                  tmp_path):
+    """With file stats on every data file, the bucket max behind each
+    cutoff comes from the stats: no Spark job runs."""
+    sc = spark.sparkContext
+    group = f"cutoffs-{tmp_path.name}"
+    sc.setJobGroup(group, "retention cutoffs")
+    try:
+        cutoffs = cutoffs_from_policy(
+            spark, tier_tables,
+            RetentionPolicy({"tier10": 5, "tier100": 1}))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert cutoffs == {"tier10": 15, "tier100": 1}
+
+
+def _two_dir_tier10(spark, root: str):
+    """A pipeline whose tier10 holds 3 docs x buckets 0..19 in two data
+    dirs (an overwrite and an append) of two files each."""
+    from wotan_spark.spark.pipeline import Pipeline
+    pipe = Pipeline(spark, root)
+    df = spark.createDataFrame(
+        [(f"doc_{i}", b, float(b)) for i in range(3) for b in range(20)],
+        "doc_id string, bucket long, y_sum double")
+    t10 = pipe.tables["tier10"]
+    t10.overwrite(df.filter("bucket < 12").repartition(2), run_id="init")
+    t10.append(df.filter("bucket >= 12").repartition(2), run_id="late")
+    return pipe
+
+
+def _maintain(spark, pipe) -> tuple:
+    cutoffs = cutoffs_from_policy(
+        spark, pipe.tables, RetentionPolicy({"tier10": 5, "tier100": None}))
+    report = apply_retention(spark, pipe.tables, cutoffs)
+    compacted = pipe.compact_tables(tables=("tier10",), target_file_rows=4)
+    return cutoffs, report, compacted
+
+
+def test_metadata_counts_equal_spark_counts(spark, tmp_path, monkeypatch):
+    """Cutoffs, kept/dropped and the compacted file count read from the
+    file stats equal those from ``agg(max)``/``count()``: directly, and
+    from the same maintenance with the stats helper switched off."""
+    pipe = _two_dir_tier10(spark, str(tmp_path / "stats"))
+    t10 = pipe.tables["tier10"].read(spark)
+    hi = t10.agg(F.max("bucket")).collect()[0][0]
+    kept = t10.filter(F.col("bucket") >= hi - 5 + 1).count()
+    total = t10.count()
+    cutoffs, report, compacted = _maintain(spark, pipe)
+    assert cutoffs == {"tier10": hi - 5 + 1} == {"tier10": 15}
+    assert (report["tier10"]["kept"], report["tier10"]["dropped"]) \
+        == (kept, total - kept) == (15, 45)
+    assert compacted["tier10"]["files_after"] == len(
+        pipe.tables["tier10"].data_files()) > 1
+
+    counted = _two_dir_tier10(spark, str(tmp_path / "counted"))
+    monkeypatch.setattr(SnapshotTable, "stats_summary",
+                        lambda self, *a, **k: None)
+    assert _maintain(spark, counted) == (cutoffs, report, compacted)
+
+
+def test_missing_file_stats_fall_back_to_identical_results(spark, tmp_path):
+    """One data dir without ``_file_stats.json``: cutoffs and retention
+    counts fall back to Spark aggregates and give the same cutoffs and
+    reports."""
+    pipe = _two_dir_tier10(spark, str(tmp_path / "stats"))
+    expected = _maintain(spark, pipe)
+
+    bare = _two_dir_tier10(spark, str(tmp_path / "bare"))
+    t10 = bare.tables["tier10"]
+    d = t10._manifest(t10.current_snapshot_id())["files"][0]
+    os.remove(os.path.join(d, "_file_stats.json"))
+    assert t10.stats_summary(column="bucket") is None
+    cutoffs, report, compacted = _maintain(spark, bare)
+    assert (cutoffs, report) == expected[:2]
+    # the unpruned dir feeds the retention rewrite more input files, so
+    # only compaction's files_before may differ
+    for r in (compacted["tier10"], expected[2]["tier10"]):
+        r.pop("files_before")
+    assert compacted == expected[2]

@@ -12,8 +12,14 @@ catalog could replace 1:1:
   one new; merge reuses untouched parent manifests verbatim) plus commit
   metadata — commit metadata is O(delta manifests), not O(total files),
   the real Iceberg snapshot/manifest-list/manifest shape;
-* ``HEAD`` is an atomically renamed pointer file -> crash-safe commits,
-  readers never observe partial writes;
+* ``HEAD`` (and the ``NEXT_SID`` id counter) is a symlink whose target
+  is the decimal snapshot id, swapped by renaming a fresh symlink over
+  it -> crash-safe commits, readers never observe partial writes.  A
+  short symlink holds its target in the inode, so the swap writes no
+  data block and forces no writeback (renaming a data-holding temp file
+  over an existing name makes ext4 flush it first, tens of ms per
+  commit).  Pointers written as regular files by older versions still
+  read;
 * snapshots are immutable -> time travel (``read(snapshot_id=...)``) and
   checkpoint/resume (a pipeline stage is "done" iff a snapshot with its
   config fingerprint exists).
@@ -22,8 +28,11 @@ Concurrency model: ONE writer per table at a time (the Hadoop-catalog
 Iceberg assumption; a real catalog's atomic compare-and-swap replaces it).
 Within that model every publish is crash-safe: manifests are created with
 O_EXCL (a duplicate snapshot id aborts instead of clobbering) and HEAD /
-refs are atomic renames, so concurrent READERS always see a complete
-snapshot.  What the file protocol cannot give two concurrent WRITERS is
+NEXT_SID / refs are atomic renames, so concurrent READERS always see a
+complete snapshot.  Only ``refs.json`` (branch and tag operations) and
+``expire_snapshots``' rewrite of the chain root still rename files that
+hold data; neither is on the per-commit path.  What the file protocol
+cannot give two concurrent WRITERS is
 serialization — the refs read-modify-write can lose one branch move, and
 ``expire_snapshots`` running concurrently with ``commit_to_branch`` could
 reclaim the new snapshot in the window before its branch ref lands.  Run
@@ -34,6 +43,7 @@ alongside another writer.
 from __future__ import annotations
 
 import bisect
+import errno
 import json
 import os
 import time
@@ -86,6 +96,39 @@ def newest_stamped_in(snapshots: list, key: str) -> dict | None:
     return None
 
 
+def _swap_pointer(path: str, value: int) -> None:
+    """Atomically point ``path`` at ``value``: create a symlink whose
+    target is the decimal id and rename it over the old pointer.  The
+    rename is journaled with its target and, unlike renaming a temp file
+    that holds data, forces no flush."""
+    tmp = os.path.join(os.path.dirname(path), f".tmp-ptr-{uuid.uuid4().hex}")
+    os.symlink(str(value), tmp)
+    os.rename(tmp, path)
+
+
+def _read_pointer(path: str) -> int | None:
+    """The id a pointer holds, ``None`` if it does not exist.  A regular
+    file is a pointer written before pointers were symlinks: its content
+    is the id."""
+    try:
+        return int(os.readlink(path))
+    except FileNotFoundError:
+        return None
+    except OSError as e:
+        if e.errno != errno.EINVAL:
+            raise
+    # O_NOFOLLOW: should the first swap replace the old file between the
+    # two calls, the open fails (ELOOP) instead of following the new link
+    try:
+        fd = os.open(path, os.O_RDONLY | os.O_NOFOLLOW)
+    except OSError as e:
+        if e.errno != errno.ELOOP:
+            raise
+        return int(os.readlink(path))
+    with os.fdopen(fd) as f:
+        return int(f.read().strip())
+
+
 class _LazySnapshot(dict):
     """Snapshot view whose ``files`` key resolves from the manifest list
     on first ``[]`` access.  Meta-only walkers (the snapshot-chain
@@ -121,11 +164,7 @@ class SnapshotTable:
         return os.path.join(self.manifest_dir, "HEAD")
 
     def current_snapshot_id(self) -> int | None:
-        try:
-            with open(self._head_path()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return None
+        return _read_pointer(self._head_path())
 
     def _manifest(self, snapshot_id: int) -> dict:
         """Snapshot dict whose ``files`` view resolves from the manifest
@@ -302,11 +341,7 @@ class SnapshotTable:
             raise ValueError(
                 f"HEAD {head} is not an ancestor of branch {branch!r} "
                 f"head {target}; cannot fast-forward")
-        tmp_head = os.path.join(self.manifest_dir,
-                                f".tmp-head-{uuid.uuid4().hex}")
-        with open(tmp_head, "w") as f:
-            f.write(str(target))
-        os.rename(tmp_head, self._head_path())
+        _swap_pointer(self._head_path(), target)
         return target
 
     def rollback_to(self, snapshot_id: int, **meta) -> int:
@@ -326,21 +361,13 @@ class SnapshotTable:
         rebinding old recorded ids to new snapshots) — so a persistent
         counter floors the allocation."""
         counter = os.path.join(self.manifest_dir, "NEXT_SID")
-        try:
-            with open(counter) as f:
-                nxt = int(f.read().strip())
-        except FileNotFoundError:
-            nxt = 0
+        nxt = _read_pointer(counter) or 0
         mx = -1
         for fn in os.listdir(self.manifest_dir):
             if fn.startswith("snapshot-") and fn.endswith(".json"):
                 mx = max(mx, int(fn[len("snapshot-"):-len(".json")]))
         sid = max(nxt, mx + 1)
-        tmp = os.path.join(self.manifest_dir,
-                           f".tmp-sid-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            f.write(str(sid + 1))
-        os.rename(tmp, counter)
+        _swap_pointer(counter, sid + 1)
         return sid
 
     def _commit(self, manifests: list[str], meta: dict,
@@ -377,11 +404,7 @@ class SnapshotTable:
         finally:
             os.unlink(tmp)
         if move_head:
-            tmp_head = os.path.join(self.manifest_dir,
-                                    f".tmp-head-{uuid.uuid4().hex}")
-            with open(tmp_head, "w") as f:
-                f.write(str(sid))
-            os.rename(tmp_head, self._head_path())
+            _swap_pointer(self._head_path(), sid)
         return sid
 
     def _write_data(self, df: "DataFrame | pa.Table") -> str:
@@ -736,7 +759,8 @@ class SnapshotTable:
                       .sortWithinPartitions(zname)
                       .drop(zname))
         else:
-            n_rows = cur.count()
+            summary = self.stats_summary()
+            n_rows = summary[0] if summary is not None else cur.count()
             n_files = max(1, -(-n_rows // target_file_rows))
             if cluster_by is not None:
                 packed = (cur.repartitionByRange(n_files,
@@ -951,6 +975,35 @@ class SnapshotTable:
             # absent OR corrupt stats -> no pruning for this dir,
             # never a crash (ValueError covers JSONDecodeError)
             return None
+
+    def stats_summary(self, snapshot_id: int | None = None,
+                      column: str | None = None
+                      ) -> tuple[int, tuple[int, int] | None] | None:
+        """``(rows, bounds)`` of a snapshot (default HEAD) from its data
+        dirs' ``_file_stats.json`` alone, with no Spark job: the footer
+        row count and, when ``column`` is given, that column's
+        ``(min, max)`` (``None`` when no file holds a row; a file without
+        rows needs no bounds).  Returns ``None`` when any data file lacks
+        its stats or the column's bounds, or a bound is not an int; the
+        caller then runs its Spark aggregate instead."""
+        rows, lo, hi = 0, None, None
+        stats: dict[str, dict] = {}
+        for path in self.data_files(snapshot_id):
+            d, fn = os.path.split(path)
+            if d not in stats:
+                stats[d] = self._load_stats(d) or {}
+            st = stats[d].get(fn)
+            if st is None or type(st.get("rows")) is not int:
+                return None
+            rows += st["rows"]
+            if column is None or not st["rows"]:
+                continue
+            b = st.get("columns", {}).get(column)
+            if b is None or any(type(v) is not int for v in b):
+                return None
+            lo = b[0] if lo is None else min(lo, b[0])
+            hi = b[1] if hi is None else max(hi, b[1])
+        return rows, (None if lo is None else (lo, hi))
 
     def data_files(self, snapshot_id: int | None = None) -> list[str]:
         sid = snapshot_id if snapshot_id is not None \

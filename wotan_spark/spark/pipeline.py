@@ -212,15 +212,10 @@ class Pipeline:
         chunk split or exchange) only when every data file's ``n_tok``
         max in ``_file_stats.json`` is <= ``AUTO_CHUNK_THRESHOLD``; a
         missing stat keeps routing."""
-        table = self.tables["sequences"]
-        stats: dict = {}
-        for path in table.data_files(seq_sid):
-            d, fn = os.path.split(path)
-            if d not in stats:
-                stats[d] = table._load_stats(d) or {}
-            hi = stats[d].get(fn, {}).get("columns", {}).get("n_tok")
-            if hi is None or hi[1] > AUTO_CHUNK_THRESHOLD:
-                return AUTO_CHUNK_THRESHOLD
+        summary = self.tables["sequences"].stats_summary(seq_sid, "n_tok")
+        if summary is None or (summary[1] is not None
+                               and summary[1][1] > AUTO_CHUNK_THRESHOLD):
+            return AUTO_CHUNK_THRESHOLD
         return None
 
     # ------------------------------------------------------------------

@@ -50,10 +50,16 @@ def cutoffs_from_policy(spark: SparkSession,
     for name, keep in policy.keep_buckets.items():
         if keep is None or name not in tables:
             continue
-        df = tables[name].read(spark)
-        if df is None:
-            continue
-        hi = df.agg(F.max(bucket_col)).collect()[0][0]
+        # the file stats' bucket max when every file has it (no Spark
+        # job), else one aggregate over the snapshot
+        summary = tables[name].stats_summary(column=bucket_col)
+        if summary is not None:
+            hi = summary[1][1] if summary[1] is not None else None
+        else:
+            df = tables[name].read(spark)
+            if df is None:
+                continue
+            hi = df.agg(F.max(bucket_col)).collect()[0][0]
         if hi is not None:
             cutoffs[name] = int(hi) - int(keep) + 1
     return cutoffs
@@ -73,18 +79,14 @@ def apply_retention(spark: SparkSession,
         sid0 = table.current_snapshot_id()
         if sid0 is None:
             continue
-        # total row count from the per-file footer stats (metadata-only);
-        # the kept read goes through where= so file-stats pruning skips
-        # wholly-aged-out data files — cost O(kept), as documented, not
-        # three full-table scans
-        total = 0
-        have_stats = True
-        for d in table._manifest(sid0)["files"]:
-            st = table._load_stats(d)
-            if st is None:
-                have_stats = False
-                break
-            total += sum(int(s.get("rows", 0)) for s in st.values())
+        # row counts before and after come from the per-file footer
+        # stats (metadata-only), and the kept read goes through where= so
+        # file-stats pruning skips wholly-aged-out data files: the one
+        # Spark job is the O(kept) rewrite.  A dir without stats falls
+        # back to counting.
+        before = table.stats_summary(sid0)
+        total = (before[0] if before is not None
+                 else table.read(spark).count())
         # merge_schema: the rewrite must carry EVERY evolved column —
         # without it Spark takes one arbitrary footer's schema and the
         # overwrite would permanently drop columns appended by later
@@ -92,11 +94,10 @@ def apply_retention(spark: SparkSession,
         kept_df = table.read(spark,
                              where=(bucket_col, cutoff, _BUCKET_MAX),
                              merge_schema=True)
-        if not have_stats:
-            total = table.read(spark).count()
-        kept = kept_df.count()
         sid = table.overwrite(kept_df, run_id=run_id,
                               retention_cutoff=cutoff)
+        after = table.stats_summary(sid)
+        kept = after[0] if after is not None else kept_df.count()
         report[name] = {"dropped": total - kept, "kept": kept,
                         "snapshot_id": sid, "cutoff": cutoff}
     return report
