@@ -12,8 +12,19 @@ pattern.  The cases use the ``test_property_parity._series`` shapes:
 duplicate timestamps, gaps, a NaN run, a known-signal mask with
 ``edge_cutoff > 0``, and negative flux (the sentinel-dropped windows).
 
+savgol alone is compared with a tolerance, not bitwise: its coefficients
+come from ``np.linalg.pinv`` and its edge fits from ``np.polyfit``, whose
+last bits follow the CPU kernel OpenBLAS picks at run time (numpy's
+OpenBLAS is built ``DYNAMIC_ARCH``).  Across the core types below savgol
+moves by at most ~7e-14 relative while every other method stays bitwise.
+Its expected ``flat``/``trend`` arrays are stored in
+``data/savgol_expected.json``, made under ``OPENBLAS_CORETYPE=Prescott``;
+their digests are the original savgol pins, which a test checks.
+
 Regenerate (only for an intended change of kernel output) with
-``python -m tests.test_kernel_goldens``.
+``OPENBLAS_CORETYPE=Prescott python -m tests.test_kernel_goldens``;
+``python -m tests.test_kernel_goldens --check`` prints the goldens the
+live kernels miss and exits 1 if any.
 """
 
 from __future__ import annotations
@@ -21,6 +32,8 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import subprocess
+import sys
 
 import numpy as np
 import pytest
@@ -29,8 +42,15 @@ from wotan_spark import constants
 from wotan_spark.kernels.detrend import detrend_series
 from wotan_spark.kernels.series import transit_mask
 
-GOLDENS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data",
-                       "kernel_goldens.json")
+DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+GOLDENS = os.path.join(DATA, "kernel_goldens.json")
+SAVGOL_EXPECTED = os.path.join(DATA, "savgol_expected.json")
+SAVGOL_RTOL = 1e-12
+# OpenBLAS core types the check is rerun under, each with the CPU flag
+# its kernels need, as /proc/cpuinfo names it (SSE3 is "pni"); forcing
+# a core the CPU lacks would crash, not fail
+CORE_TYPES = {"Haswell": "avx2", "SkylakeX": "avx512f",
+              "Sandybridge": "avx", "Nehalem": "sse4_2", "Prescott": "pni"}
 
 METHODS = (constants.SLIDER_METHODS + constants.SLOW_SLIDER_METHODS
            + ["lowess", "medfilt", "savgol"])
@@ -83,33 +103,100 @@ def digest(flat: np.ndarray, trend: np.ndarray) -> str:
     return h.hexdigest()
 
 
-def live_digests() -> dict[str, str]:
+def live_outputs() -> dict[str, tuple[np.ndarray, np.ndarray]]:
     out = {}
     for method in METHODS:
         for name, (time, flux, mask, edge) in cases().items():
             with np.errstate(all="ignore"):
                 res = detrend_series(time, flux, method=method, mask=mask,
                                      edge_cutoff=edge, **_params(method))
-            out[f"{method}/{name}"] = digest(res.flatten_lc, res.trend_lc)
+            out[f"{method}/{name}"] = (res.flatten_lc, res.trend_lc)
+    return out
+
+
+def _load(path: str) -> dict:
+    with open(path) as fh:
+        return json.load(fh)
+
+
+def misses(method: str, live: dict) -> list[str]:
+    """Cases of ``method`` whose live output misses its golden: the
+    SHA-256 pin, or for savgol the stored arrays within SAVGOL_RTOL."""
+    pins, expected = _load(GOLDENS), _load(SAVGOL_EXPECTED)
+    out = []
+    for name in cases():
+        key = f"{method}/{name}"
+        if method != "savgol":
+            ok = digest(*live[key]) == pins[key]
+        else:
+            want = (expected[key]["flat"], expected[key]["trend"])
+            ok = all(np.shape(got) == np.shape(exp) and np.allclose(
+                got, exp, rtol=SAVGOL_RTOL, atol=0, equal_nan=True)
+                for got, exp in zip(live[key], want))
+        if not ok:
+            out.append(key)
     return out
 
 
 @pytest.fixture(scope="module")
 def live():
-    return live_digests()
+    return live_outputs()
 
 
 @pytest.mark.parametrize("method", METHODS)
 def test_kernel_golden(method, live):
-    with open(GOLDENS) as fh:
-        pins = json.load(fh)
+    assert misses(method, live) == []
+
+
+def test_savgol_expected_arrays_are_the_pins():
+    """The stored savgol arrays hash to the SHA-256 pins they replace."""
+    pins, expected = _load(GOLDENS), _load(SAVGOL_EXPECTED)
     for name in cases():
-        key = f"{method}/{name}"
-        assert live[key] == pins[key], key
+        key = f"savgol/{name}"
+        arrays = (np.array(expected[key]["flat"], dtype="<f8"),
+                  np.array(expected[key]["trend"], dtype="<f8"))
+        assert digest(*arrays) == pins[key], key
+
+
+def _cpu_flags() -> set[str]:
+    try:
+        with open("/proc/cpuinfo") as fh:
+            for line in fh:
+                if line.startswith("flags"):
+                    return set(line.split(":", 1)[1].split())
+    except OSError:
+        pass
+    return set()
+
+
+@pytest.mark.parametrize("core", sorted(CORE_TYPES))
+def test_goldens_hold_under_every_blas_core_type(core):
+    """The other 16 methods' SHA pins and savgol's bound hold whichever
+    kernel OpenBLAS runs: the check reruns with that core forced."""
+    if CORE_TYPES[core] not in _cpu_flags():
+        pytest.skip(f"this CPU lacks {CORE_TYPES[core]} for {core}")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-m", "tests.test_kernel_goldens", "--check"],
+        cwd=root, env={**os.environ, "OPENBLAS_CORETYPE": core},
+        capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stdout + proc.stderr
 
 
 if __name__ == "__main__":
-    os.makedirs(os.path.dirname(GOLDENS), exist_ok=True)
+    outputs = live_outputs()
+    if sys.argv[1:] == ["--check"]:
+        bad = [k for m in METHODS for k in misses(m, outputs)]
+        print("\n".join(bad) or "all goldens hold")
+        sys.exit(1 if bad else 0)
+    os.makedirs(DATA, exist_ok=True)
     with open(GOLDENS, "w") as fh:
-        json.dump(live_digests(), fh, indent=1, sort_keys=True)
+        json.dump({k: digest(*v) for k, v in outputs.items()}, fh,
+                  indent=1, sort_keys=True)
+        fh.write("\n")
+    with open(SAVGOL_EXPECTED, "w") as fh:
+        json.dump({k: {"flat": np.asarray(f, dtype="<f8").tolist(),
+                       "trend": np.asarray(t, dtype="<f8").tolist()}
+                   for k, (f, t) in outputs.items()
+                   if k.startswith("savgol/")}, fh, sort_keys=True)
         fh.write("\n")

@@ -291,3 +291,90 @@ def test_where_in_and_zorder_edge_cases(spark, tmp_path):
         tz._zorder_column(wide.select(*(F.col("d0").alias(f"e{i}")
                                         for i in range(64))),
                           [f"e{i}" for i in range(64)])
+
+
+def _jobs_started(spark, group: str, build) -> list:
+    """Spark job ids started while ``build()`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "scan planning")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_scans_over_uniform_dirs_start_no_spark_job(spark, tmp_path):
+    """Every dir's footer holds the same Spark schema string, so building
+    a read frame (plain, where, where_in, an empty where, merge_schema)
+    starts no schema-inference job, and neither does merge_buckets up to
+    its first action."""
+    t, rows = _mk(spark, tmp_path)
+    t.overwrite(rows(0, 50).repartition(2))
+    t.append(rows(50, 100))
+    dirs = t._manifest(t.current_snapshot_id())["files"]
+    inferred = spark.read.parquet(*dirs).schema
+    frames = {}
+
+    def build():
+        frames["plain"] = t.read(spark)
+        frames["where"] = t.read(spark, where=("id", 10, 20))
+        frames["where_in"] = t.read(spark, where_in=("id", [3, 70]))
+        frames["empty"] = t.read(spark, where=("id", 500, 600))
+        frames["merge_schema"] = t.read(spark, merge_schema=True)
+
+    assert _jobs_started(spark, f"reads-{tmp_path.name}", build) == []
+    assert all(f.schema == inferred for f in frames.values())
+    assert frames["where"].count() == 11
+    assert frames["where_in"].count() == 2
+    assert frames["empty"].count() == 0
+
+    class Stop(Exception):
+        pass
+
+    batch = spark.createDataFrame([(7, 0)], "id long, v long")
+
+    def persist(*a, **k):
+        raise Stop
+
+    def merge():
+        with pytest.raises(Stop):
+            t.merge_buckets(spark, batch, keys=["id"])
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(type(batch), "persist", persist)
+        assert _jobs_started(spark, f"merge-{tmp_path.name}", merge) == []
+
+
+def test_scan_schema_falls_back_to_inference(spark, tmp_path):
+    """Dirs whose footers disagree (schema evolution), a dir written
+    without Spark, or a footer that cannot be read: the scan infers its
+    schema as Spark does, and an unreadable file still fails in Spark."""
+    import pyarrow as pa
+
+    t, rows = _mk(spark, tmp_path)
+    t.overwrite(rows(0, 5))
+    t.append(rows(5, 10).selectExpr("*", "'x' as tag"))
+    dirs = t._manifest(t.current_snapshot_id())["files"]
+    assert len({t._footer_schema(d) for d in dirs}) == 2
+    assert t.read(spark, merge_schema=True).schema == (
+        spark.read.option("mergeSchema", "true").parquet(*dirs).schema)
+    assert t.read(spark).schema == spark.read.parquet(*dirs).schema
+
+    lin = SnapshotTable(str(tmp_path / "arrow"))
+    lin.append(pa.table({"id": pa.array([1, 2], pa.int64())}))
+    (d,) = lin._manifest(lin.current_snapshot_id())["files"]
+    assert lin._footer_schema(d) is None
+    assert lin.read(spark).schema == spark.read.parquet(d).schema
+    assert lin.read(spark).count() == 2
+
+    bad, _ = _mk(spark, tmp_path, "bad")
+    bad.overwrite(rows(0, 5))
+    (d,) = bad._manifest(bad.current_snapshot_id())["files"]
+    for fn in os.listdir(d):
+        if fn.endswith(".parquet"):
+            with open(os.path.join(d, fn), "wb") as f:
+                f.write(b"not parquet at all")
+    assert bad._footer_schema(d) is None
+    with pytest.raises(Exception, match="parquet|Parquet|stage failure"):
+        bad.read(spark).collect()

@@ -848,3 +848,28 @@ def test_zorder_rejects_string_and_unknown_columns(spark, tmp_path):
         t.compact(spark, cluster_by=["x", "s"])
     with _pytest.raises(ValueError, match="not in table"):
         t.compact(spark, cluster_by=["x", "nope"])
+
+
+def test_every_pipeline_table_reads_the_inferred_schema(spark, tmp_path):
+    """For every table a pipeline run writes, sketch and periods tables
+    included, the schema a scan takes from the footers is the one Spark
+    infers; every Spark-written table takes the footer path."""
+    cfg = PipelineConfig(method="mean", window_length=17.0, sketch_bins=8,
+                         sketch_distinct=True, sketch_topk=True,
+                         periodogram_topk=2)
+    pipe = Pipeline(spark, str(tmp_path / "p"), cfg)
+    pipe.run(synth_sequences(spark, 6, median_len=200, max_len=400),
+             run_id="r1")
+    written = {n for n, t in pipe.tables.items()
+               if t.current_snapshot_id() is not None}
+    assert {"sequences", "detrended", "tier10", "tier100", "blocks",
+            "hist10", "hist100", "distinct10", "distinct100", "topk10",
+            "topk100", "periods", "lineage"} <= written
+    for name in sorted(written):
+        t = pipe.tables[name]
+        dirs = t._manifest(t.current_snapshot_id())["files"]
+        footers = {t._footer_schema(d) for d in dirs}
+        if name != "lineage":        # lineage rows are written by pyarrow
+            assert len(footers) == 1 and None not in footers, name
+        assert t.read(spark).schema == spark.read.parquet(*dirs).schema, \
+            name

@@ -8,6 +8,7 @@ pushdown, these fail before any benchmark would notice.
 from __future__ import annotations
 
 import os
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -347,3 +348,44 @@ def test_missing_file_stats_keep_the_long_branch(spark, tmp_path,
                                     monkeypatch, seq, prepare=drop_stats)
     assert len(plans) == 2
     assert all(_routed(plan) for plan in plans), plans
+
+
+def _compaction_plans(spark, root, monkeypatch, cluster_by, target):
+    """Executed plans of the frames ``compact()`` writes."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from wotan_spark.spark.lakehouse import SnapshotTable
+    t = SnapshotTable(root)
+    t.overwrite(spark.range(400).selectExpr("id as bucket", "id % 7 as y")
+                .repartition(4))
+    plans = []
+    write = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        plans.append(_plan(self._df))
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    t.compact(spark, target_file_rows=target, cluster_by=cluster_by)
+    monkeypatch.undo()
+    assert t.read(spark).count() == 400
+    return plans
+
+
+@pytest.mark.parametrize("cluster_by", ["bucket", ["bucket", "y"]])
+def test_one_file_compaction_sorts_without_exchange(spark, tmp_path,
+                                                    monkeypatch, cluster_by):
+    (plan,) = _compaction_plans(spark, str(tmp_path / "t"), monkeypatch,
+                                cluster_by, 1_000)
+    assert "Exchange" not in plan, plan
+    assert "Sort [" in plan, plan
+
+
+@pytest.mark.parametrize("cluster_by", ["bucket", ["bucket", "y"]])
+def test_many_file_compaction_keeps_explicit_range_count(spark, tmp_path,
+                                                         monkeypatch,
+                                                         cluster_by):
+    (plan,) = _compaction_plans(spark, str(tmp_path / "t"), monkeypatch,
+                                cluster_by, 100)
+    assert re.search(r"rangepartitioning\(.*, 4\), REPARTITION_BY_NUM",
+                     plan), plan

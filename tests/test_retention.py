@@ -396,3 +396,91 @@ def test_missing_file_stats_fall_back_to_identical_results(spark, tmp_path):
     for r in (compacted["tier10"], expected[2]["tier10"]):
         r.pop("files_before")
     assert compacted == expected[2]
+
+
+def _data_dirs(table: SnapshotTable) -> set:
+    return set(os.listdir(os.path.join(table.root, "data")))
+
+
+def test_second_compaction_is_a_no_op(spark, tmp_path):
+    """A HEAD already in the requested layout is not rewritten: the same
+    snapshot id, no new data dir, no lineage row.  An append in between
+    makes the next compaction rewrite."""
+    pipe = _two_dir_tier10(spark, str(tmp_path / "p"))
+    t10, lineage = pipe.tables["tier10"], pipe.tables["lineage"]
+    first = pipe.compact_tables(tables=("tier10",), target_file_rows=25)
+    dirs, n_lineage = _data_dirs(t10), lineage.read(spark).count()
+    again = pipe.compact_tables(tables=("tier10",), target_file_rows=25)
+    assert again["tier10"]["snapshot_id"] == first["tier10"]["snapshot_id"]
+    assert again["tier10"]["files_before"] == again["tier10"]["files_after"]
+    assert _data_dirs(t10) == dirs
+    assert lineage.read(spark).count() == n_lineage
+    # another request is another layout
+    other = pipe.compact_tables(tables=("tier10",), target_file_rows=30)
+    assert other["tier10"]["snapshot_id"] != first["tier10"]["snapshot_id"]
+
+    t10.append(spark.createDataFrame(
+        [("doc_9", 3, 1.0)], "doc_id string, bucket long, y_sum double"))
+    sid = t10.current_snapshot_id()
+    later = pipe.compact_tables(tables=("tier10",), target_file_rows=30)
+    assert later["tier10"]["snapshot_id"] != sid
+    assert t10.read(spark).count() == 61
+    assert lineage.read(spark).count() > n_lineage
+
+
+def test_retention_writes_what_compaction_would(spark, tmp_path):
+    """After retention + compaction, tier10's HEAD is the retention
+    snapshot: one file sorted by bucket holding, as a multiset, the rows
+    a forced full compaction of the same table writes."""
+    import pyarrow.parquet as pq
+
+    from wotan_spark.spark.lakehouse import TARGET_FILE_ROWS
+    pipe = _two_dir_tier10(spark, str(tmp_path / "p"))
+    t10 = pipe.tables["tier10"]
+    report = pipe.enforce_retention(RetentionPolicy({"tier10": 5}))
+    sid = report["tier10"]["snapshot_id"]
+    n_lineage = pipe.tables["lineage"].read(spark).count()
+    compacted = pipe.compact_tables()
+    assert compacted["tier10"]["snapshot_id"] == sid
+    assert t10.current_snapshot_id() == sid
+    assert pipe.tables["lineage"].read(spark).count() == n_lineage
+    (path,) = t10.data_files()
+    buckets = pq.read_table(path).column("bucket").to_pylist()
+    assert buckets == sorted(buckets) and len(buckets) == 15
+
+    kept = sorted(t10.read(spark).collect())
+    forced = t10.compact(spark, target_file_rows=TARGET_FILE_ROWS - 1,
+                         cluster_by="bucket")
+    assert forced != sid and len(t10.data_files()) == 1
+    assert sorted(t10.read(spark).collect()) == kept
+
+
+def test_layout_stamp_needs_the_file_count_compact_would_choose(
+        spark, tmp_path, monkeypatch):
+    """Retention sizes its rewrite from the rows of the files its pruned
+    scan reads (24 here), an upper bound on the 15 kept rows.  The layout
+    stamp is written only when that file count is ceil(kept / target)."""
+    from wotan_spark.spark import retention
+
+    for target, stamped in ((10, False), (12, True)):
+        pipe = _two_dir_tier10(spark, str(tmp_path / f"t{target}"))
+        t10 = pipe.tables["tier10"]
+        t10.read(spark, where=("bucket", 15, 1 << 62))
+        assert t10.last_scan["rows_read"] == 24
+        monkeypatch.setattr(retention, "TARGET_FILE_ROWS", target)
+        report = pipe.enforce_retention(RetentionPolicy({"tier10": 5}))
+        sid = report["tier10"]["snapshot_id"]
+        assert report["tier10"]["kept"] == 15
+        assert (-(-24 // target) == -(-15 // target)) is stamped
+        meta = t10._manifest(sid)["meta"]
+        if stamped:
+            assert meta["clustered_by"] == "bucket"
+            assert meta["target_file_rows"] == target
+        else:
+            assert "target_file_rows" not in meta
+            assert "clustered_by" not in meta
+        again = pipe.compact_tables(tables=("tier10",),
+                                    target_file_rows=target)
+        assert (again["tier10"]["snapshot_id"] == sid) is stamped
+        assert len(t10.data_files()) == 2
+        assert t10.read(spark).count() == 15

@@ -22,7 +22,11 @@ catalog could replace 1:1:
   read;
 * snapshots are immutable -> time travel (``read(snapshot_id=...)``) and
   checkpoint/resume (a pipeline stage is "done" iff a snapshot with its
-  config fingerprint exists).
+  config fingerprint exists);
+* scans take their schema from the Spark schema in the data files'
+  footers, with no inference job (Iceberg reads it from table metadata);
+* compaction stamps its layout and skips a HEAD already stamped with the
+  requested one; retention writes and stamps that layout too.
 
 Concurrency model: ONE writer per table at a time (the Hadoop-catalog
 Iceberg assumption; a real catalog's atomic compare-and-swap replaces it).
@@ -46,16 +50,24 @@ import bisect
 import errno
 import json
 import os
+import shutil
 import time
 import uuid
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+from pyarrow.lib import ArrowException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # dirs per manifest file for clustered compaction / rewrite_manifests:
 # small enough that a merge touching one key range rewrites little
 # metadata, large enough that the manifest list stays ~files/16 entries
 _MANIFEST_GROUP = 16
+# rows per data file that compaction (and retention's rewrite) aims for
+TARGET_FILE_ROWS = 1_000_000
+# footer key under which Spark's parquet writer stores its schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def delta_fingerprint(df: DataFrame) -> dict:
@@ -158,6 +170,8 @@ class SnapshotTable:
         # manifest files are immutable once linked into a snapshot, so
         # their contents cache safely for the table handle's lifetime
         self._manifest_cache: dict[str, list[str]] = {}
+        # data dirs are immutable too: one footer's Spark schema per dir
+        self._footer_cache: dict[str, StructType | None] = {}
 
     # -- snapshot bookkeeping ------------------------------------------------
     def _head_path(self) -> str:
@@ -226,8 +240,7 @@ class SnapshotTable:
 
     def find_snapshot(self, **meta) -> dict | None:
         """Newest snapshot whose metadata contains all given key/values."""
-        for m in reversed(self.snapshots() if self.current_snapshot_id()
-                          is not None else []):
+        for m in reversed(self.snapshots()):
             if all(m.get("meta", {}).get(k) == v for k, v in meta.items()):
                 return m
         return None
@@ -416,7 +429,6 @@ class SnapshotTable:
         if isinstance(df, DataFrame):
             df.write.mode("overwrite").parquet(d)
         else:
-            import pyarrow.parquet as pq
             os.makedirs(d)
             pq.write_table(df, os.path.join(
                 d, f"part-00000-{uuid.uuid4().hex}.parquet"))
@@ -426,7 +438,6 @@ class SnapshotTable:
     def _write_file_stats(self, d: str) -> None:
         """Per-file column min/max stats (the Iceberg manifest-stats model)
         used for scan pruning in ``read(where=...)``."""
-        import pyarrow.parquet as pq
         stats: dict[str, dict] = {}
         for fn in sorted(os.listdir(d)):
             if not fn.endswith(".parquet"):
@@ -493,11 +504,6 @@ class SnapshotTable:
         except (FileNotFoundError, ValueError, TypeError):
             pass
         try:
-            import pyarrow.parquet as pq
-            from pyarrow.lib import ArrowException
-        except ImportError:
-            return None
-        try:
             fn = next(f for f in sorted(os.listdir(d))
                       if f.endswith(".parquet"))
             return tuple((fld.name, str(fld.type))
@@ -508,6 +514,34 @@ class SnapshotTable:
             # else (programming errors) must escape, not silently turn
             # every merge into a full-table rewrite
             return None
+
+    def _footer_schema(self, d: str) -> StructType | None:
+        """The schema Spark wrote into the first parquet footer of data
+        dir ``d``; ``None`` for a dir written without Spark or a footer
+        that cannot be read."""
+        if d not in self._footer_cache:
+            try:
+                fn = next(f for f in sorted(os.listdir(d))
+                          if f.endswith(".parquet"))
+                kv = pq.read_metadata(os.path.join(d, fn)).metadata or {}
+                schema = StructType.fromJson(json.loads(kv[_SPARK_SCHEMA_KEY]))
+            except (OSError, StopIteration, KeyError, ValueError, TypeError,
+                    ArrowException):
+                schema = None
+            self._footer_cache[d] = schema
+        return self._footer_cache[d]
+
+    def _reader(self, spark: SparkSession, dirs: list[str],
+                merge_schema: bool = False):
+        """Reader for a scan over ``dirs``, given the dirs' footer schema
+        when they all hold the same one (inference without mergeSchema
+        reads just that, but in a Spark job).  Otherwise Spark infers, with
+        mergeSchema when asked, and reports any broken file itself."""
+        found = {self._footer_schema(d) for d in dirs}
+        if len(found) == 1 and None not in found:
+            return spark.read.schema(found.pop())
+        reader = spark.read
+        return reader.option("mergeSchema", "true") if merge_schema else reader
 
     def append(self, df: "DataFrame | pa.Table", **meta) -> int:
         d = self._write_data(df)
@@ -555,7 +589,8 @@ class SnapshotTable:
         fps = {d: self._dir_schema(d) for d in dirs}
         mixed = len(set(fps.values())) > 1 or (
             bool(dirs) and fps[dirs[0]] is None)
-        stored = spark.read.parquet(dirs[0]).schema if dirs else df.schema
+        stored = (self._reader(spark, dirs[:1]).parquet(dirs[0]).schema
+                  if dirs else df.schema)
         same_schema = (not mixed
                        and {(f.name, f.dataType) for f in stored.fields}
                        == {(f.name, f.dataType) for f in df.schema.fields})
@@ -610,9 +645,8 @@ class SnapshotTable:
             else:
                 affected = list(dirs)
             if affected:
-                reader = (spark.read.option("mergeSchema", "true")
-                          if mixed else spark.read)
-                cur = reader.parquet(*affected)
+                cur = self._reader(spark, affected,
+                                   merge_schema=mixed).parquet(*affected)
                 remaining = cur.join(df.select(*keys).distinct(), keys,
                                      "left_anti")
                 # same column set -> exact union (a misnamed batch column
@@ -714,7 +748,8 @@ class SnapshotTable:
                     F.shiftright(bucket, src).bitwiseAND(F.lit(1)), dst))
         return z, int(stats["__n"])
 
-    def compact(self, spark: SparkSession, target_file_rows: int = 1_000_000,
+    def compact(self, spark: SparkSession,
+                target_file_rows: int = TARGET_FILE_ROWS,
                 cluster_by: str | list[str] | None = None, **meta) -> int:
         """Maintenance rewrite (the Iceberg ``rewrite_data_files`` model):
         bin-pack the current snapshot's many small files into
@@ -729,11 +764,28 @@ class SnapshotTable:
         byte-identical as a multiset; history keeps the fragmented
         snapshot time-travelable until ``expire_snapshots``.
 
+        A HEAD stamped with the requested layout (``clustered_by``,
+        ``zorder``, ``target_file_rows``) is what this would write: its id
+        is returned and nothing is read, written or committed.
+
         At 100 TB this is the operator that keeps streaming/incremental
         tables healthy: every AvailableNow merge and late-data upsert adds
         a small-file generation, and scan cost is per-FILE as much as
         per-byte (task scheduling, footer reads, stats entries).
         """
+        zorder = isinstance(cluster_by, (list, tuple))
+        if zorder and len(cluster_by) == 1:
+            cluster_by, zorder = cluster_by[0], False
+        if zorder and not cluster_by:
+            raise ValueError("cluster_by list must name >= 1 column")
+        layout = {"clustered_by": ",".join(cluster_by) if zorder
+                  else cluster_by,
+                  "zorder": True if zorder else None,
+                  "target_file_rows": target_file_rows}
+        head = self.current_snapshot_id()
+        stamped = self._manifest_raw(head) if head is not None else {}
+        if all(stamped.get("meta", {}).get(k) == v for k, v in layout.items()):
+            return head
         # mergeSchema: append-based schema evolution is a supported write,
         # so a snapshot can hold mixed-schema dirs — a plain read takes one
         # arbitrary footer's schema and the rewrite would silently drop the
@@ -741,60 +793,53 @@ class SnapshotTable:
         cur = self.read(spark, merge_schema=True)
         if cur is None:
             raise ValueError("nothing to compact")
-        zorder = isinstance(cluster_by, (list, tuple))
-        if zorder and len(cluster_by) == 1:
-            cluster_by, zorder = cluster_by[0], False
         if zorder:
-            if not cluster_by:
-                raise ValueError("cluster_by list must name >= 1 column")
             # the z stats agg carries the row count, so the zorder path
             # pays ONE metadata scan, not a count pass plus a stats pass
-            zcol, n_rows = self._zorder_column(cur, list(cluster_by))
-            n_files = max(1, -(-n_rows // target_file_rows))
-            # uuid-suffixed scratch name: a user column literally named
-            # __z must survive the "multiset-identical rewrite" promise
-            zname = f"__z_{uuid.uuid4().hex[:8]}"
-            packed = (cur.withColumn(zname, zcol)
-                      .repartitionByRange(n_files, F.col(zname))
-                      .sortWithinPartitions(zname)
-                      .drop(zname))
+            order, n_rows = self._zorder_column(cur, list(cluster_by))
         else:
             summary = self.stats_summary()
             n_rows = summary[0] if summary is not None else cur.count()
-            n_files = max(1, -(-n_rows // target_file_rows))
-            if cluster_by is not None:
-                packed = (cur.repartitionByRange(n_files,
-                                                 F.col(cluster_by))
-                          .sortWithinPartitions(cluster_by))
-            else:
-                packed = cur.coalesce(n_files)
-        meta.setdefault("compaction", True)
-        if cluster_by is None:
-            return self.overwrite(packed, **meta)
-        meta.setdefault("clustered_by", ",".join(cluster_by) if zorder
-                        else cluster_by)
-        if zorder:
-            meta.setdefault("zorder", True)
-        # commit range-clustered output as ONE DIR PER FILE: manifest
-        # entries are dir-granular, so a single monolithic dir would be
-        # marked affected by ANY overlapping merge_buckets and the whole
-        # table would rewrite — per-file dirs keep merge pruning at
-        # per-range granularity (the point of clustering)
-        import shutil
-        # raw write — no staging stats: they would be discarded when the
-        # files move to their per-file dirs (which compute their own)
-        staged = os.path.join(self.root, "data", uuid.uuid4().hex)
-        packed.write.mode("overwrite").parquet(staged)
-        dirs: list[str] = []
-        for fn in sorted(os.listdir(staged)):
-            if not fn.endswith(".parquet"):
-                continue
-            nd = os.path.join(self.root, "data", uuid.uuid4().hex)
-            os.makedirs(nd)
-            os.rename(os.path.join(staged, fn), os.path.join(nd, fn))
-            self._write_file_stats(nd)
-            dirs.append(nd)
-        shutil.rmtree(staged, ignore_errors=True)
+            order = None if cluster_by is None else F.col(cluster_by)
+        n_files = max(1, -(-n_rows // target_file_rows))
+        return self._commit_layout(cur, n_files, order, layout,
+                                   {"compaction": True, **meta})
+
+    def _commit_layout(self, df: DataFrame, n_files: int,
+                       order: "Column | None", layout: dict,
+                       meta: dict) -> int:
+        """Overwrite with ``df`` in ``n_files`` files as ``compact()``
+        writes them: coalesced into one dir when ``order`` is None, else
+        range-clustered on ``order`` (one file: a local sort, no exchange)
+        and sorted within each file.  ``layout`` is stamped only when
+        ``n_files`` is what ``compact()`` would choose for the rows written
+        (from the new files' stats): a stamp means "compact() writes this"."""
+        if order is None:
+            dirs = [self._write_data(df.coalesce(n_files))]
+        else:
+            packed = (df.coalesce(1) if n_files == 1
+                      else df.repartitionByRange(n_files, order))
+            # ONE DIR PER FILE: manifest entries are dir-granular, so one
+            # monolithic dir would be affected by ANY overlapping
+            # merge_buckets and the whole table would rewrite.  The raw
+            # write keeps no staging stats: each per-file dir gets its own
+            staged = os.path.join(self.root, "data", uuid.uuid4().hex)
+            packed.sortWithinPartitions(order).write.mode(
+                "overwrite").parquet(staged)
+            dirs = []
+            for fn in sorted(os.listdir(staged)):
+                if not fn.endswith(".parquet"):
+                    continue
+                nd = os.path.join(self.root, "data", uuid.uuid4().hex)
+                os.makedirs(nd)
+                os.rename(os.path.join(staged, fn), os.path.join(nd, fn))
+                self._write_file_stats(nd)
+                dirs.append(nd)
+            shutil.rmtree(staged, ignore_errors=True)
+        rows = sum(st["rows"] for d in dirs
+                   for st in self._load_stats(d).values())
+        if n_files == max(1, -(-rows // layout["target_file_rows"])):
+            meta = {**meta, **layout}
         # range-adjacent dirs group into manifests of _MANIFEST_GROUP, so
         # a later merge_buckets rewrites only the manifests whose key
         # range it touches (partition-aligned manifests, the Iceberg
@@ -851,9 +896,7 @@ class SnapshotTable:
         dirs = self._manifest(sid)["files"]
         if not dirs:
             return None
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
+        reader = self._reader(spark, dirs, merge_schema)
         if where is None and where_in is None:
             return reader.parquet(*dirs)
         if where is not None and where_in is not None:
@@ -891,26 +934,29 @@ class SnapshotTable:
                 # _disjoint has the same guard)
                 return False
 
-        paths, pruned = [], 0
+        paths, pruned, rows = [], 0, 0
         for d in dirs:
-            stats = self._load_stats(d)
+            stats = self._load_stats(d) or {}
             for fn in sorted(os.listdir(d)):
                 if not fn.endswith(".parquet"):
                     continue
-                cols = (stats or {}).get(fn, {}).get("columns", {})
+                st = stats.get(fn, {})
+                cols = st.get("columns", {})
                 if any(cols.get(col) is not None
                        and _outside(cols[col], lo, hi)
                        for col, lo, hi in clauses):
                     pruned += 1
                     continue
                 paths.append(os.path.join(d, fn))
-        self.last_scan = {"files_read": len(paths), "files_pruned": pruned}
+                rows = (rows + st["rows"] if rows is not None
+                        and type(st.get("rows")) is int else None)
+        self.last_scan = {"files_read": len(paths), "files_pruned": pruned,
+                          "rows_read": rows}
         if not paths:
-            # schema only: one dir's footers suffice (inferring over every
-            # data dir made each empty-result probe — e.g. a streaming
-            # dedup probe whose batch range misses all files — an
-            # O(table) metadata scan); with merge_schema the union over
-            # all dirs IS the contract, so that path keeps the full list
+            # schema only: one dir suffices when Spark infers (over every
+            # dir, an empty-result probe would cost an O(table) metadata
+            # scan); with merge_schema the union over all dirs IS the
+            # contract, so that path keeps the full list
             schema = reader.parquet(
                 *(dirs if merge_schema else dirs[:1])).schema
             return spark.createDataFrame([], schema)
@@ -965,7 +1011,8 @@ class SnapshotTable:
                     if d not in base]
         if not new_dirs:
             return None
-        return spark.read.option("mergeSchema", "true").parquet(*new_dirs)
+        return self._reader(spark, new_dirs,
+                            merge_schema=True).parquet(*new_dirs)
 
     def _load_stats(self, d: str) -> dict | None:
         try:

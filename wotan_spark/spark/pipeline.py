@@ -39,7 +39,8 @@ from wotan_spark.spark.blocks import encode_blocks
 from wotan_spark.spark.detrend_op import (AUTO_CHUNK_THRESHOLD,
                                           detrend_rollup_fused,
                                           detrend_sequences)
-from wotan_spark.spark.lakehouse import SnapshotTable, newest_stamped
+from wotan_spark.spark.lakehouse import (TARGET_FILE_ROWS, SnapshotTable,
+                                         newest_stamped)
 from wotan_spark.spark.rollup import cascade_tier, rollup_tier10
 
 
@@ -457,7 +458,7 @@ class Pipeline:
                            "tier10", "tier100", "hist10", "hist100",
                            "distinct10", "distinct100", "topk10",
                            "topk100"),
-                       target_file_rows: int = 1_000_000,
+                       target_file_rows: int = TARGET_FILE_ROWS,
                        cluster_by: str | list[str] | None = "bucket",
                        run_id: str | None = None) -> dict:
         """Maintenance compaction across tier tables (Iceberg
@@ -466,19 +467,21 @@ class Pipeline:
         the bucket column so retention scans and range probes prune whole
         files (a LIST of columns forwards to compact()'s Z-order path for
         tables probed on two dimensions).  Emits a lineage row per
-        rewritten file like any stage."""
+        rewritten file; a table already in that layout is left as is."""
         run_id = run_id or f"compact-{int(time.time())}"
         report: dict[str, dict] = {}
         for name in tables:
             table = self.tables[name]
-            if table.current_snapshot_id() is None:
+            head = table.current_snapshot_id()
+            if head is None:
                 continue
             before = len(table.data_files())
             t0 = time.time()
             sid = table.compact(self.spark, target_file_rows=target_file_rows,
                                 cluster_by=cluster_by, run_id=run_id)
-            self._log_lineage(name, sid, None, run_id, f"compact-{name}",
-                              time.time() - t0)
+            if sid != head:
+                self._log_lineage(name, sid, None, run_id,
+                                  f"compact-{name}", time.time() - t0)
             report[name] = {"files_before": before,
                             "files_after": len(table.data_files()),
                             "snapshot_id": sid}

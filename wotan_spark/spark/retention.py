@@ -22,8 +22,8 @@ from dataclasses import dataclass, field
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
-from wotan_spark.spark.lakehouse import (SnapshotTable, newest_stamped,
-                                         newest_stamped_in)
+from wotan_spark.spark.lakehouse import (TARGET_FILE_ROWS, SnapshotTable,
+                                         newest_stamped, newest_stamped_in)
 
 # upper bound for the where=(bucket, cutoff, hi) pruned read — any real
 # bucket id (token index / factor) sits far below 2^62
@@ -72,7 +72,9 @@ def apply_retention(spark: SparkSession,
                     run_id: str = "retention") -> dict[str, dict]:
     """Enforce ``bucket >= cutoff`` per table as one copy-on-write snapshot
     commit each; returns per-table {dropped, kept, snapshot_id}.  Tables
-    without a cutoff are untouched; old snapshots remain readable."""
+    without a cutoff are untouched; old snapshots remain readable.  The
+    kept rows are written in ``compact(cluster_by=bucket_col)``'s layout,
+    so a compaction right after finds them stamped and skips them."""
     report: dict[str, dict] = {}
     for name, cutoff in cutoffs.items():
         table = tables[name]
@@ -94,8 +96,16 @@ def apply_retention(spark: SparkSession,
         kept_df = table.read(spark,
                              where=(bucket_col, cutoff, _BUCKET_MAX),
                              merge_schema=True)
-        sid = table.overwrite(kept_df, run_id=run_id,
-                              retention_cutoff=cutoff)
+        # sized from the rows of the files the pruned scan reads (an upper
+        # bound on the kept rows): the stamp holds if both need as many
+        scanned = table.last_scan["rows_read"]
+        n_files = max(1, -(-(total if scanned is None else scanned)
+                           // TARGET_FILE_ROWS))
+        sid = table._commit_layout(
+            kept_df, n_files, F.col(bucket_col),
+            {"clustered_by": bucket_col,
+             "target_file_rows": TARGET_FILE_ROWS},
+            {"run_id": run_id, "retention_cutoff": cutoff})
         after = table.stats_summary(sid)
         kept = after[0] if after is not None else kept_df.count()
         report[name] = {"dropped": total - kept, "kept": kept,
