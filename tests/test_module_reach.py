@@ -17,7 +17,7 @@ ROOT_GLOBS = ("__spark_entry__.py", "bench*.py", "perfbench/*.py",
 # Media plumbing that only tests reach; it is still awaiting its own
 # deletion change (ROADMAP direction 4).  The list must match exactly, so a
 # newly unreached module fails and a deleted one must leave the list.
-PENDING_DELETION = ("codecs/jpeg.py", "codecs/png.py", "codecs/wavpcm.py",
+PENDING_DELETION = ("codecs/png.py", "codecs/wavpcm.py",
                     "spark/multimodal.py")
 
 

@@ -3,11 +3,10 @@
 Images/audio/video ride through the engine as ``binary`` columns with a
 metadata struct; decode / feature-extraction / resize / frame-sampling run
 as Arrow-batched ``mapInPandas`` passes.  Decoding goes through a codec
-REGISTRY (``register_decoder``) with four dependency-free built-ins —
+REGISTRY (``register_decoder``) with three dependency-free built-ins —
 ``raw`` (bare samples), ``png`` (real zlib+filters decoder,
-``codecs/png.py``), ``jpeg`` (real baseline-DCT decoder,
-``codecs/jpeg.py``) and ``wav`` (real RIFF/PCM decoder,
-``codecs/wavpcm.py``) — and a user plugs further codecs (MP3, video,
+``codecs/png.py``) and ``wav`` (real RIFF/PCM decoder,
+``codecs/wavpcm.py``) — and a user plugs further codecs (JPEG, MP3, video,
 ...) in without editing engine code: each operator snapshots the
 registry into its closure, so registered decoders ship to executors with
 the plan.
@@ -25,14 +24,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, IntegerType,
                                LongType, StringType, StructField, StructType)
 
-from wotan_spark.codecs.jpeg import decode_jpeg
 from wotan_spark.codecs.png import decode_png, encode_png
 from wotan_spark.codecs.wavpcm import decode_wav, encode_wav
 
 MEDIA_SCHEMA = StructType([
     StructField("media_id", StringType(), False),
     StructField("modality", StringType(), False),   # image | audio | video
-    StructField("codec", StringType(), False),      # raw | jpeg | wav | ...
+    StructField("codec", StringType(), False),      # raw | png | wav | ...
     StructField("width", IntegerType(), True),
     StructField("height", IntegerType(), True),
     StructField("sample_rate", IntegerType(), True),
@@ -100,10 +98,10 @@ def _decode_raw(payload: bytes) -> np.ndarray:
 
 
 # codec name -> callable(payload: bytes) -> flat uint8 sample array.
-# Four dependency-free built-ins ship: ``raw`` plus REAL ``png``
-# (zlib+filters), ``jpeg`` (baseline sequential DCT) and ``wav``
-# (RIFF/PCM) decoders from wotan_spark.codecs.  Further codecs (MP3,
-# video containers, progressive JPEG) plug in via register_decoder
+# Three dependency-free built-ins ship: ``raw`` plus REAL ``png``
+# (zlib+filters) and ``wav`` (RIFF/PCM) decoders from
+# wotan_spark.codecs.  Further codecs (JPEG, MP3, video containers)
+# plug in via register_decoder
 # WITHOUT editing engine code.  Every operator snapshots
 # the registry into its mapInPandas closure at plan-build time, which is
 # what ships decoders to executors — so a decoder must be
@@ -112,15 +110,15 @@ def _decode_raw(payload: bytes) -> np.ndarray:
 # --py-files, while nested/interactive functions ship by value), and a
 # driver-side mutation after a plan is built does not retroactively change
 # that query.
-_BUILTIN_CODECS = frozenset({"raw", "png", "jpeg", "wav"})
+_BUILTIN_CODECS = frozenset({"raw", "png", "wav"})
 _DECODERS: dict = {"raw": _decode_raw, "png": decode_png,
-                   "jpeg": decode_jpeg, "wav": decode_wav}
+                   "wav": decode_wav}
 
 
 def register_decoder(codec: str, fn) -> None:
     """Register a payload decoder for ``codec`` (e.g. a PIL/soundfile
     wrapper returning a flat uint8 array).  Queries built AFTER
-    registration use it; the ``raw``/``png``/``jpeg``/``wav`` built-ins
+    registration use it; the ``raw``/``png``/``wav`` built-ins
     stay the
     dependency-free paths."""
     if not callable(fn):
