@@ -14,11 +14,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ROOT_GLOBS = ("__spark_entry__.py", "bench*.py", "perfbench/*.py",
               "scripts/*.py", "tools/*.py", "wotan_spark/__init__.py",
               "wotan_spark/__main__.py", "wotan_spark/spark/streaming.py")
-# Media plumbing that only tests reach; it is still awaiting its own
-# deletion change (ROADMAP direction 4).  The list must match exactly, so a
-# newly unreached module fails and a deleted one must leave the list.
-PENDING_DELETION = ("codecs/png.py", "codecs/wavpcm.py",
-                    "spark/multimodal.py")
 
 
 def _module_file(base: str, dotted: str) -> str | None:
@@ -97,6 +92,6 @@ def test_every_package_module_is_reached_by_an_entry_point():
     assert modules
     unreached = sorted(os.path.relpath(m, os.path.join(REPO, "wotan_spark"))
                        for m in modules if os.path.abspath(m) not in reached)
-    assert unreached == sorted(PENDING_DELETION), (
+    assert not unreached, (
         "modules no entry point imports (only tests reach them): "
         + ", ".join(unreached))
