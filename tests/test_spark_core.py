@@ -460,18 +460,6 @@ def test_detrend_auto_outputs_kwarg(spark):
         assert np.allclose(a[k], b[k], equal_nan=True)
 
 
-def test_clean_points_drops_negative_inf(spark):
-    """cleaned_array semantics: -inf must be dropped too — the predicate
-    `col < inf` alone keeps it (-inf < inf is true)."""
-    from wotan_spark.spark.ops import clean_points
-
-    rows = [(0.0, 1.0), (1.0, float("nan")), (2.0, float("inf")),
-            (3.0, float("-inf")), (4.0, 2.0), (float("-inf"), 3.0)]
-    df = spark.createDataFrame(rows, "t double, y double")
-    got = sorted(r.t for r in clean_points(df).collect())
-    assert got == [0.0, 4.0]
-
-
 def test_write_sequences_csv_rejects_null_tokens(spark, tmp_path):
     """concat_ws silently SKIPS null array elements, so a null token would
     round-trip as a shorter array than n_tok claims — fail loudly."""

@@ -29,20 +29,6 @@ def _sqdist(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return (a[:, None] - b[None, :]) ** 2
 
 
-def k_rbf(a, b, ls):
-    return np.exp(-0.5 * _sqdist(a, b) / ls ** 2)
-
-
-def k_matern32(a, b, ls):
-    d = np.abs(a[:, None] - b[None, :]) * (np.sqrt(3.0) / ls)
-    return (1.0 + d) * np.exp(-d)
-
-
-def k_expsine(a, b, ls, period):
-    d = np.abs(a[:, None] - b[None, :])
-    return np.exp(-2.0 * (np.sin(np.pi * d / period) ** 2) / ls ** 2)
-
-
 def _tri_solve_lower(L: np.ndarray, b: np.ndarray,
                      block: int = 128) -> np.ndarray:
     """Blocked forward substitution: O(n^2) with BLAS panel updates.

@@ -135,10 +135,6 @@ def m_location_2d(F: np.ndarray, cval: float, kind: str) -> np.ndarray:
     return center
 
 
-def m_location_1d(f: np.ndarray, cval: float, kind: str) -> float:
-    return float(m_location_2d(f[None, :], cval, kind)[0])
-
-
 # ---------------------------------------------------------------------------
 # One-pass estimators
 # ---------------------------------------------------------------------------
@@ -225,13 +221,6 @@ def tau_2d(F: np.ndarray, cval: float) -> np.ndarray:
     den = np.sum(w, axis=1)
     with np.errstate(invalid="ignore", divide="ignore"):
         return nom / den
-
-
-def hodges_1d(f: np.ndarray) -> float:
-    """Hodges-Lehmann-Sen: median of pairwise means with i<=j
-    (wotan/location_estimates.py:137-150). O(n^2) — kept 1-D."""
-    iu = np.triu_indices(len(f))
-    return float(np.median((f[iu[0]] + f[iu[1]]) / 2.0))
 
 
 def hodges_2d(F: np.ndarray) -> np.ndarray:

@@ -9,20 +9,10 @@ from __future__ import annotations
 import numpy as np
 
 
-def clean_pair(t, y) -> tuple[np.ndarray, np.ndarray]:
-    """Drop entries where either value is None/NaN/inf
-    (reference ``cleaned_array``, wotan/helpers.py:11-54 — note it keeps
-    -inf, since its check is only ``value < inf``)."""
-    t = np.asarray(t, dtype=object)
-    y = np.asarray(y, dtype=object)
-    tf = np.array([np.nan if v is None else float(v) for v in t], dtype=np.float64)
-    yf = np.array([np.nan if v is None else float(v) for v in y], dtype=np.float64)
-    ok = ~np.isnan(tf) & ~np.isnan(yf) & (tf < np.inf) & (yf < np.inf)
-    return tf[ok], yf[ok]
-
-
 def clean_pair_fast(t: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """clean_pair for arrays already float64 (no None handling needed)."""
+    """Drop entries where either value is NaN or +inf (reference
+    ``cleaned_array``, wotan/helpers.py:11-54, on float64 arrays — note it
+    keeps -inf, since its check is only ``value < inf``)."""
     ok = ~np.isnan(t) & ~np.isnan(y) & (t < np.inf) & (y < np.inf)
     return t[ok], y[ok]
 

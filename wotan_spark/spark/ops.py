@@ -1,5 +1,4 @@
-"""Column-level and packed utility operators: slide_clip, transit_mask, t14,
-validity cleaning.
+"""Column-level and packed utility operators: slide_clip, transit_mask, t14.
 """
 
 from __future__ import annotations
@@ -34,17 +33,6 @@ def t14_col(R_s: Column, M_s: Column, P: Column,
             * F.pow((4 * P * c.SECONDS_PER_DAY)
                     / (float(np.pi) * c.G * c.M_SUN * M_s), 1.0 / 3.0)
             ) / c.SECONDS_PER_DAY
-
-
-def clean_points(df: DataFrame, t: str = "t", y: str = "y") -> DataFrame:
-    """Validity filter (reference cleaned_array, wotan/helpers.py:11-54):
-    drop NULL/NaN/inf rows.  Catalyst predicate — pushed to the scan."""
-    def ok(c):
-        col = F.col(c)
-        # abs() < inf: `col < inf` alone KEEPS -inf (-inf < inf is true)
-        return (col.isNotNull() & ~F.isnan(col)
-                & (F.abs(col) < F.lit(float("inf"))))
-    return df.filter(ok(t) & ok(y))
 
 
 def slide_clip_sequences(df: DataFrame, window_length: float, low: float = 3,
