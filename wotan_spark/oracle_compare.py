@@ -8,9 +8,11 @@ canonicalization fix lands in both at once (two hand-rolled copies drifted
 subtly before round 5b).
 
 Semantics (stricter than the external driver's order-insensitive value
-hash): row count, column-name sets, then per-column value equality after
-canonical sorting — exact for ints/strings/bools, 1e-9 rel/abs for floats
-(NaN == NaN), element-wise recursion for list/array cells.
+hash): row count, column-name sets, no column that is integer on one side
+and float on the other, then per-column value equality after canonical
+sorting — exact for ints/strings/bools, 1e-9 rel/abs for floats
+(NaN == NaN), element-wise recursion for list/array cells.  Integer width
+is not compared: the driver accepts Spark int32 against a BIGINT oracle.
 """
 from __future__ import annotations
 
@@ -84,6 +86,10 @@ def compare(name: str, got: pd.DataFrame, want: pd.DataFrame,
         f"{name}: columns {sorted(got.columns)} != {sorted(want.columns)}"
     got, want = canon(got), canon(want)
     for c in got.columns:
+        # int 1 == float 1.0 below, but the driver hashes them apart
+        kinds = {got[c].dtype.kind, want[c].dtype.kind}
+        assert not ("f" in kinds and kinds & {"i", "u"}), \
+            f"{name}.{c}: dtype {got[c].dtype} != oracle {want[c].dtype}"
         a, b = got[c].to_numpy(), want[c].to_numpy()
         # vectorized fast path for purely-numeric columns
         if np.issubdtype(got[c].dtype, np.floating) or \
