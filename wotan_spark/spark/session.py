@@ -55,9 +55,11 @@ def get_spark(app_name: str = "wotan-spark", cores: int | None = None,
         builder = builder.config("spark.executorEnv.PYTHONPATH", pythonpath)
     # see shipping.EXCLUDED_OPTIMIZER_RULES: InferFiltersFromGenerate
     # re-evaluates computed explode arrays 2 extra times per row
-    from wotan_spark.spark.shipping import EXCLUDED_OPTIMIZER_RULES
+    from wotan_spark.spark.shipping import (EXCLUDED_OPTIMIZER_RULES,
+                                            RANGE_SAMPLE_PER_PARTITION)
     builder = builder.config("spark.sql.optimizer.excludedRules",
                              EXCLUDED_OPTIMIZER_RULES)
+    builder = builder.config(*RANGE_SAMPLE_PER_PARTITION)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

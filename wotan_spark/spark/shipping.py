@@ -54,6 +54,13 @@ def build_pyfiles_zip(dest: str | None = None) -> str:
 # arrays), so excluding it is always semantics-preserving.
 EXCLUDED_OPTIMIZER_RULES = \
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+# Rows sampled per output partition for range-exchange bounds (Spark: 100).
+# Compaction cuts its files with repartitionByRange; at 100 the bounds move
+# from run to run, so the same table compacts to different files.  At 1,000
+# a table of up to ~3,000 rows per output file is sampled whole (exact,
+# repeatable bounds), and a larger one is still only sampled.
+RANGE_SAMPLE_PER_PARTITION = (
+    "spark.sql.execution.rangeExchange.sampleSizePerPartition", "1000")
 
 
 def tune_session(spark: SparkSession) -> None:
@@ -62,6 +69,7 @@ def tune_session(spark: SparkSession) -> None:
     try:
         spark.conf.set("spark.sql.optimizer.excludedRules",
                        EXCLUDED_OPTIMIZER_RULES)
+        spark.conf.set(*RANGE_SAMPLE_PER_PARTITION)
     except Exception:
         pass  # conf locked down: plans stay correct, just slower
     try:
