@@ -1,11 +1,6 @@
-"""Dependency-free real media codecs (round-5 verdict item 2): pure
-zlib/struct PNG + RIFF/PCM WAV built-ins behind the multimodal registry.
-
-The pinned invariant: ``synth_media(container=True)`` wraps the SAME
-deterministic samples in real containers, so every decoded byte must match
-the ``container=False`` raw payloads — and the full multimodal surface
-(extract_features, dedup_media_exact, frame_sample, resize_media) runs
-end-to-end on real PNG/WAV payloads with no imports beyond the stdlib."""
+"""Dependency-free PNG codec: pure round-trips over every filter and color
+type, the error ladder, palette and low-bit-depth decoding, and bit-exact
+interop with Java ImageIO through Spark's image source."""
 
 from __future__ import annotations
 
@@ -16,12 +11,6 @@ import numpy as np
 import pytest
 
 from wotan_spark.codecs.png import decode_png, encode_png, parse_png
-from wotan_spark.codecs.wavpcm import decode_wav, encode_wav, parse_wav
-from wotan_spark.spark.multimodal import (dedup_media_exact,
-                                          extract_features, frame_sample,
-                                          register_decoder,
-                                          registered_codecs, resize_media,
-                                          synth_media, unregister_decoder)
 
 
 # ---------------------------------------------------------------------------
@@ -90,204 +79,6 @@ def test_png_rejects_bad_inputs():
         encode_png(px, channels=5)
 
 
-# ---------------------------------------------------------------------------
-# WAV pure round-trips
-# ---------------------------------------------------------------------------
-
-def test_wav_roundtrip_8bit():
-    rng = np.random.default_rng(11)
-    samples = rng.integers(0, 256, 501, dtype=np.uint8)   # odd: pad byte
-    payload = encode_wav(samples, sample_rate=8000, channels=1, bits=8)
-    got, rate, ch, bits = parse_wav(payload)
-    assert (rate, ch, bits) == (8000, 1, 8)
-    np.testing.assert_array_equal(got, samples)
-    np.testing.assert_array_equal(decode_wav(payload), samples)
-
-
-def test_wav_roundtrip_16bit_stereo():
-    rng = np.random.default_rng(13)
-    samples = rng.integers(-32768, 32768, 400).astype(np.int16)
-    payload = encode_wav(samples, sample_rate=44100, channels=2, bits=16)
-    got, rate, ch, bits = parse_wav(payload)
-    assert (rate, ch, bits) == (44100, 2, 16)
-    np.testing.assert_array_equal(got, samples)
-    # registry shape: top byte rebased to unsigned uint8
-    expect = ((samples.astype(np.int32) + 32768) >> 8).astype(np.uint8)
-    np.testing.assert_array_equal(decode_wav(payload), expect)
-
-
-def test_wav_rejects_bad_inputs():
-    with pytest.raises(ValueError, match="RIFF"):
-        parse_wav(b"RIFXbadpayload")
-    good = encode_wav(np.zeros(8, dtype=np.uint8))
-    # format tag 3 (IEEE float): fmt chunk starts at byte 20
-    bad = bytearray(good)
-    bad[20] = 3
-    with pytest.raises(ValueError, match="format tag"):
-        parse_wav(bytes(bad))
-    with pytest.raises(ValueError, match="truncated"):
-        parse_wav(good[:-4])
-    with pytest.raises(ValueError, match="unsupported"):
-        encode_wav(np.zeros(8), bits=24)
-
-
-# ---------------------------------------------------------------------------
-# Registry + Spark end-to-end over REAL container payloads
-# ---------------------------------------------------------------------------
-
-def test_builtin_codecs_registered_and_protected():
-    assert set(registered_codecs()) >= {"raw", "png", "jpeg", "wav"}
-    for codec in ("raw", "png", "jpeg", "wav"):
-        with pytest.raises(ValueError, match="cannot be replaced"):
-            register_decoder(codec, lambda b: b)
-        with pytest.raises(ValueError, match="cannot be removed"):
-            unregister_decoder(codec)
-
-
-def test_synth_container_decodes_to_raw_content(spark):
-    """The container invariant: PNG/WAV payloads decode to exactly the
-    bytes the raw mode emits (all five PNG filter types are exercised —
-    synth rotates filter_type = i % 5)."""
-    raw = {r.media_id: bytes(r.payload)
-           for r in synth_media(spark, 12).collect()}
-    for r in synth_media(spark, 12, container=True).collect():
-        payload = bytes(r.payload)
-        if r.codec == "png":
-            decoded = decode_png(payload)
-            assert payload[:4] == b"\x89PNG"
-        else:
-            assert r.codec == "wav"
-            decoded = decode_wav(payload)
-            assert payload[:4] == b"RIFF"
-        np.testing.assert_array_equal(
-            decoded, np.frombuffer(raw[r.media_id], dtype=np.uint8))
-
-
-def test_extract_features_on_real_containers(spark):
-    """Round-5 done criterion: a real PNG byte payload decodes through
-    extract_features on executors.  Features are computed on DECODED
-    samples, so they must equal the raw-mode features even though the
-    container bytes (and sha1/n_bytes) differ."""
-    raw_feats = {r.media_id: list(r.features)
-                 for r in extract_features(synth_media(spark, 16))
-                 .collect()}
-    cont = extract_features(synth_media(spark, 16, container=True)) \
-        .collect()
-    assert len(cont) == 16
-    for r in cont:
-        np.testing.assert_allclose(list(r.features),
-                                   raw_feats[r.media_id], rtol=1e-12)
-
-
-def test_dedup_media_exact_on_real_containers(spark):
-    """Identical pixel content encoded identically dedups on content
-    hash: duplicate the container table and every sha1 bucket has 2."""
-    media = synth_media(spark, 10, container=True)
-    dups = dedup_media_exact(media.union(media)).collect()
-    assert len(dups) == 10
-    assert all(r.dup_count == 2 for r in dups)
-
-
-def test_frame_sample_and_resize_transcode_containers_to_raw(spark):
-    """frame_sample/resize_media emit decoded samples; on container
-    inputs the output codec flips to raw and the bytes match what the
-    raw-mode pipeline produces."""
-    raw_media = synth_media(spark, 10)
-    cont_media = synth_media(spark, 10, container=True)
-
-    want = {r.media_id: bytes(r.payload)
-            for r in frame_sample(raw_media.filter("modality = 'audio'"),
-                                  every=4).collect()}
-    for r in frame_sample(cont_media.filter("modality = 'audio'"),
-                          every=4).collect():
-        assert r.codec == "raw"
-        assert bytes(r.payload) == want[r.media_id]
-
-    want = {r.media_id: bytes(r.payload)
-            for r in resize_media(raw_media, 8, 8).collect()}
-    for r in resize_media(cont_media, 8, 8).collect():
-        if r.modality == "image":
-            assert r.codec == "raw"
-            assert bytes(r.payload) == want[r.media_id]
-        else:
-            assert r.codec == "wav"   # non-image rows pass through
-
-
-def test_frame_sample_passes_images_through(spark):
-    """frame_sample decimates audio/video only: an image row passes
-    through byte-identical (codec, payload, metadata) — decimating raster
-    rows while width/height survive would emit a payload whose length
-    contradicts w*h and crash the next consumer (e.g. resize_media)."""
-    media = synth_media(spark, 10)
-    orig = {r.media_id: r for r in media.collect()}
-    out = {r.media_id: r for r in frame_sample(media, every=4).collect()}
-    n_img = 0
-    for mid, r in out.items():
-        if orig[mid].modality == "image":
-            n_img += 1
-            assert bytes(r.payload) == bytes(orig[mid].payload)
-            assert r.codec == orig[mid].codec
-            assert (r.width, r.height) == (orig[mid].width,
-                                           orig[mid].height)
-    assert n_img > 0
-    # the combined pipe that used to crash: sample then resize
-    resized = resize_media(frame_sample(media, every=4), 8, 8)
-    got = {r.media_id: r for r in resized.collect()}
-    for mid, r in got.items():
-        if orig[mid].modality == "image":
-            assert len(bytes(r.payload)) == 64
-
-
-def test_resize_media_rgb_payload(spark):
-    """resize_media must handle multi-channel images — the built-in PNG
-    decoder itself emits h*w*3 samples for RGB (a (h, w) reshape crashed
-    the whole Arrow batch)."""
-    import numpy as np
-    import pandas as pd
-
-    from wotan_spark.codecs.png import encode_png
-    from wotan_spark.spark.multimodal import MEDIA_SCHEMA, resize_media
-
-    h, w = 6, 5
-    px = (np.arange(h * w * 3, dtype=np.uint8)).reshape(h, w * 3)
-    row = ("m-rgb", "image", "png", w, h, None, None,
-           bytearray(encode_png(px, channels=3)))
-    media = spark.createDataFrame(
-        pd.DataFrame([row], columns=[f.name for f in MEDIA_SCHEMA.fields]),
-        schema=MEDIA_SCHEMA)
-    out = resize_media(media, out_w=3, out_h=2).collect()[0]
-    assert out.width == 3 and out.height == 2 and out.codec == "raw"
-    got = np.frombuffer(bytes(out.payload), dtype=np.uint8)
-    assert got.size == 2 * 3 * 3                      # h*w*channels
-    img = px.reshape(h, w, 3)
-    yi = (np.arange(2) * h) // 2
-    xi = (np.arange(3) * w) // 3
-    assert (got.reshape(2, 3, 3) == img[np.ix_(yi, xi)]).all()
-
-
-def test_frame_sample_audio_metadata_consistent(spark):
-    """Audio decimation must (a) keep whole FRAMES when n_frames divides
-    the payload (a flat stride scrambles interleaved channels) and
-    (b) divide the stored sample_rate — unchanged metadata made every
-    downstream duration computation wrong by `every`."""
-    import numpy as np
-    import pandas as pd
-
-    from wotan_spark.spark.multimodal import MEDIA_SCHEMA, frame_sample
-
-    arr = np.arange(16, dtype=np.uint8)     # 8 frames x 2 channels
-    row = ("m-au", "audio", "raw", None, None, 8000, 8,
-           bytearray(arr.tobytes()))
-    media = spark.createDataFrame(
-        pd.DataFrame([row], columns=[f.name for f in MEDIA_SCHEMA.fields]),
-        schema=MEDIA_SCHEMA)
-    out = frame_sample(media, every=2).collect()[0]
-    got = np.frombuffer(bytes(out.payload), dtype=np.uint8)
-    # frames 0,2,4,6 kept WHOLE (channel pairs intact)
-    assert got.tolist() == [0, 1, 4, 5, 8, 9, 12, 13]
-    assert out.n_frames == 4
-    assert out.sample_rate == 4000
-
 
 def test_encode_png_accepts_flat_array():
     import numpy as np
@@ -299,222 +90,6 @@ def test_encode_png_accepts_flat_array():
     assert (out == flat).all()
 
 
-# ---------------------------------------------------------------------------
-# JPEG (baseline sequential DCT) round-trips and error ladder
-# ---------------------------------------------------------------------------
-
-def test_jpeg_flat_image_near_exact():
-    from wotan_spark.codecs.jpeg import encode_jpeg, parse_jpeg
-    flat = np.full((16, 24), 130, dtype=np.uint8)
-    px, w, h, c = parse_jpeg(encode_jpeg(flat, channels=1, quality=90))
-    assert (w, h, c) == (24, 16, 1)
-    assert np.abs(px.astype(int) - 130).max() <= 1
-
-
-def test_jpeg_gradient_odd_size_bounded_error():
-    """Non-multiple-of-8 dims exercise the pad/crop path; a smooth ramp
-    must survive high-quality coding within a couple of levels."""
-    from wotan_spark.codecs.jpeg import encode_jpeg, parse_jpeg
-    g = np.add.outer(np.arange(13) * 3, np.arange(21) * 2).astype(np.uint8)
-    px, w, h, c = parse_jpeg(encode_jpeg(g, channels=1, quality=95))
-    assert (w, h, c) == (21, 13, 1)
-    assert np.abs(px.astype(int) - g.astype(int)).max() <= 2
-
-
-def test_jpeg_rgb_444_and_420_with_restarts():
-    from wotan_spark.codecs.jpeg import encode_jpeg, parse_jpeg
-    rgb = np.zeros((10, 18, 3), np.uint8)
-    rgb[..., 0] = np.linspace(0, 255, 18, dtype=np.uint8)
-    rgb[..., 1] = 80
-    rgb[..., 2] = 200
-    flat = rgb.reshape(10, 54)
-    px, w, h, c = parse_jpeg(encode_jpeg(flat, channels=3, quality=95))
-    assert (w, h, c) == (18, 10, 3)
-    assert np.abs(px.astype(int) - flat.astype(int)).max() <= 2
-    # 4:2:0 subsampling + a restart marker every MCU: looser chroma bound,
-    # and the decode must consume every RSTn and reset DC predictors
-    enc = encode_jpeg(flat, channels=3, quality=95, subsampling="420",
-                      restart_interval=1)
-    assert b"\xff\xdd" in enc and b"\xff\xd0" in enc
-    px, w, h, c = parse_jpeg(enc)
-    assert (w, h, c) == (18, 10, 3)
-    assert np.abs(px.astype(int) - flat.astype(int)).max() <= 12
-
-
-def test_jpeg_quality_knob_monotonic():
-    """Higher quality -> bigger file and no worse reconstruction on a
-    deterministic textured image."""
-    from wotan_spark.codecs.jpeg import decode_jpeg, encode_jpeg
-    rng = np.random.default_rng(11)
-    img = (rng.integers(0, 64, (24, 24)).cumsum(axis=1) % 256) \
-        .astype(np.uint8)
-    sizes, errs = [], []
-    for q in (25, 75, 95):
-        enc = encode_jpeg(img, quality=q)
-        sizes.append(len(enc))
-        d = decode_jpeg(enc).astype(int)
-        errs.append(np.abs(d - img.reshape(-1).astype(int)).mean())
-    assert sizes[0] < sizes[1] < sizes[2], sizes
-    assert errs[0] >= errs[1] >= errs[2], errs
-
-
-def test_jpeg_rejects_bad_inputs():
-    from wotan_spark.codecs.jpeg import encode_jpeg, parse_jpeg
-    good = encode_jpeg(np.zeros((8, 8), np.uint8))
-    with pytest.raises(ValueError, match="signature"):
-        parse_jpeg(b"\x89PNG" + good[2:])
-    with pytest.raises(ValueError, match="SOF marker"):
-        # flip baseline SOF0 to progressive SOF2
-        parse_jpeg(good.replace(b"\xff\xc0", b"\xff\xc2", 1))
-    with pytest.raises(ValueError, match="16-bit quantization"):
-        i = good.index(b"\xff\xdb") + 4
-        parse_jpeg(good[:i] + bytes([good[i] | 0x10]) + good[i + 1:])
-    with pytest.raises(ValueError, match="truncated|unexpected marker"):
-        parse_jpeg(good[:len(good) // 2])
-    with pytest.raises(ValueError, match="channels"):
-        encode_jpeg(np.zeros((8, 16), np.uint8), channels=2)
-    with pytest.raises(ValueError, match="subsampling"):
-        encode_jpeg(np.zeros((8, 24), np.uint8), channels=3,
-                    subsampling="422")
-
-
-def test_jpeg_through_multimodal_registry(spark):
-    """End-to-end: a REAL JPEG payload decodes on executors through
-    extract_features, and resize_media transcodes it to raw samples whose
-    bytes match resizing the original pixels."""
-    from wotan_spark.codecs.jpeg import encode_jpeg
-    from wotan_spark.spark.multimodal import MEDIA_SCHEMA
-    g = np.add.outer(np.arange(16) * 5, np.arange(16) * 7) \
-        .astype(np.uint8)
-    row = [("jpg_000001", "image", "jpeg", 16, 16, None, None,
-            bytearray(encode_jpeg(g, channels=1, quality=95)))]
-    media = spark.createDataFrame(row, MEDIA_SCHEMA)
-    feats = extract_features(media).collect()
-    assert len(feats) == 1 and feats[0].features is not None
-    out = resize_media(media, out_w=8, out_h=8).collect()[0]
-    assert out.codec == "raw" and (out.width, out.height) == (8, 8)
-    assert len(bytes(out.payload)) == 64
-
-
-def test_jpeg_property_roundtrip_bounded_error():
-    """Property round-trip over random sizes / channels / quality /
-    subsampling / restart intervals: dimensions and channels always
-    survive exactly, and on a SMOOTH image (JPEG's design domain) the
-    per-pixel error stays bounded at high quality."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-    from wotan_spark.codecs.jpeg import encode_jpeg, parse_jpeg
-
-    @settings(max_examples=25, deadline=None)
-    @given(st.integers(1, 33), st.integers(1, 33),
-           st.sampled_from([1, 3]), st.sampled_from(["444", "420"]),
-           st.integers(0, 3), st.integers(0, 10_000))
-    def run(h, w, channels, sub, rst, seed):
-        rng = np.random.default_rng(seed)
-        # genuinely smooth: a plane scaled into [16, 240] — a % wrap
-        # would inject sawtooth step edges whose ringing legitimately
-        # exceeds any tight bound (that is JPEG behaving correctly)
-        base = np.add.outer(np.arange(h) * float(rng.integers(1, 4)),
-                            np.arange(w) * float(rng.integers(1, 4)))
-        base = 16 + base * (224.0 / max(base.max(), 1.0))
-        px = np.repeat(base[:, :, None], channels, axis=2) \
-            .reshape(h, w * channels).astype(np.uint8)
-        enc = encode_jpeg(px, channels=channels, quality=95,
-                          subsampling=sub, restart_interval=rst)
-        got, gw, gh, gc = parse_jpeg(enc)
-        assert (gw, gh, gc) == (w, h, channels)
-        err = np.abs(got.astype(int) - px.astype(int)).max()
-        # gray content: chroma planes are flat, so 4:2:0 loses nothing
-        # beyond DCT rounding; smooth ramps stay within a few levels
-        assert err <= 6, (h, w, channels, sub, rst, err)
-
-    run()
-
-
-def test_jpeg_review_fixes_spec_conformance():
-    """Round-5e review findings: pad bits are 1s (B.1.1.5), 0xFF fill
-    bytes before markers are legal (B.1.1.2), a grayscale SOF declaring
-    2x2 sampling decodes over the component's own 8px block grid
-    (A.2.2), and a scan covering fewer components than the frame raises
-    instead of silently returning a partial decode."""
-    import struct as _struct
-    from wotan_spark.codecs.jpeg import (_BitWriter, encode_jpeg,
-                                         parse_jpeg)
-
-    # pad-with-1s: one 0 bit flushes to 0b01111111
-    wtr = _BitWriter()
-    wtr.put(0, 1)
-    wtr.flush()
-    assert bytes(wtr.out) == b"\x7f", bytes(wtr.out)
-
-    g = np.add.outer(np.arange(12) * 5, np.arange(18) * 3) \
-        .astype(np.uint8)
-    good = encode_jpeg(g, channels=1, quality=95)
-    want, w, h, c = parse_jpeg(good)
-
-    # 0xFF fill bytes before a marker are tolerated
-    filled = good.replace(b"\xff\xc0", b"\xff\xff\xff\xc0", 1)
-    got, gw, gh, gc = parse_jpeg(filled)
-    assert (gw, gh, gc) == (w, h, c)
-    np.testing.assert_array_equal(got, want)
-
-    # grayscale SOF declaring 2x2 sampling: single-component scans are
-    # non-interleaved, so the block layout is identical to 1x1
-    i = good.index(b"\xff\xc0")
-    assert good[i + 11] == 0x11
-    patched = good[:i + 11] + b"\x22" + good[i + 12:]
-    got, gw, gh, gc = parse_jpeg(patched)
-    assert (gw, gh, gc) == (w, h, c)
-    np.testing.assert_array_equal(got, want)
-
-    # a 3-component frame whose scan lists one component must raise
-    rgb = np.zeros((8, 24), np.uint8)
-    cgood = encode_jpeg(rgb, channels=3, quality=90)
-    j = cgood.index(b"\xff\xda")
-    sos1 = b"\xff\xda" + _struct.pack(">H", 8) + bytes([1, 1, 0, 0, 63, 0])
-    partial = cgood[:j] + sos1 + cgood[j + 14:]
-    with pytest.raises(ValueError, match="multi-scan"):
-        parse_jpeg(partial)
-
-
-def test_jpeg_decoder_interop_vs_spark_image_source(spark):
-    """INDEPENDENT-decoder cross-validation: Spark's image data source
-    decodes via Java ImageIO; our pure-Python decoder must agree
-    near-pixel-exactly on Spark's own bundled real-world JPEGs (libjpeg
-    4:2:0 color photos — sampling, Huffman, IDCT and upsampling all
-    exercised by files we did not produce).  The bundled progressive
-    file raises the documented loud error."""
-    import glob
-    import os
-    from wotan_spark.codecs.jpeg import parse_jpeg
-
-    root = "/opt/spark-4.1.2-bin-hadoop3/data/mllib/images/origin/kittens"
-    if not os.path.isdir(root):
-        pytest.skip("Spark example images not present")
-    rows = (spark.read.format("image").load(root)
-            .select("image.origin", "image.width", "image.height",
-                    "image.nChannels", "image.data").collect())
-    checked = 0
-    for r in rows:
-        path = r.origin.replace("file:", "")
-        if not path.endswith(".jpg"):
-            continue
-        ours, w, h, c = parse_jpeg(open(path, "rb").read())
-        assert (w, h, c) == (r.width, r.height, r.nChannels), path
-        ref = np.frombuffer(bytes(r.data), dtype=np.uint8) \
-            .reshape(r.height, r.width, r.nChannels)[:, :, ::-1]  # BGR
-        diff = np.abs(ours.reshape(h, w, c).astype(int)
-                      - ref.astype(int))
-        assert diff.mean() <= 1.0, (path, diff.mean())
-        assert np.percentile(diff, 99) <= 4, (path, np.percentile(diff, 99))
-        checked += 1
-    assert checked >= 3, "expected several bundled JPEGs"
-
-    prog = ("/opt/spark-4.1.2-bin-hadoop3/data/mllib/images/origin/"
-            "multi-channel/grayscale.jpg")
-    if os.path.exists(prog):
-        with pytest.raises(ValueError, match="SOF marker"):
-            parse_jpeg(open(prog, "rb").read())
 
 
 def test_png_decoder_interop_vs_spark_image_source(spark, tmp_path):

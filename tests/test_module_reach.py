@@ -2,8 +2,9 @@
 ``def``/``class`` in it, must be reached by an entry point — the driver
 contract, a bench, a script or tool, the package itself, or the DEPLOY.md
 streaming entry.  Both checks are static (stdlib ``ast``, no Spark): a
-module reached only by tests, or a public def that no file of the entry
-points' import closure names, fails and is named in the message."""
+module reached only by tests (unless it is on ``PENDING_DELETION``), or a
+public def that no file of the entry points' import closure names, fails
+and is named in the message."""
 
 from __future__ import annotations
 
@@ -16,6 +17,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ROOT_GLOBS = ("__spark_entry__.py", "bench*.py", "perfbench/*.py",
               "scripts/*.py", "tools/*.py", "wotan_spark/__init__.py",
               "wotan_spark/__main__.py", "wotan_spark/spark/streaming.py")
+# Modules no entry point imports, kept only until their tests are retired
+# (a module listed here is exempt from the def rule below).  The set must
+# match exactly: deleting a module means taking it off the list.
+PENDING_DELETION = {
+    "codecs/png.py",    # last media codec; its 27 test items go with it
+}
 # Public defs no entry point names, each kept for the reason beside it.
 # The set must match exactly: a newly unreached def fails, and a deleted or
 # newly reached one must leave the set.
@@ -122,9 +129,11 @@ def test_every_package_module_is_reached_by_an_entry_point():
     assert modules
     unreached = sorted(os.path.relpath(m, os.path.join(REPO, "wotan_spark"))
                        for m in modules if os.path.abspath(m) not in reached)
-    assert not unreached, (
+    assert set(unreached) == PENDING_DELETION, (
         "modules no entry point imports (only tests reach them): "
-        + ", ".join(unreached))
+        + ", ".join(sorted(set(unreached) - PENDING_DELETION))
+        + "; pending deletion but reached or gone: "
+        + ", ".join(sorted(PENDING_DELETION - set(unreached))))
 
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -165,6 +174,8 @@ def test_every_public_def_is_reached_by_an_entry_point():
     pkg = os.path.join(REPO, "wotan_spark")
     unreached = set()
     for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        if os.path.relpath(path, pkg) in PENDING_DELETION:
+            continue
         for top in _parse(path).body:
             if (isinstance(top, _DEFS) and not top.name.startswith("_")
                     and top.name not in refs):

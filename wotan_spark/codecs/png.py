@@ -1,19 +1,16 @@
 """Dependency-free PNG codec (stdlib ``zlib``/``struct`` + NumPy).
 
-A minimal, real decoder for the multimodal registry: 8-bit-depth,
-non-interlaced PNG with color types 0 (grayscale), 2 (RGB), 4 (gray+alpha)
-and 6 (RGBA), all five scanline filters (None/Sub/Up/Average/Paeth).
-Palette (type 3), 1/2/4/16-bit depths and Adam7 interlacing raise loudly —
-this is the dependency-free built-in, not a libpng replacement; a full
-codec plugs in via ``register_decoder`` without touching engine code.
+A minimal, real decoder: non-interlaced PNG with color types 0 (grayscale),
+2 (RGB), 3 (palette, expanded to RGB or RGBA through PLTE/tRNS),
+4 (gray+alpha) and 6 (RGBA), 1/2/4-bit grayscale and palette depths, and
+all five scanline filters (None/Sub/Up/Average/Paeth).  16-bit depths and
+Adam7 interlacing raise loudly: this is not a libpng replacement.
 
-The matching encoder exists so tests and ``synth_media`` can produce REAL
-container payloads in a sandbox with no media libraries; it can filter each
-scanline with a caller-chosen type, which is what exercises every unfilter
-path end-to-end.
+The matching encoder filters each scanline with a caller-chosen type, which
+is what exercises every unfilter path end-to-end.
 
-No reference counterpart: the reference engine (hippke/wotan) has no media
-handling; this backs the training-data-pipeline multimodal surface.
+No entry point imports this module; it is the last of the media codecs
+pending deletion (see ``tests/test_module_reach.py``).
 """
 
 from __future__ import annotations
@@ -24,7 +21,7 @@ import zlib
 import numpy as np
 
 _SIGNATURE = b"\x89PNG\r\n\x1a\n"
-# color type -> channel count (palette type 3 unsupported)
+# color type -> channel count (palette type 3 is expanded separately)
 _CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
 
 
