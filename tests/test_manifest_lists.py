@@ -346,6 +346,29 @@ def test_scans_over_uniform_dirs_start_no_spark_job(spark, tmp_path):
         assert _jobs_started(spark, f"merge-{tmp_path.name}", merge) == []
 
 
+def test_scans_over_many_dirs_start_no_listing_job(spark, tmp_path):
+    """Past Spark's default of 32 paths a scan lists its files in a
+    distributed job; engine sessions raise that threshold, so a read over
+    33 or 40 appended dirs, plain or with ``where``, starts no job."""
+    t, rows = _mk(spark, tmp_path)
+    for i in range(40):
+        t.append(rows(i, i + 1))
+        n_dirs = i + 1
+        if n_dirs not in (33, 40):
+            continue
+        assert len(t._manifest(t.current_snapshot_id())["files"]) == n_dirs
+        frames = {}
+
+        def build():
+            frames["plain"] = t.read(spark)
+            frames["where"] = t.read(spark, where=("id", 0, 10 ** 6))
+
+        group = f"listing-{n_dirs}-{tmp_path.name}"
+        assert _jobs_started(spark, group, build) == [], n_dirs
+        assert frames["plain"].count() == n_dirs
+        assert frames["where"].count() == n_dirs
+
+
 def test_scan_schema_falls_back_to_inference(spark, tmp_path):
     """Dirs whose footers disagree (schema evolution), a dir written
     without Spark, or a footer that cannot be read: the scan infers its

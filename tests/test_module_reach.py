@@ -2,9 +2,11 @@
 ``def``/``class`` in it, must be reached by an entry point — the driver
 contract, a bench, a script or tool, the package itself, or the DEPLOY.md
 streaming entry.  Both checks are static (stdlib ``ast``, no Spark): a
-module reached only by tests (unless it is on ``PENDING_DELETION``), or a
-public def that no file of the entry points' import closure names, fails
-and is named in the message."""
+module reached only by tests, or a public def that no file of the entry
+points' import closure names, fails and is named in the message.  A third
+census holds the Python UDF call sites per file to an exact count, so a
+new hand-rolled per-series pass fails instead of bypassing
+``spark/packed.py``."""
 
 from __future__ import annotations
 
@@ -17,12 +19,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ROOT_GLOBS = ("__spark_entry__.py", "bench*.py", "perfbench/*.py",
               "scripts/*.py", "tools/*.py", "wotan_spark/__init__.py",
               "wotan_spark/__main__.py", "wotan_spark/spark/streaming.py")
-# Modules no entry point imports, kept only until their tests are retired
-# (a module listed here is exempt from the def rule below).  The set must
-# match exactly: deleting a module means taking it off the list.
-PENDING_DELETION = {
-    "codecs/png.py",    # last media codec; its 27 test items go with it
-}
 # Public defs no entry point names, each kept for the reason beside it.
 # The set must match exactly: a newly unreached def fails, and a deleted or
 # newly reached one must leave the set.
@@ -43,7 +39,6 @@ UNREACHED_DEFS = {
     # Tested public helpers that engine docstrings point users to.
     "spark/datapipe.py::bucket_size_stats",   # audit before max_bucket
     "spark/datapipe.py::clear_block_caches",  # release the block-cache LRU
-    "spark/gapfill.py::gapfill_sequences",    # packed twin of resample_ffill
     "spark/sources.py::write_sequences",      # writer twin of read_sequences
 }
 
@@ -129,11 +124,9 @@ def test_every_package_module_is_reached_by_an_entry_point():
     assert modules
     unreached = sorted(os.path.relpath(m, os.path.join(REPO, "wotan_spark"))
                        for m in modules if os.path.abspath(m) not in reached)
-    assert set(unreached) == PENDING_DELETION, (
+    assert not unreached, (
         "modules no entry point imports (only tests reach them): "
-        + ", ".join(sorted(set(unreached) - PENDING_DELETION))
-        + "; pending deletion but reached or gone: "
-        + ", ".join(sorted(PENDING_DELETION - set(unreached))))
+        + ", ".join(unreached))
 
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -174,8 +167,6 @@ def test_every_public_def_is_reached_by_an_entry_point():
     pkg = os.path.join(REPO, "wotan_spark")
     unreached = set()
     for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
-        if os.path.relpath(path, pkg) in PENDING_DELETION:
-            continue
         for top in _parse(path).body:
             if (isinstance(top, _DEFS) and not top.name.startswith("_")
                     and top.name not in refs):
@@ -185,3 +176,34 @@ def test_every_public_def_is_reached_by_an_entry_point():
         + ", ".join(sorted(unreached - UNREACHED_DEFS))
         + "; allowlisted but reached or gone: "
         + ", ".join(sorted(UNREACHED_DEFS - unreached)))
+
+
+# Python UDF call sites per file.  Every per-series pass over the packed
+# tables goes through ``packed.packed_map``; the rest are the grouped
+# reassembly and long-form detrend (detrend_op), the row generator (synth)
+# and the embedding scorers (datapipe).  The dict must match exactly.
+UDF_SITES = {
+    "spark/packed.py": 1,
+    "spark/detrend_op.py": 2,
+    "spark/synth.py": 1,
+    "spark/datapipe.py": 8,
+}
+_UDF_METHODS = {"mapInPandas", "applyInPandas", "mapInArrow"}
+
+
+def test_python_udf_call_sites_per_file():
+    pkg = os.path.join(REPO, "wotan_spark")
+    found = {}
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        n = sum(isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _UDF_METHODS
+                for node in ast.walk(_parse(path)))
+        if n:
+            found[os.path.relpath(path, pkg)] = n
+    assert found == UDF_SITES, (
+        "Python UDF call sites per file differ (a per-series pass belongs "
+        "on packed.packed_map): "
+        + ", ".join(f"{f}: {found.get(f, 0)} (expected {UDF_SITES.get(f, 0)})"
+                    for f in sorted(set(found) | set(UDF_SITES))
+                    if found.get(f) != UDF_SITES.get(f)))

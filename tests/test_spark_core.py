@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 from wotan_spark.kernels.clipper import slide_clip as slide_clip_kernel
 from wotan_spark.kernels.detrend import detrend_series
 from wotan_spark.spark.detrend_op import detrend_sequences, split_chunks
-from wotan_spark.spark.gapfill import fill_array, gapfill_sequences, resample_ffill
+from wotan_spark.spark.gapfill import resample_ffill
 from wotan_spark.spark.ops import slide_clip_sequences, transit_mask_col
 from wotan_spark.spark.rollup import cascade_tier, explode_points, rollup_tier10
 from wotan_spark.spark.synth import (decode_tokens, make_tokens,
@@ -195,23 +195,6 @@ def test_rollup_tier10_and_cascade(spark):
     bad = joined.filter(~(F.col("n_ok") & F.col("s_ok") & F.col("mn_ok")
                           & F.col("mx_ok"))).count()
     assert bad == 0
-
-
-def test_gapfill_modes(spark):
-    y = np.array([np.nan, 1.0, np.nan, np.nan, 4.0, np.nan])
-    npt.assert_allclose(fill_array(y, "ffill"),
-                        [np.nan, 1, 1, 1, 4, 4], equal_nan=True)
-    npt.assert_allclose(fill_array(y, "linear"),
-                        [np.nan, 1, 2, 3, 4, np.nan], equal_nan=True)
-    seq = _seq(spark)
-    filled = gapfill_sequences(seq, mode="linear")
-    orig = {r.doc_id: r.tokens for r in seq.collect()}
-    for r in filled.collect():
-        y_f = decode_tokens(np.asarray(r.tokens, dtype=np.int32))
-        y_o = decode_tokens(np.asarray(orig[r.doc_id], dtype=np.int32))
-        ref = fill_array(y_o, "linear")
-        # token quantization rounds to 1e-6
-        npt.assert_allclose(y_f, ref, atol=1e-6, equal_nan=True)
 
 
 def test_resample_ffill_on_points(spark):

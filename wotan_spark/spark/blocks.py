@@ -2,13 +2,11 @@
 
 Packs per-series value runs into Gorilla-XOR (float) or delta-of-delta
 (integer) binary blocks — the storage format of the retention tiers.  Encode
-and decode are ``mapInPandas`` passes (block membership is within-series:
-zero shuffle).
+and decode are packed passes (``packed.packed_map``; block membership is
+within-series: zero shuffle).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -17,6 +15,7 @@ from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, IntegerType,
                                LongType, StringType, StructField, StructType)
 
 from wotan_spark.codecs import dod, gorilla
+from wotan_spark.spark.packed import packed_map
 
 BLOCKS_SCHEMA = StructType([
     StructField("doc_id", StringType(), False),
@@ -58,39 +57,26 @@ def encode_blocks(df: DataFrame, column: str, codec: str,
     """(doc_id, <column>: array) -> blocks(doc_id, tier, block_id, t0, n,
     codec, payload)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "tier", "block_id", "t0", "n",
-                                   "codec", "payload")}
-            for doc_id, arr in zip(pdf["doc_id"], pdf[column]):
-                arr = np.asarray(arr)
-                for b in range(0, max(len(arr), 1), block_size):
-                    chunk = arr[b:b + block_size]
-                    out["doc_id"].append(doc_id)
-                    out["tier"].append(tier)
-                    out["block_id"].append(b // block_size)
-                    out["t0"].append(b)
-                    out["n"].append(len(chunk))
-                    out["codec"].append(codec)
-                    out["payload"].append(_encode_array(chunk, codec))
-            yield pd.DataFrame(out)
+    def encode(pdf: pd.DataFrame):
+        for arr in pdf[column]:
+            arr = np.asarray(arr)
+            t0 = np.arange(0, max(len(arr), 1), block_size, dtype=np.int64)
+            yield {"tier": np.full(len(t0), tier, dtype=np.int32),
+                   "block_id": t0 // block_size, "t0": t0,
+                   "n": np.minimum(len(arr) - t0, block_size),
+                   "codec": [codec] * len(t0),
+                   "payload": [_encode_array(arr[b:b + block_size], codec)
+                               for b in t0]}
 
-    return df.mapInPandas(run, schema=BLOCKS_SCHEMA)
+    return packed_map(df, encode, BLOCKS_SCHEMA)
 
 
 def decode_blocks(blocks: DataFrame) -> DataFrame:
     """blocks -> (doc_id, tier, block_id, t0, values:array<double>)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vals = [_decode_payload(p, c)
-                    for p, c in zip(pdf["payload"], pdf["codec"])]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "tier": pdf["tier"].astype("int32"),
-                "block_id": pdf["block_id"],
-                "t0": pdf["t0"],
-                "values": vals,
-            })
+    def decode(pdf: pd.DataFrame):
+        for p, c in zip(pdf["payload"], pdf["codec"]):
+            yield {"values": [_decode_payload(p, c)]}
 
-    return blocks.mapInPandas(run, schema=DECODED_SCHEMA)
+    return packed_map(blocks, decode, DECODED_SCHEMA,
+                      carry=("doc_id", "tier", "block_id", "t0"))

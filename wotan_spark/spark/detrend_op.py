@@ -1,11 +1,11 @@
 """Distributed detrend over packed token arrays.
 
 The input table is one-series-per-row, so detrending is embarrassingly
-parallel: ONE ``mapInPandas`` pass (``_detrend_pass``) decodes each Arrow
-batch's rows, derives their known-signal masks, runs the batch kernel
-(``wotan_spark.kernels.detrend.detrend_batch``: one estimator call per
-window length and row block for the whole batch, not per series) and hands
-the results to an emitter — packed ``flat``/``trend`` arrays
+parallel: ONE packed pass (``_detrend_pass`` on ``packed.packed_map``)
+decodes each Arrow batch's rows, derives their known-signal masks, runs the
+batch kernel (``wotan_spark.kernels.detrend.detrend_batch``: one estimator
+call per window length and row block for the whole batch, not per series)
+and hands the results to an emitter — packed ``flat``/``trend`` arrays
 (``detrend_sequences``) or tier bucket rows (``detrend_rollup_fused``) —
 **zero shuffle**, unlike an explode -> groupBy plan which would multiply
 10^12 rows by sequence length.
@@ -22,7 +22,7 @@ the unchunked path).
 from __future__ import annotations
 
 import math
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -33,8 +33,8 @@ from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
 
 from wotan_spark.kernels.detrend import detrend_batch, detrend_series
 from wotan_spark.kernels.series import transit_mask
-from wotan_spark.spark.rollup import TIER_SCHEMA, _tier_arrays, _tier_frame
-from wotan_spark.spark.synth import decode_tokens
+from wotan_spark.spark.packed import packed_map, series
+from wotan_spark.spark.rollup import TIER_SCHEMA, _tier_arrays
 
 CHUNK_SCHEMA = StructType([
     StructField("doc_id", StringType(), False),
@@ -93,49 +93,45 @@ def _chunk_overlap(params: dict) -> int:
     return int(math.ceil(wl + bt)) + 1
 
 
-# emit(pdf, pieces) -> output frame; one piece per input row:
-# (tokens, y, flat, trend, t0), already trimmed to the chunk core
-Emitter = Callable[[pd.DataFrame, list], pd.DataFrame]
+# emit(tokens, y, flat, trend, t0) -> one input row's output columns; the
+# arrays are already trimmed to the chunk core
+Emitter = Callable[..., dict]
 
 
 def _detrend_pass(df: DataFrame, params: dict, emit: Emitter,
-                  schema: StructType, chunked: bool,
+                  schema: StructType, chunked: bool, carry: tuple[str, ...],
                   mask_col: str | None = None,
                   mask_transit: tuple[float, float, float] | None = None
                   ) -> DataFrame:
     """THE detrend pass, per Arrow batch: decode -> mask -> batch
-    kernel -> emit.
+    kernel -> emit, with ``carry`` repeated onto each row's output.
 
     ``chunked`` rows come from ``split_chunks``: each is detrended whole
     (overlap included) and only its ``lead:lead+core`` slice is emitted,
     with its first token index ``t0``.  Unchunked rows read no chunk
     columns, so none crosses Arrow on the packed path."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            masks = pdf[mask_col] if mask_col is not None else [None] * n
-            toks = [np.asarray(tk, dtype=np.int32) for tk in pdf["tokens"]]
-            ys = [decode_tokens(tk) for tk in toks]
-            series = []
-            for y, mask in zip(ys, masks):
-                # dense time axis t = 0..n-1 (the token index)
-                t = np.arange(len(y), dtype=np.float64)
-                series.append((t, y, _mask_of(t, mask, mask_transit)))
-            results = detrend_batch(series, **params)
-            spans = (zip(pdf["lead"], pdf["core"], pdf["t0"]) if chunked
-                     else [(0, None, 0)] * n)
-            pieces = []
-            for tk, y, res, (lead, core, t0) in zip(toks, ys, results,
-                                                    spans):
-                flat, trend = res.flatten_lc, res.trend_lc
-                if core is not None:
-                    sl = slice(int(lead), int(lead) + int(core))
-                    tk, y, flat, trend = tk[sl], y[sl], flat[sl], trend[sl]
-                pieces.append((tk, y, flat, trend, int(t0)))
-            yield emit(pdf, pieces)
+    def detrend(pdf: pd.DataFrame):
+        n = len(pdf)
+        masks = pdf[mask_col] if mask_col is not None else [None] * n
+        ys = series(pdf)
+        batch = []
+        for y, mask in zip(ys, masks):
+            # dense time axis t = 0..n-1 (the token index)
+            t = np.arange(len(y), dtype=np.float64)
+            batch.append((t, y, _mask_of(t, mask, mask_transit)))
+        results = detrend_batch(batch, **params)
+        spans = (zip(pdf["lead"], pdf["core"], pdf["t0"]) if chunked
+                 else [(0, None, 0)] * n)
+        for tk, y, res, (lead, core, t0) in zip(pdf["tokens"], ys, results,
+                                                spans):
+            flat, trend = res.flatten_lc, res.trend_lc
+            if core is not None:
+                sl = slice(int(lead), int(lead) + int(core))
+                tk, y, flat, trend = tk[sl], y[sl], flat[sl], trend[sl]
+            yield emit(tk, y, flat, trend, int(t0))
 
-    return df.mapInPandas(run, schema=schema)
+    return packed_map(df, detrend, schema, carry)
 
 
 def _route(df: DataFrame, params: dict, run: Callable[..., DataFrame],
@@ -193,22 +189,15 @@ def _series_schema(outputs: tuple[str, ...], keep_tokens: bool,
     return StructType(fields)
 
 
-def _series_emitter(outputs: tuple[str, ...], keep_tokens: bool,
-                    chunked: bool) -> Emitter:
+def _series_emitter(outputs: tuple[str, ...], keep_tokens: bool) -> Emitter:
     """Packed per-series output: one row per input row (per chunk core
-    when ``chunked``), result arrays pruned to ``outputs``."""
+    when chunked), result arrays pruned to ``outputs``."""
 
-    def emit(pdf: pd.DataFrame, pieces: list) -> pd.DataFrame:
-        out = pd.DataFrame({"doc_id": pdf["doc_id"]})
-        if chunked:
-            out["chunk_id"] = pdf["chunk_id"].astype("int32")
-        out["n_tok"] = pdf["n_tok"].astype("int32")
-        out["source"] = pdf["source"]
-        for i, name in ((2, "flat"), (3, "trend")):
-            if name in outputs:
-                out[name] = [p[i] for p in pieces]
+    def emit(tk, y, flat, trend, t0) -> dict:
+        out = {name: [a] for name, a in (("flat", flat), ("trend", trend))
+               if name in outputs}
         if keep_tokens:
-            out["tokens"] = [p[0] for p in pieces]
+            out["tokens"] = [tk]
         return out
 
     return emit
@@ -269,9 +258,11 @@ def detrend_sequences(df: DataFrame, method: str = "biweight", *,
     params = dict(params, method=method)
 
     def run(part: DataFrame, chunked: bool) -> DataFrame:
+        carry = ("doc_id",) + (("chunk_id",) if chunked else ()) + (
+            "n_tok", "source")
         out = _detrend_pass(
-            part, params, _series_emitter(outputs, keep_tokens, chunked),
-            _series_schema(outputs, keep_tokens, chunked), chunked,
+            part, params, _series_emitter(outputs, keep_tokens),
+            _series_schema(outputs, keep_tokens, chunked), chunked, carry,
             mask_col, mask_transit)
         if not chunked:
             return out
@@ -303,7 +294,7 @@ def detrend_rollup_fused(df: DataFrame, method: str = "biweight",
                          mask_col: str | None = None,
                          mask_transit: tuple[float, float, float]
                          | None = None, **params) -> DataFrame:
-    """Fused detrend + tier rollup in ONE ``mapInPandas`` pass: half the
+    """Fused detrend + tier rollup in ONE packed pass: half the
     Arrow traffic of chaining ``detrend_sequences`` and ``rollup_tier10``
     (the full-resolution flat/trend arrays never cross back into the JVM),
     zero shuffle.  The pipeline hot path when only tier tables are needed.
@@ -317,19 +308,13 @@ def detrend_rollup_fused(df: DataFrame, method: str = "biweight",
     full-resolution array is ever shuffled or reassembled."""
     params = dict(params, method=method)
 
-    def emit(pdf: pd.DataFrame, pieces: list) -> pd.DataFrame:
-        doc_ids: list[np.ndarray] = []
-        rows: list[tuple] = []
-        for doc_id, (_, y, flat, trend, t0) in zip(pdf["doc_id"], pieces):
-            # chunk cores start on a bucket boundary (t0 % factor == 0)
-            cols = _tier_arrays(y, flat, trend, factor, b0=t0 // factor)
-            doc_ids.append(np.repeat(doc_id, len(cols[0])))
-            rows.append(cols)
-        return _tier_frame(doc_ids, rows)
+    def emit(tk, y, flat, trend, t0) -> dict:
+        # chunk cores start on a bucket boundary (t0 % factor == 0)
+        return _tier_arrays(y, flat, trend, factor, b0=t0 // factor)
 
     def run(part: DataFrame, chunked: bool) -> DataFrame:
         return _detrend_pass(part, params, emit, TIER_SCHEMA, chunked,
-                             mask_col, mask_transit)
+                             ("doc_id",), mask_col, mask_transit)
 
     return _route(df, params, run, chunk_threshold, chunk_size,
                   masked=mask_col is not None or mask_transit is not None,
@@ -384,28 +369,19 @@ def split_chunks(df: DataFrame, chunk_size: int, overlap: int) -> DataFrame:
     exactly (tested).
     """
 
-    def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "chunk_id", "t0", "lead", "core",
-                                   "n_tok", "source", "tokens")}
-            for doc_id, toks, n_tok, source in zip(
-                    pdf["doc_id"], pdf["tokens"], pdf["n_tok"], pdf["source"]):
-                toks = np.asarray(toks, dtype=np.int32)
-                n = len(toks)
-                n_chunks = max(1, math.ceil(n / chunk_size))
-                for c in range(n_chunks):
-                    lo = c * chunk_size
-                    hi = min(lo + chunk_size, n)
-                    lead = min(overlap, lo)
-                    tail = min(overlap, n - hi)
-                    out["doc_id"].append(doc_id)
-                    out["chunk_id"].append(c)
-                    out["t0"].append(lo)
-                    out["lead"].append(lead)
-                    out["core"].append(hi - lo)
-                    out["n_tok"].append(n_tok)
-                    out["source"].append(source)
-                    out["tokens"].append(toks[lo - lead:hi + tail])
-            yield pd.DataFrame(out)
+    def split(pdf: pd.DataFrame):
+        for toks in pdf["tokens"]:
+            toks = np.asarray(toks, dtype=np.int32)
+            n = len(toks)
+            n_chunks = max(1, math.ceil(n / chunk_size))
+            lo = np.arange(n_chunks, dtype=np.int64) * chunk_size
+            hi = np.minimum(lo + chunk_size, n)
+            lead = np.minimum(overlap, lo)
+            tail = np.minimum(overlap, n - hi)
+            yield {"chunk_id": np.arange(n_chunks, dtype=np.int32),
+                   "t0": lo, "lead": lead, "core": hi - lo,
+                   "tokens": [toks[a:b] for a, b in zip(lo - lead,
+                                                        hi + tail)]}
 
-    return df.mapInPandas(split, schema=CHUNK_SCHEMA)
+    return packed_map(df, split, CHUNK_SCHEMA,
+                      carry=("doc_id", "n_tok", "source"))

@@ -2,15 +2,13 @@
 
 Both operators follow the engine's core execution shape (same as
 ``spark/rollup.py``): downsampling is a within-series property, so one
-``mapInPandas`` over the packed ``(doc_id, tokens, ...)`` rows emits the
-reduced points with ZERO shuffle — at 10^12 sequences the plan is a
-single scan, embarrassingly parallel across series.  Kernels (and the
+packed pass (``packed.packed_map``) over the ``(doc_id, tokens, ...)`` rows
+emits the reduced points with ZERO shuffle — at 10^12 sequences the plan is
+a single scan, embarrassingly parallel across series.  Kernels (and the
 paper citations) live in ``wotan_spark/kernels/downsample.py``.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -19,7 +17,7 @@ from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType)
 
 from wotan_spark.kernels.downsample import lttb_indices, m4_stats
-from wotan_spark.spark.synth import decode_tokens
+from wotan_spark.spark.packed import packed_map, series
 
 M4_SCHEMA = StructType([
     StructField("doc_id", StringType(), False),
@@ -51,26 +49,13 @@ def downsample_m4(sequences: DataFrame, factor: int = 100) -> DataFrame:
     if factor < 1:
         raise ValueError("factor must be >= 1")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["bucket", "n", "t_first", "y_first", "t_last", "y_last",
-                "t_min", "y_min", "t_max", "y_max"]
-        for pdf in batches:
-            doc_ids: list[np.ndarray] = []
-            parts: dict[str, list[np.ndarray]] = {k: [] for k in cols}
-            for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
-                y = decode_tokens(np.asarray(tokens, dtype=np.int32))
-                out = m4_stats(y, factor)
-                doc_ids.append(np.repeat(doc_id, len(out[0])))
-                for k, arr in zip(cols, out):
-                    parts[k].append(arr)
-            if not doc_ids:
-                yield pd.DataFrame({k: [] for k in ["doc_id"] + cols})
-                continue
-            res = {"doc_id": np.concatenate(doc_ids)}
-            res.update({k: np.concatenate(v) for k, v in parts.items()})
-            yield pd.DataFrame(res)
+    cols = M4_SCHEMA.fieldNames()[1:]
 
-    return sequences.mapInPandas(run, schema=M4_SCHEMA)
+    def m4(pdf: pd.DataFrame):
+        for y in series(pdf):
+            yield dict(zip(cols, m4_stats(y, factor)))
+
+    return packed_map(sequences, m4, M4_SCHEMA)
 
 
 def downsample_lttb(sequences: DataFrame, n_out: int = 1000) -> DataFrame:
@@ -81,26 +66,10 @@ def downsample_lttb(sequences: DataFrame, n_out: int = 1000) -> DataFrame:
     if n_out < 3:
         raise ValueError("n_out must be >= 3 (first + last + interior)")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids: list[np.ndarray] = []
-            ranks: list[np.ndarray] = []
-            ts: list[np.ndarray] = []
-            ys: list[np.ndarray] = []
-            for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
-                y = decode_tokens(np.asarray(tokens, dtype=np.int32))
-                idx = lttb_indices(y, n_out)
-                doc_ids.append(np.repeat(doc_id, len(idx)))
-                ranks.append(np.arange(len(idx), dtype=np.int64))
-                ts.append(idx)
-                ys.append(y[idx])
-            if not doc_ids:
-                yield pd.DataFrame({"doc_id": [], "rank": [], "t": [],
-                                    "y": []})
-                continue
-            yield pd.DataFrame({"doc_id": np.concatenate(doc_ids),
-                                "rank": np.concatenate(ranks),
-                                "t": np.concatenate(ts),
-                                "y": np.concatenate(ys)})
+    def lttb(pdf: pd.DataFrame):
+        for y in series(pdf):
+            idx = lttb_indices(y, n_out)
+            yield {"rank": np.arange(len(idx), dtype=np.int64), "t": idx,
+                   "y": y[idx]}
 
-    return sequences.mapInPandas(run, schema=LTTB_SCHEMA)
+    return packed_map(sequences, lttb, LTTB_SCHEMA)

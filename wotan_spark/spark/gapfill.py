@@ -1,17 +1,11 @@
-"""Gap-fill / interpolation operators.
+"""Gap-fill / interpolation over long-form (key, t, y) frames.
 
-Two execution shapes:
-
-* **Packed path** (`gapfill_sequences`): missing samples inside a token
-  array (gap sentinels) are filled per-series inside ``mapInPandas`` —
-  forward-fill or linear interpolation — zero shuffle, used by the tier
-  pipeline before compression.
-* **Long-form SQL path** (`resample_ffill`): a generic
-  grid-resample + fill over any (key, t, y) DataFrame expressed entirely in
-  Catalyst operators (``sequence``/``explode`` grid, range join by bucket,
-  ``last(ignoreNulls)`` / ``first(ignoreNulls)`` window fill, linear
-  interpolation between bracketing samples).  Whole-stage-codegen'd, no
-  Python, and directly mirrored by the DuckDB oracle SQL.
+``resample_ffill`` is a generic grid-resample + fill over any (key, t, y)
+DataFrame expressed entirely in Catalyst operators (``sequence``/``explode``
+grid, range join by bucket, ``last(ignoreNulls)`` / ``first(ignoreNulls)``
+window fill, linear interpolation between bracketing samples).
+Whole-stage-codegen'd, no Python, and directly mirrored by the DuckDB oracle
+SQL.
 
 The reference library has no explicit gap-fill; its closest semantics are
 the spline/GP "interpolate over clipped values" behavior
@@ -21,59 +15,8 @@ engine adds gap-fill as a first-class rollup stage.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
-
-from wotan_spark.spark.synth import decode_tokens, encode_samples
-
-
-def fill_array(y: np.ndarray, mode: str = "linear") -> np.ndarray:
-    """NaN-fill one series: 'ffill' carries the previous sample forward;
-    'linear' interpolates between bracketing samples.  Leading NaNs stay in
-    'ffill'; 'linear' leaves both edges un-extrapolated."""
-    y = np.asarray(y, dtype=np.float64)
-    isn = np.isnan(y)
-    if not isn.any() or isn.all():
-        return y.copy()
-    idx = np.arange(len(y))
-    if mode == "ffill":
-        pos = np.where(~isn, idx, -1)
-        np.maximum.accumulate(pos, out=pos)
-        out = y.copy()
-        filled = pos >= 0
-        out[filled] = y[pos[filled]]
-        return out
-    if mode == "linear":
-        out = y.copy()
-        good = ~isn
-        inner = np.interp(idx[isn], idx[good], y[good])
-        out[isn] = inner
-        # np.interp extrapolates edges as constant; keep them NaN instead
-        first, last = idx[good][0], idx[good][-1]
-        out[:first] = np.nan
-        out[last + 1:] = np.nan
-        return out
-    raise ValueError(mode)
-
-
-def gapfill_sequences(df: DataFrame, mode: str = "linear") -> DataFrame:
-    """sequences -> sequences with sentinel gaps filled (packed, no shuffle)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            toks_out = []
-            for toks in pdf["tokens"]:
-                y = decode_tokens(np.asarray(toks, dtype=np.int32))
-                toks_out.append(encode_samples(fill_array(y, mode)))
-            out = pdf.copy()
-            out["tokens"] = toks_out
-            yield out
-
-    return df.mapInPandas(run, schema=df.schema)
 
 
 def resample_ffill(df: DataFrame, key: str, t: str, y: str, step: int,

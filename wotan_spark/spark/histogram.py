@@ -13,8 +13,8 @@ engineering point: deterministic, SQL-expressible (exact DuckDB oracle),
 and two longs + an array per row.
 
 Execution shape matches the engine core: tier-10 histograms are computed
-inside one packed ``mapInPandas`` pass (bucketing is within-series, ZERO
-shuffle); the cascade is one partial-aggregated ``groupBy``; quantiles
+inside one packed pass (``packed.packed_map``; bucketing is within-series,
+ZERO shuffle); the cascade is one partial-aggregated ``groupBy``; quantiles
 are pure Catalyst over an explode + running-sum window.
 
 Out-of-range samples are counted in ``n_below`` / ``n_above`` rather than
@@ -25,8 +25,6 @@ clamped into the edge bins — clamping would silently bias edge quantiles.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -34,7 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
                                StructField, StructType)
 
-from wotan_spark.spark.synth import decode_tokens
+from wotan_spark.spark.packed import packed_map, series
 
 HIST_SCHEMA = StructType([
     StructField("doc_id", StringType(), False),
@@ -81,38 +79,20 @@ def tier_histogram(sequences: DataFrame, factor: int = 10,
                    n_bins: int = 32, lo: float = 0.99,
                    hi: float = 1.01) -> DataFrame:
     """Per-(series, ``t div factor``) fixed-bin histogram rows from the
-    packed sequence table.  One mapInPandas pass, no shuffle."""
+    packed sequence table.  One packed pass, no shuffle."""
     if factor < 1:
         raise ValueError("factor must be >= 1")
     if n_bins < 1 or not hi > lo:
         raise ValueError("need n_bins >= 1 and hi > lo")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids, buckets, ns, nbl, nab, bins = [], [], [], [], [], []
-            for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
-                y = decode_tokens(np.asarray(tokens, dtype=np.int32))
-                ids, cnt, below, above, M = _bucket_histograms(
-                    y, factor, n_bins, lo, hi)
-                doc_ids.append(np.repeat(doc_id, len(ids)))
-                buckets.append(ids)
-                ns.append(cnt)
-                nbl.append(below)
-                nab.append(above)
-                bins.extend(list(M))
-            if not doc_ids:
-                yield pd.DataFrame({k: [] for k in (
-                    "doc_id", "bucket", "n", "n_below", "n_above", "bins")})
-                continue
-            yield pd.DataFrame({
-                "doc_id": np.concatenate(doc_ids),
-                "bucket": np.concatenate(buckets),
-                "n": np.concatenate(ns),
-                "n_below": np.concatenate(nbl),
-                "n_above": np.concatenate(nab),
-                "bins": bins})
+    def histogram(pdf: pd.DataFrame):
+        for y in series(pdf):
+            ids, cnt, below, above, M = _bucket_histograms(
+                y, factor, n_bins, lo, hi)
+            yield {"bucket": ids, "n": cnt, "n_below": below,
+                   "n_above": above, "bins": list(M)}
 
-    return sequences.mapInPandas(run, schema=HIST_SCHEMA)
+    return packed_map(sequences, histogram, HIST_SCHEMA)
 
 
 def cascade_histogram(tier: DataFrame, step: int = 10) -> DataFrame:

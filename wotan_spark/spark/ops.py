@@ -3,15 +3,14 @@
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from wotan_spark.kernels.clipper import slide_clip as slide_clip_kernel
-from wotan_spark.spark.synth import decode_tokens, encode_samples
+from wotan_spark.spark.packed import packed_map, series
+from wotan_spark.spark.synth import encode_samples
 
 
 def transit_mask_col(t: Column, period: float, duration: float,
@@ -42,17 +41,12 @@ def slide_clip_sequences(df: DataFrame, window_length: float, low: float = 3,
     (the operator is order-dependent within a series — quirk Q9b — so
     parallelism is across rows), zero shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_tokens = []
-            for toks in pdf["tokens"]:
-                y = decode_tokens(np.asarray(toks, dtype=np.int32))
-                t = np.arange(len(y), dtype=np.float64)
-                clipped = slide_clip_kernel(t, y, window_length, low, high,
-                                            method, center)
-                out_tokens.append(encode_samples(clipped))
-            out = pdf.copy()
-            out["tokens"] = out_tokens
-            yield out
+    def clip(pdf: pd.DataFrame):
+        for y in series(pdf):
+            t = np.arange(len(y), dtype=np.float64)
+            clipped = slide_clip_kernel(t, y, window_length, low, high,
+                                        method, center)
+            yield {"tokens": [encode_samples(clipped)]}
 
-    return df.mapInPandas(run, schema=df.schema)
+    return packed_map(df, clip, df.schema,
+                      carry=tuple(c for c in df.columns if c != "tokens"))

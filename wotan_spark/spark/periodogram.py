@@ -4,22 +4,23 @@ rollup signal.
 The GP ``periodic_auto`` kernel already pre-searches each series' dominant
 period (reference wotan/gp.py:82-88); this operator exposes that same
 vectorized kernel (``kernels.gp.lombscargle``) as a standalone packed pass
-over the sequences table — one zero-shuffle ``mapInPandas``, one output row
-per requested peak.  At corpus scale the dominant period is a per-series
-scalar exactly like the tier rollup stats: cheap to store, joinable to any
-tier, and the natural feature for periodicity-aware curation (flagging
-machine-generated repetition, seasonality grouping).
+over the sequences table — one zero-shuffle packed pass
+(``packed.packed_map``), one output row per requested peak.  At corpus
+scale the dominant period is a per-series scalar exactly like the tier
+rollup stats: cheap to store, joinable to any tier, and the natural feature
+for periodicity-aware curation (flagging machine-generated repetition,
+seasonality grouping).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (DoubleType, IntegerType, StringType,
                                StructField, StructType)
+
+from wotan_spark.spark.packed import packed_map, series
 
 PERIODOGRAM_SCHEMA = StructType([
     StructField("doc_id", StringType(), False),
@@ -49,36 +50,29 @@ def dominant_periods(seq: DataFrame, top_k: int = 1,
     from wotan_spark.kernels.gp import lombscargle
     nf = int(n_freqs) if n_freqs is not None else LS_FREQS
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # hoisted out of the per-document loop (same pattern as the
-        # rollup/detrend UDF closures): one import per task, not per row
-        from wotan_spark.spark.synth import decode_tokens
-        for pdf in batches:
-            ids, ranks, periods, powers = [], [], [], []
-            for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
-                # decode + drop gap sentinels like every other token
-                # operator: raw SENTINEL (-2^31) spikes would dominate the
-                # power spectrum with the gap's window function.  The
-                # surviving points keep their original token indexes —
-                # Lomb-Scargle exists precisely for irregular grids.
-                y_all = decode_tokens(np.asarray(toks, dtype=np.int32))
-                ok = ~np.isnan(y_all)
-                y = y_all[ok]
-                if len(y) < 4:
-                    continue
-                t = np.arange(len(y_all), dtype=np.float64)[ok]
-                y = y - np.median(y)
-                freqs = np.geomspace(1.0 / t[-1], 1.0, nf)
-                p = lombscargle(t, y, freqs)
-                # stable tie-break toward the lower frequency index
-                order = np.argsort(-p, kind="stable")[:top_k]
-                for r, i in enumerate(order, 1):
-                    ids.append(doc_id)
-                    ranks.append(r)
-                    periods.append(2.0 * np.pi / freqs[i])
-                    powers.append(float(p[i]))
-            yield pd.DataFrame({"doc_id": ids, "rank": ranks,
-                                "period": periods, "power": powers})
+    empty = {"rank": np.empty(0, dtype=np.int32), "period": np.empty(0),
+             "power": np.empty(0)}
 
-    return seq.select("doc_id", "tokens").mapInPandas(
-        run, schema=PERIODOGRAM_SCHEMA)
+    def periods(pdf: pd.DataFrame):
+        # decoded like every other token operator, gap sentinels dropped:
+        # raw SENTINEL (-2^31) spikes would dominate the power spectrum
+        # with the gap's window function.  The surviving points keep
+        # their original token indexes — Lomb-Scargle exists precisely
+        # for irregular grids.
+        for y_all in series(pdf):
+            ok = ~np.isnan(y_all)
+            y = y_all[ok]
+            if len(y) < 4:
+                yield empty
+                continue
+            t = np.arange(len(y_all), dtype=np.float64)[ok]
+            y = y - np.median(y)
+            freqs = np.geomspace(1.0 / t[-1], 1.0, nf)
+            p = lombscargle(t, y, freqs)
+            # stable tie-break toward the lower frequency index
+            order = np.argsort(-p, kind="stable")[:top_k]
+            yield {"rank": np.arange(1, len(order) + 1, dtype=np.int32),
+                   "period": 2.0 * np.pi / freqs[order], "power": p[order]}
+
+    return packed_map(seq.select("doc_id", "tokens"), periods,
+                      PERIODOGRAM_SCHEMA)

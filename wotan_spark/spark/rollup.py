@@ -2,7 +2,7 @@
 
 Tier-10 aggregates are computed inside the same packed, shuffle-free pass
 shape as the detrend itself: bucket membership (``t div 10``) is a
-within-series property, so one ``mapInPandas`` over the packed arrays emits
+within-series property, so one packed pass (``packed.packed_map``) emits
 bucket rows with no exchange (``detrend_op.detrend_rollup_fused`` does the
 same inside the detrend pass itself).  Tier-100 is then *cascaded from
 tier-10* (never from raw) as a plain ``groupBy`` over additive components —
@@ -19,7 +19,6 @@ whose estimator NaN-ed the edge).
 from __future__ import annotations
 
 import warnings
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -28,7 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType)
 
-from wotan_spark.spark.synth import SENTINEL, decode_tokens
+from wotan_spark.spark.packed import packed_map, series
+from wotan_spark.spark.synth import SENTINEL
 
 TIER_SCHEMA = StructType([
     StructField("doc_id", StringType(), False),
@@ -77,15 +77,10 @@ def _bucket_stats(v: np.ndarray, factor: int, with_median: bool = True):
     return ids, cnt, s, mean, meds, mins, maxs
 
 
-_TIER_KEYS = ("bucket", "n", "y_sum", "y_mean", "y_median", "y_min",
-              "y_max", "trend_n", "trend_sum", "trend_mean", "flat_n",
-              "flat_sum", "flat_mean")
-
-
 def _tier_arrays(y: np.ndarray, flat: np.ndarray, trend: np.ndarray,
-                 factor: int, b0: int = 0) -> tuple:
-    """The 13 ``TIER_SCHEMA`` column arrays for one series (bucket ids
-    offset by ``b0`` for chunked cores) — the ONE definition of the
+                 factor: int, b0: int = 0) -> dict:
+    """The ``TIER_SCHEMA`` columns but ``doc_id`` for one series (bucket
+    ids offset by ``b0`` for chunked cores) — the ONE definition of the
     tier-row layout, shared by ``rollup_tier10`` and the fused pass
     (``detrend_op.detrend_rollup_fused``)."""
     ids, cnt, ysum, ymean, ymed, ymin, ymax = _bucket_stats(y, factor)
@@ -93,40 +88,22 @@ def _tier_arrays(y: np.ndarray, flat: np.ndarray, trend: np.ndarray,
         trend, factor, with_median=False)
     _, fcnt, fsum, fmean, _, _, _ = _bucket_stats(
         flat, factor, with_median=False)
-    return (ids + b0 if b0 else ids, cnt, ysum, ymean, ymed, ymin, ymax,
-            tcnt, tsum, tmean, fcnt, fsum, fmean)
-
-
-def _tier_frame(doc_ids: list, rows: list) -> pd.DataFrame:
-    """Concatenate per-series (repeated doc_id, 13-column tuple) rows into
-    one ``TIER_SCHEMA`` pandas frame; empty-batch safe."""
-    if not doc_ids:
-        return pd.DataFrame({k: [] for k in ("doc_id",) + _TIER_KEYS})
-    out = {"doc_id": np.concatenate(doc_ids)}
-    for i, k in enumerate(_TIER_KEYS):
-        out[k] = np.concatenate([r[i] for r in rows])
-    return pd.DataFrame(out)
+    return {"bucket": ids + b0 if b0 else ids, "n": cnt, "y_sum": ysum,
+            "y_mean": ymean, "y_median": ymed, "y_min": ymin, "y_max": ymax,
+            "trend_n": tcnt, "trend_sum": tsum, "trend_mean": tmean,
+            "flat_n": fcnt, "flat_sum": fsum, "flat_mean": fmean}
 
 
 def rollup_tier10(detrended: DataFrame, factor: int = 10) -> DataFrame:
     """Packed detrended output -> tier-10 bucket rows.  No shuffle: bucket
     aggregation is within-series."""
 
-    def roll(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids: list[np.ndarray] = []
-            rows: list[tuple] = []
-            for doc_id, tokens, flat, trend in zip(
-                    pdf["doc_id"], pdf["tokens"], pdf["flat"], pdf["trend"]):
-                y = decode_tokens(np.asarray(tokens, dtype=np.int32))
-                cols = _tier_arrays(y, np.asarray(flat, dtype=np.float64),
-                                    np.asarray(trend, dtype=np.float64),
-                                    factor)
-                doc_ids.append(np.repeat(doc_id, len(cols[0])))
-                rows.append(cols)
-            yield _tier_frame(doc_ids, rows)
+    def roll(pdf: pd.DataFrame):
+        for y, flat, trend in zip(series(pdf), pdf["flat"], pdf["trend"]):
+            yield _tier_arrays(y, np.asarray(flat, dtype=np.float64),
+                               np.asarray(trend, dtype=np.float64), factor)
 
-    return detrended.mapInPandas(roll, schema=TIER_SCHEMA)
+    return packed_map(detrended, roll, TIER_SCHEMA)
 
 
 def cascade_tier(tier: DataFrame, step: int = 10) -> DataFrame:
