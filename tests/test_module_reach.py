@@ -1,10 +1,10 @@
 """Reach rules: every ``wotan_spark`` module, and every public top-level
 ``def``/``class`` in it, must be reached by an entry point — the driver
 contract, a bench, a script or tool, the package itself, or the DEPLOY.md
-streaming entry.  Both checks are static (stdlib ``ast``, no Spark): a
+streaming entry.  The checks are static (stdlib ``ast``, no Spark): a
 module reached only by tests, or a public def that no file of the entry
 points' import closure names, fails and is named in the message.  A third
-census holds the Python UDF call sites per file to an exact count, so a
+check holds the Python UDF call sites per file to an exact count, so a
 new hand-rolled per-series pass fails instead of bypassing
 ``spark/packed.py``."""
 
