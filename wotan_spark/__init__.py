@@ -6,6 +6,7 @@ Arrow-vectorized pandas UDFs over packed token arrays, cascading rollup
 tiers, gap-fill, compressed blocks, and checkpointed, lineage-tracked runs.
 """
 
+from wotan_spark._worker_setup import _stamp_zip_rereads
 from wotan_spark.compat import flatten
 from wotan_spark.kernels.clipper import slide_clip
 from wotan_spark.kernels.detrend import detrend_series
@@ -16,3 +17,5 @@ __version__ = "0.2.0"
 
 __all__ = ["flatten", "detrend_series", "slide_clip", "transit_mask", "t14",
            "__version__"]
+
+_stamp_zip_rereads()
