@@ -426,6 +426,43 @@ def test_cosine_topk_zero_vector_never_outranks(spark):
     assert zero[0].rank == max(r.rank for r in out)    # strictly last
 
 
+def test_verify_cosine_pairs_zero_vector_scores_zero(spark, monkeypatch):
+    """A candidate pair with an all-zero embedding scores cos_sim 0 (clipped
+    norms), as the exact near-dup path does, instead of 0/0 = NaN: at
+    threshold 0 the pair is kept, not silently dropped, and the kernel
+    raises no RuntimeWarning."""
+    import warnings
+
+    import pandas as pd
+
+    from wotan_spark.spark.datapipe import verify_cosine_pairs
+
+    emb = spark.createDataFrame([(1, [0.0, 0.0, 0.0]), (2, [1.0, 2.0, 3.0])],
+                                "vec_id long, embedding array<double>")
+    pairs = spark.createDataFrame([(1, 2)], "vec_id_a long, vec_id_b long")
+    frame_cls = type(emb)
+    kernels = []
+    real = frame_cls.mapInPandas
+
+    def recording(self, fn, *args, **kwargs):
+        kernels.append(fn)
+        return real(self, fn, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "mapInPandas", recording)
+    got = [tuple(r) for r in
+           verify_cosine_pairs(emb, pairs, threshold=0.0).collect()]
+    exact = [tuple(r) for r in embedding_near_dup_pairs(
+        emb, threshold=0.0, method="exact").collect()]
+    assert got == exact == [(1, 2, 0.0)]
+    # the verify kernel on the driver, with warnings as errors
+    batch = pd.DataFrame({"vec_id_a": [1], "vec_id_b": [2],
+                          "ea": [[0.0, 0.0, 0.0]], "eb": [[1.0, 2.0, 3.0]]})
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        (out,) = kernels[0](iter([batch]))
+    assert out["cos_sim"].tolist() == [0.0]
+
+
 def test_pq_codebooks_tiny_corpus(spark):
     """A corpus smaller than n_centroids seeds the codebook with
     replacement — the (m, n_centroids, dsub) shape survives and encoding

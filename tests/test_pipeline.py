@@ -267,26 +267,6 @@ def test_lineage_table_mixing_old_and_new_dirs(spark, tmp_path):
     assert multiset(lineage.read(spark)) == want
 
 
-def test_incremental_read_returns_only_new_files(spark, tmp_path):
-    """Iceberg incremental-scan model: the rows added between two
-    snapshots, from the data-dir set difference; rewrite commits in the
-    range must refuse (added-rows is no longer the file delta)."""
-    import pytest
-    t = SnapshotTable(str(tmp_path / "t"))
-    s0 = t.append(spark.createDataFrame([(1,), (2,)], "x long"))
-    s1 = t.append(spark.createDataFrame([(3,)], "x long"))
-    s2 = t.append(spark.createDataFrame([(4,), (5,)], "x long"))
-    inc = t.read_incremental(spark, since_snapshot_id=s0)
-    assert sorted(r.x for r in inc.collect()) == [3, 4, 5]
-    inc2 = t.read_incremental(spark, since_snapshot_id=s1, snapshot_id=s2)
-    assert sorted(r.x for r in inc2.collect()) == [4, 5]
-    assert t.read_incremental(spark, since_snapshot_id=s2) is None
-    # a compaction rewrites history: incremental across it must refuse
-    t.compact(spark, target_file_rows=10)
-    with pytest.raises(ValueError, match="rewrote history"):
-        t.read_incremental(spark, since_snapshot_id=s1)
-
-
 def test_schema_evolution_append_and_merge_read(spark, tmp_path):
     t = SnapshotTable(str(tmp_path / "t"))
     t.append(spark.createDataFrame([(1, 10.0)], "x long, y double"))

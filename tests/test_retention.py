@@ -139,154 +139,45 @@ def test_late_data_does_not_resurrect_aged_out_buckets(spark, tmp_path):
     assert mine.agg(F.min("bucket")).collect()[0][0] >= cutoff
 
 
-def test_refs_tag_branch_rollback(spark, tmp_path):
-    """Named refs: tags immutable, branches movable, read(ref=...),
-    Iceberg-style rollback preserves history."""
-    import pytest
-    from wotan_spark.spark.lakehouse import SnapshotTable
-    t = SnapshotTable(str(tmp_path / "t"))
-    s0 = t.overwrite(spark.range(3).withColumnRenamed("id", "x"), gen="a")
-    s1 = t.overwrite(spark.range(10).withColumnRenamed("id", "x"), gen="b")
-    t.create_tag("v1", s0)
-    t.create_branch("dev")                     # defaults to HEAD (s1)
-    assert t.resolve_ref("v1") == s0 and t.resolve_ref("dev") == s1
-    assert t.read(spark, ref="v1").count() == 3
-    assert t.read(spark, ref="dev").count() == 10
-    with pytest.raises(ValueError):
-        t.create_tag("v1", s1)                 # tags are immutable
-    t.set_branch("dev", s0)                    # branches move
-    assert t.read(spark, ref="dev").count() == 3
-    with pytest.raises(ValueError):
-        t.read(spark, snapshot_id=s0, ref="v1")
-
-    s2 = t.rollback_to(s0, run_id="undo")      # restore, keep history
-    assert t.current_snapshot_id() == s2
-    assert t.read(spark).count() == 3          # restored data at HEAD
-    assert t.read(spark, snapshot_id=s1).count() == 10  # history intact
-    assert t.find_snapshot(run_id="undo")["meta"]["rollback_of"] == s0
-    t.drop_ref("dev")
-    with pytest.raises(KeyError):
-        t.resolve_ref("dev")
-
-
-def test_expire_snapshots_pins_referenced_snapshots(spark, tmp_path):
-    """A tagged snapshot survives expiry past the keep window (manifest +
-    data stay readable via the ref); dropping the ref releases it."""
-    import os
-    from wotan_spark.spark.lakehouse import SnapshotTable
-    t = SnapshotTable(str(tmp_path / "t"))
-    s0 = t.overwrite(spark.range(4).withColumnRenamed("id", "x"))
-    s1 = t.overwrite(spark.range(5).withColumnRenamed("id", "x"))
-    s2 = t.overwrite(spark.range(6).withColumnRenamed("id", "x"))
-    t.create_tag("keepme", s0)
-
-    rep = expire_snapshots(t, keep_last=1)
-    assert rep["expired"] == 1                       # only s1 reclaimed
-    assert t.read(spark, ref="keepme").count() == 4  # s0 pinned by tag
-    assert t.read(spark).count() == 6
-    # s1's manifest is gone, s0's stays
-    assert not os.path.exists(os.path.join(
-        t.manifest_dir, f"snapshot-{s1}.json"))
-    assert os.path.exists(os.path.join(
-        t.manifest_dir, f"snapshot-{s0}.json"))
-
-    t.drop_ref("keepme")
-    assert t.read(spark, snapshot_id=s0).count() == 4   # until reclaimed
-    # the next expiry reclaims the now-unreferenced orphan
-    t.overwrite(spark.range(7).withColumnRenamed("id", "x"))
-    # grace 0 = simulate a run far past the commit-publish window (a
-    # FRESH unreferenced snapshot is otherwise spared as possibly
-    # in-flight — test_expiry_spares_in_flight_snapshot pins that)
-    rep2 = expire_snapshots(t, keep_last=1, orphan_manifest_grace_sec=0.0)
-    assert rep2["expired"] >= 1
-    assert not os.path.exists(os.path.join(
-        t.manifest_dir, f"snapshot-{s0}.json"))
-
-
-def test_write_audit_publish_flow(spark, tmp_path):
-    """WAP: staged branch commits are invisible at HEAD until
-    fast_forward publishes; staged snapshots survive expiry as a unit;
-    a non-ancestor HEAD refuses the fast-forward."""
-    import pytest
-    from wotan_spark.spark.lakehouse import SnapshotTable
-    t = SnapshotTable(str(tmp_path / "t"))
-    t.overwrite(spark.range(4).withColumnRenamed("id", "x"))
-    t.overwrite(spark.range(5).withColumnRenamed("id", "x"))
-    t.create_branch("audit")                     # at HEAD (chain len 2)
-
-    s_a = t.commit_to_branch(
-        spark.range(8).withColumnRenamed("id", "x"), "audit")
-    s_b = t.commit_to_branch(
-        spark.range(2).withColumnRenamed("id", "x"), "audit",
-        mode="append")
-    assert t.read(spark).count() == 5            # HEAD untouched
-    assert t.read(spark, ref="audit").count() == 10  # 8 overwrite + 2
-    assert t._manifest(s_b)["parent"] == s_a
-
-    # staged commits survive an expiry that DOES run (chain 2 > keep 1)
-    rep = expire_snapshots(t, keep_last=1)
-    assert rep["expired"] == 1                   # the old HEAD snapshot
-    assert t.read(spark, ref="audit").count() == 10
-
-    published = t.fast_forward("audit")          # audit passed: publish
-    assert published == s_b
-    assert t.read(spark).count() == 10
-    assert [m["snapshot_id"] for m in t.snapshots()][-1] == s_b
-
-    # diverged HEAD refuses fast-forward
-    t2 = SnapshotTable(str(tmp_path / "t2"))
-    t2.overwrite(spark.range(3).withColumnRenamed("id", "x"))
-    t2.create_branch("b")
-    t2.commit_to_branch(spark.range(4).withColumnRenamed("id", "x"), "b")
-    t2.overwrite(spark.range(9).withColumnRenamed("id", "x"))  # diverge
-    with pytest.raises(ValueError, match="ancestor"):
-        t2.fast_forward("b")
-
-
 def test_snapshot_ids_never_reused_after_orphan_reclaim(spark, tmp_path):
     """Expiry deletes manifests; the id allocator must stay monotonic so
     old recorded snapshot ids can never silently rebind to new data."""
-    from wotan_spark.spark.lakehouse import SnapshotTable
+    import json
     t = SnapshotTable(str(tmp_path / "t"))
     t.overwrite(spark.range(1).withColumnRenamed("id", "x"))
     t.overwrite(spark.range(2).withColumnRenamed("id", "x"))
-    t.create_branch("b")
-    s2 = t.commit_to_branch(
-        spark.range(3).withColumnRenamed("id", "x"), "b")  # disk max id
-    t.drop_ref("b")
-    expire_snapshots(t, keep_last=1)          # reclaims s0 + orphan s2
+    # a crashed commit: the highest id on disk, HEAD never moved to it
+    sid = t._next_sid()
+    man = t._write_manifest(
+        [t._write_data(spark.range(3).withColumnRenamed("id", "x"))])
+    with open(os.path.join(t.manifest_dir, f"snapshot-{sid}.json"),
+              "w") as f:
+        json.dump({"snapshot_id": sid, "manifest_list": [man],
+                   "parent": t.current_snapshot_id(), "meta": {}}, f)
+    expire_snapshots(t, keep_last=1, orphan_manifest_grace_sec=0.0)
+    assert not os.path.exists(
+        os.path.join(t.manifest_dir, f"snapshot-{sid}.json"))
     s_new = t.overwrite(spark.range(4).withColumnRenamed("id", "x"))
-    assert s_new > s2                          # never reused
+    assert s_new > sid                         # never reused
 
 
-def test_wap_governed_curation_publish(spark, tmp_path):
-    """End-to-end governance composition: curate the corpus, stage the
-    survivors on an audit branch, validate against the funnel report,
-    then publish — HEAD serves the old corpus until the fast-forward."""
-    from wotan_spark.spark.datapipe import curate_corpus
-    from wotan_spark.spark.lakehouse import SnapshotTable
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    t = SnapshotTable(str(tmp_path / "corpus"))
-    t.overwrite(docs, gen="raw")
-    n_raw = t.read(spark).count()
-
-    kept, funnel = curate_corpus(t.read(spark), min_tokens=20)
-    t.create_branch("audit")
-    t.commit_to_branch(kept, "audit", stage="curated")
-
-    staged = t.read(spark, ref="audit")
-    stages = {r.stage: r.n_docs for r in funnel.collect()}
-    assert staged.count() == min(stages.values())   # final funnel stage
-    assert t.read(spark).count() == n_raw           # HEAD still raw
-
-    t.fast_forward("audit")
-    assert t.read(spark).count() == staged.count()  # published
+@pytest.mark.parametrize("keep_last", [0, -1])
+def test_expire_snapshots_rejects_keep_last_below_one(spark, tmp_path,
+                                                      keep_last):
+    """``keep_last < 1`` would keep the whole chain (0) or expire only the
+    oldest snapshot (-1) and still report success: it is refused, and
+    nothing is expired."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    for n in (1, 2, 3):
+        t.overwrite(spark.range(n).withColumnRenamed("id", "x"))
+    with pytest.raises(ValueError, match=f"got {keep_last}"):
+        expire_snapshots(t, keep_last=keep_last)
+    assert len(t.snapshots()) == 3
 
 
 def test_expiry_spares_in_flight_snapshot(spark, tmp_path):
     """A committing writer publishes snapshot-<sid>.json BEFORE moving
-    HEAD/refs; expiry must not reclaim a FRESH unreferenced snapshot (it
+    HEAD; expiry must not reclaim a FRESH unreferenced snapshot (it
     may be that in-flight commit — deleting its data dirs bricks the
     table the moment HEAD lands).  Past the grace window it is reclaimed
     like any orphan."""

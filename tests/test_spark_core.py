@@ -309,24 +309,20 @@ def test_fused_rollup_auto_exact_including_median(spark):
             assert (a == b).all(), c
 
 
-def test_sequence_formats_roundtrip(spark, tmp_path):
-    """parquet / json / csv ingest all land on the canonical schema with
-    bit-exact token arrays (the per-row invariant) — CSV via the
-    Catalyst-only pipe-string round trip."""
-    from wotan_spark.spark.sources import read_sequences, write_sequences
+def test_read_sequences_parquet_roundtrip(spark, tmp_path):
+    """A parquet sequences table reads back on the canonical schema with
+    bit-exact token arrays (the per-row invariant)."""
+    from wotan_spark.spark.sources import read_sequences
 
-    seq = _seq(spark).orderBy("doc_id")
-    orig = {r.doc_id: (list(r.tokens), r.n_tok, r.source)
-            for r in seq.collect()}
-    for fmt in ("parquet", "json", "csv"):
-        path = str(tmp_path / fmt)
-        write_sequences(seq, path, format=fmt)
-        back = read_sequences(spark, path, format=fmt)
-        assert [f.name for f in back.schema.fields] == \
-            ["doc_id", "tokens", "n_tok", "source"]
-        got = {r.doc_id: (list(r.tokens), r.n_tok, r.source)
-               for r in back.collect()}
-        assert got == orig, fmt
+    seq = _seq(spark)
+    seq.write.parquet(str(tmp_path / "seq"))
+    back = read_sequences(spark, str(tmp_path / "seq"))
+    assert [f.name for f in back.schema.fields] == \
+        ["doc_id", "tokens", "n_tok", "source"]
+    got = {r.doc_id: (list(r.tokens), r.n_tok, r.source)
+           for r in back.collect()}
+    assert got == {r.doc_id: (list(r.tokens), r.n_tok, r.source)
+                   for r in seq.collect()}
 
 
 def test_fused_rollup_handles_masks(spark):
@@ -441,26 +437,6 @@ def test_detrend_auto_outputs_kwarg(spark):
     assert a.keys() == b.keys()
     for k in a:
         assert np.allclose(a[k], b[k], equal_nan=True)
-
-
-def test_write_sequences_csv_rejects_null_tokens(spark, tmp_path):
-    """concat_ws silently SKIPS null array elements, so a null token would
-    round-trip as a shorter array than n_tok claims — fail loudly."""
-    import pytest
-
-    from wotan_spark.spark.sources import read_sequences, write_sequences
-
-    good = _seq(spark).limit(4)
-    write_sequences(good, str(tmp_path / "ok"), format="csv")
-    back = read_sequences(spark, str(tmp_path / "ok"), format="csv")
-    a = {r.doc_id: list(r.tokens) for r in good.collect()}
-    b = {r.doc_id: list(r.tokens) for r in back.collect()}
-    assert a == b                                 # bit-exact round trip
-    bad = good.withColumn(
-        "tokens", F.expr("transform(tokens, (x, i) -> "
-                         "if(i = 1, cast(null as int), x))"))
-    with pytest.raises(Exception, match="null token"):
-        write_sequences(bad, str(tmp_path / "bad"), format="csv")
 
 
 def test_sequences_from_events_maps_null_nan_to_sentinel(spark, tmp_path):

@@ -899,8 +899,11 @@ def verify_cosine_pairs(emb: DataFrame, pairs: DataFrame,
                           for v in pdf["ea"]])
             B = np.stack([np.asarray(v, dtype=np.float64)
                           for v in pdf["eb"]])
+            # zero-norm clip, as in the exact path: a zero vector scores
+            # cos 0 instead of 0/0 = NaN
             sims = np.einsum("ij,ij->i", A, B) / (
-                np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1))
+                np.clip(np.linalg.norm(A, axis=1), 1e-12, None)
+                * np.clip(np.linalg.norm(B, axis=1), 1e-12, None))
             keep = sims >= threshold
             sims = np.sign(sims) * np.floor(np.abs(sims) * scale
                                             + 0.5) / scale

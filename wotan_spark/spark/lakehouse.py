@@ -32,16 +32,12 @@ Concurrency model: ONE writer per table at a time (the Hadoop-catalog
 Iceberg assumption; a real catalog's atomic compare-and-swap replaces it).
 Within that model every publish is crash-safe: manifests are created with
 O_EXCL (a duplicate snapshot id aborts instead of clobbering) and HEAD /
-NEXT_SID / refs are atomic renames, so concurrent READERS always see a
-complete snapshot.  Only ``refs.json`` (branch and tag operations) and
-``expire_snapshots``' rewrite of the chain root still rename files that
-hold data; neither is on the per-commit path.  What the file protocol
-cannot give two concurrent WRITERS is
-serialization — the refs read-modify-write can lose one branch move, and
-``expire_snapshots`` running concurrently with ``commit_to_branch`` could
-reclaim the new snapshot in the window before its branch ref lands.  Run
-maintenance (expiry, compaction) from the single writer's schedule, never
-alongside another writer.
+NEXT_SID are atomic renames, so concurrent READERS always see a complete
+snapshot.  Only ``expire_snapshots``' rewrite of the chain root still
+renames a file that holds data, and it is not on the per-commit path.
+What the file protocol cannot give two concurrent WRITERS is
+serialization.  Run maintenance (expiry, compaction) from the single
+writer's schedule, never alongside another writer.
 """
 
 from __future__ import annotations
@@ -60,7 +56,7 @@ from pyarrow.lib import ArrowException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-# dirs per manifest file for clustered compaction / rewrite_manifests:
+# dirs per manifest file for clustered compaction:
 # small enough that a merge touching one key range rewrites little
 # metadata, large enough that the manifest list stays ~files/16 entries
 _MANIFEST_GROUP = 16
@@ -88,10 +84,9 @@ def delta_fingerprint(df: DataFrame) -> dict:
 def newest_stamped(table: "SnapshotTable", key: str) -> dict | None:
     """Newest snapshot in the table's HEAD chain whose meta carries
     ``key``.  Index/stage stamps must be resolved this way rather than
-    read off HEAD: data-preserving maintenance (compact,
-    rewrite_manifests, merge_buckets, retention) commits new snapshots
-    WITHOUT the stamps, and a HEAD-only read bricks the consumer after
-    routine maintenance.  Shared by the retention cutoff gates and
+    read off HEAD: data-preserving maintenance (compact, merge_buckets,
+    retention) commits new snapshots WITHOUT the stamps, and a HEAD-only
+    read bricks the consumer after routine maintenance.  Shared by the retention cutoff gates and
     pipeline stage resume (no writer stamps a key with value None, so
     key-presence is the whole test)."""
     return newest_stamped_in(table.snapshots(), key)
@@ -245,133 +240,11 @@ class SnapshotTable:
                 return m
         return None
 
-    # -- named refs (the Iceberg tag/branch model) ---------------------------
-    def _refs_path(self) -> str:
-        return os.path.join(self.manifest_dir, "refs.json")
-
-    def refs(self) -> dict:
-        """{"tags": {name: snapshot_id}, "branches": {name: snapshot_id}}.
-        Tags are immutable pointers; branches can be moved.  Referenced
-        snapshots are pinned through ``expire_snapshots``."""
-        try:
-            with open(self._refs_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"tags": {}, "branches": {}}
-
-    def _write_refs(self, refs: dict) -> None:
-        tmp = os.path.join(self.manifest_dir,
-                           f".tmp-refs-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(refs, f)
-        os.rename(tmp, self._refs_path())
-
-    def _new_ref(self, kind: str, name: str,
-                 snapshot_id: int | None) -> int:
-        refs = self.refs()
-        if name in refs["tags"] or name in refs["branches"]:
-            raise ValueError(f"ref {name!r} already exists")
-        sid = int(snapshot_id) if snapshot_id is not None \
-            else self.current_snapshot_id()
-        if sid is None:
-            raise ValueError("table has no snapshot to reference")
-        self._manifest(sid)                      # must exist
-        refs[kind][name] = sid
-        self._write_refs(refs)
-        return sid
-
-    def create_tag(self, name: str, snapshot_id: int | None = None) -> int:
-        """Immutable named pointer to a snapshot (default HEAD)."""
-        return self._new_ref("tags", name, snapshot_id)
-
-    def create_branch(self, name: str,
-                      snapshot_id: int | None = None) -> int:
-        """Movable named pointer to a snapshot (default HEAD)."""
-        return self._new_ref("branches", name, snapshot_id)
-
-    def set_branch(self, name: str, snapshot_id: int) -> None:
-        refs = self.refs()
-        if name not in refs["branches"]:
-            raise KeyError(f"no branch {name!r}")
-        self._manifest(int(snapshot_id))
-        refs["branches"][name] = int(snapshot_id)
-        self._write_refs(refs)
-
-    def drop_ref(self, name: str) -> None:
-        refs = self.refs()
-        for kind in ("tags", "branches"):
-            if name in refs[kind]:
-                del refs[kind][name]
-                self._write_refs(refs)
-                return
-        raise KeyError(f"no ref {name!r}")
-
-    def resolve_ref(self, name: str) -> int:
-        refs = self.refs()
-        for kind in ("tags", "branches"):
-            if name in refs[kind]:
-                return int(refs[kind][name])
-        raise KeyError(f"no ref {name!r}")
-
-    def commit_to_branch(self, df: DataFrame, branch: str,
-                         mode: str = "overwrite", **meta) -> int:
-        """Write-audit-publish staging: commit onto the BRANCH head (its
-        parent chain, not HEAD's), moving only the branch pointer.  HEAD
-        readers never see staged data until ``fast_forward`` publishes.
-        ``mode="append"`` unions the branch head's file set."""
-        if mode not in ("overwrite", "append"):
-            raise ValueError(f"unknown mode {mode!r}")
-        refs = self.refs()
-        if branch not in refs["branches"]:
-            raise KeyError(f"no branch {branch!r}")
-        parent = refs["branches"][branch]
-        manifests = [self._write_manifest([self._write_data(df)])]
-        if mode == "append":
-            manifests = self._as_manifest_list(parent) + manifests
-        sid = self._commit(manifests, {**meta, "branch": branch}, parent,
-                           move_head=False)
-        refs = self.refs()                   # re-read: commit wrote data
-        refs["branches"][branch] = sid
-        self._write_refs(refs)
-        return sid
-
-    def fast_forward(self, branch: str) -> int:
-        """Publish a staged branch: move HEAD to the branch head.
-        Requires the current HEAD to be an ANCESTOR of the branch head
-        (pure fast-forward) so published history stays append-only —
-        audit flows that diverged must rebase (re-stage) first."""
-        target = self.resolve_ref(branch)
-        head = self.current_snapshot_id()
-        sid = target
-        while sid is not None and sid != head:
-            try:
-                sid = self._manifest(sid).get("parent")
-            except FileNotFoundError:
-                # the walk crossed an expired manifest: HEAD advanced and
-                # the branch anchor aged out — genuinely diverged
-                sid = None
-        if head is not None and sid != head:
-            raise ValueError(
-                f"HEAD {head} is not an ancestor of branch {branch!r} "
-                f"head {target}; cannot fast-forward")
-        _swap_pointer(self._head_path(), target)
-        return target
-
-    def rollback_to(self, snapshot_id: int, **meta) -> int:
-        """Iceberg-style rollback: HEAD advances to a NEW snapshot whose
-        file set is the target's — history is preserved (the bad
-        snapshots stay time-travelable until expiry), readers see the
-        restored data immediately."""
-        return self._commit(self._as_manifest_list(int(snapshot_id)),
-                            {**meta, "rollback_of": int(snapshot_id)},
-                            self.current_snapshot_id())
-
     # -- commit --------------------------------------------------------------
     def _next_sid(self) -> int:
-        """Globally unique, MONOTONIC snapshot id.  Branch staging can
-        diverge from HEAD (parent+1 would collide), and expiry deletes
+        """Globally unique, MONOTONIC snapshot id.  Expiry deletes
         manifests (a disk max alone could REUSE a reclaimed id, silently
-        rebinding old recorded ids to new snapshots) — so a persistent
+        rebinding old recorded ids to new snapshots), so a persistent
         counter floors the allocation."""
         counter = os.path.join(self.manifest_dir, "NEXT_SID")
         nxt = _read_pointer(counter) or 0
@@ -384,7 +257,7 @@ class SnapshotTable:
         return sid
 
     def _commit(self, manifests: list[str], meta: dict,
-                parent: int | None, move_head: bool = True) -> int:
+                parent: int | None) -> int:
         """Publish a snapshot referencing ``manifests`` (names returned by
         ``_write_manifest`` / ``_as_manifest_list``).  The snapshot file
         carries manifest NAMES only — O(delta) commit metadata however
@@ -416,8 +289,7 @@ class SnapshotTable:
                                       f"snapshot-{sid}.json"))
         finally:
             os.unlink(tmp)
-        if move_head:
-            _swap_pointer(self._head_path(), sid)
+        _swap_pointer(self._head_path(), sid)
         return sid
 
     def _write_data(self, df: "DataFrame | pa.Table") -> str:
@@ -578,9 +450,9 @@ class SnapshotTable:
         dirs = self._manifest(self.current_snapshot_id())["files"]
         # pruning keeps old files verbatim, which is only sound when the
         # batch schema MATCHES the stored one (same names + types) AND the
-        # stored dirs agree among THEMSELVES — append/commit_to_branch
-        # deliberately never schema-check (schema evolution is a supported
-        # lakehouse write), so a snapshot can hold mixed-schema dirs.  Any
+        # stored dirs agree among THEMSELVES — append deliberately never
+        # schema-checks (schema evolution is a supported lakehouse
+        # write), so a snapshot can hold mixed-schema dirs.  Any
         # disagreement takes the full mergeSchema read + unionByName
         # rewrite, converging the whole table back onto one resolved
         # schema (columns missing on one side null-fill, the Iceberg
@@ -842,33 +714,16 @@ class SnapshotTable:
             meta = {**meta, **layout}
         # range-adjacent dirs group into manifests of _MANIFEST_GROUP, so
         # a later merge_buckets rewrites only the manifests whose key
-        # range it touches (partition-aligned manifests, the Iceberg
-        # rewrite_manifests layout) while the manifest list stays
-        # files/GROUP entries instead of one name per file
+        # range it touches while the manifest list stays files/GROUP
+        # entries instead of one name per file
         manifests = [self._write_manifest(dirs[i:i + _MANIFEST_GROUP])
                      for i in range(0, len(dirs), _MANIFEST_GROUP)]
         return self._commit(manifests, meta, self.current_snapshot_id())
-
-    def rewrite_manifests(self, **meta) -> int:
-        """Metadata-only maintenance (the Iceberg ``rewrite_manifests``
-        model): coalesce the head snapshot's manifest list — which grows
-        one entry per append — into manifests of ``_MANIFEST_GROUP`` dirs,
-        preserving dir order.  Data files are untouched; the file SET is
-        identical, so incremental readers see no change."""
-        head = self.current_snapshot_id()
-        if head is None:
-            raise ValueError("nothing to rewrite")
-        dirs = self._manifest(head)["files"]
-        manifests = [self._write_manifest(dirs[i:i + _MANIFEST_GROUP])
-                     for i in range(0, len(dirs), _MANIFEST_GROUP)]
-        meta.setdefault("manifests_rewritten", True)
-        return self._commit(manifests, meta, head)
 
     # -- read ----------------------------------------------------------------
     def read(self, spark: SparkSession, snapshot_id: int | None = None,
              where: tuple | None = None,
              merge_schema: bool = False,
-             ref: str | None = None,
              where_in: tuple | None = None) -> DataFrame | None:
         """Read a snapshot.  ``where=(col, lo, hi)`` prunes whole data files
         whose manifest min/max stats cannot overlap [lo, hi] — the Iceberg
@@ -884,11 +739,7 @@ class SnapshotTable:
         would prune nothing once the ids span the key space).
         ``merge_schema=True`` unions the file schemas (schema-evolution
         reads: columns appended by later commits come back NULL for older
-        files).  ``ref`` reads a named tag/branch instead of HEAD."""
-        if ref is not None:
-            if snapshot_id is not None:
-                raise ValueError("pass snapshot_id or ref, not both")
-            snapshot_id = self.resolve_ref(ref)
+        files)."""
         sid = snapshot_id if snapshot_id is not None \
             else self.current_snapshot_id()
         if sid is None:
@@ -967,52 +818,6 @@ class SnapshotTable:
         else:
             residual = F.col(clauses[0][0]).isin(vals)
         return reader.parquet(*paths).filter(residual)
-
-    def read_incremental(self, spark: SparkSession, since_snapshot_id: int,
-                         snapshot_id: int | None = None) -> DataFrame | None:
-        """Incremental scan (the Iceberg incremental-read model): the rows
-        ADDED between ``since_snapshot_id`` (exclusive) and ``snapshot_id``
-        (default HEAD) — exactly the data-dir set difference, so a
-        downstream consumer processes only new files instead of rescanning
-        the table.  Raises if any commit in the range was not an append
-        (overwrite/retention/compaction rewrite history, so "added rows"
-        is no longer the file-set difference — rescan instead)."""
-        end = snapshot_id if snapshot_id is not None \
-            else self.current_snapshot_id()
-        if end is None or end == since_snapshot_id:
-            return None
-        try:
-            base = set(self._manifest(since_snapshot_id)["files"])
-        except FileNotFoundError:
-            raise ValueError(
-                f"snapshot {since_snapshot_id} was expired "
-                f"(expire_snapshots); incremental read impossible — "
-                f"rescan the table") from None
-        chain = []
-        sid = end
-        while sid is not None and sid != since_snapshot_id:
-            try:
-                chain.append(self._manifest(sid))
-            except FileNotFoundError:
-                raise ValueError(
-                    f"snapshot {sid} in the range was expired "
-                    f"(expire_snapshots); rescan the table") from None
-            sid = chain[-1].get("parent")
-        if sid is None:
-            raise ValueError(
-                f"snapshot {since_snapshot_id} is not an ancestor of {end}")
-        for m in chain:
-            if not base <= set(m["files"]):
-                raise ValueError(
-                    f"snapshot {m['snapshot_id']} rewrote history "
-                    f"(overwrite/retention/compaction); incremental read "
-                    f"is append-only — rescan the table")
-        new_dirs = [d for d in self._manifest(end)["files"]
-                    if d not in base]
-        if not new_dirs:
-            return None
-        return self._reader(spark, new_dirs,
-                            merge_schema=True).parquet(*new_dirs)
 
     def _load_stats(self, d: str) -> dict | None:
         try:

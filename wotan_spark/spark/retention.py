@@ -15,8 +15,10 @@ bucket column), and the kept rows stream straight into the new snapshot.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import time
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
@@ -128,73 +130,42 @@ def expire_snapshots(table: SnapshotTable, keep_last: int = 2,
     snapshots, and drop their manifests.  The oldest kept manifest is
     rewritten with ``parent=None`` (history truncation point).  Time travel
     to an expired snapshot is no longer possible — that is the point.
-
-    Snapshots referenced by a named tag/branch are PINNED (the Iceberg
-    ref-retention model): their manifest and data files survive even past
-    the keep window — they drop out of the walkable history chain but
-    stay readable via ``read(ref=...)`` / ``read(snapshot_id=...)`` until
-    the ref is dropped and a later expiry reclaims them."""
-    import json
-
+    ``keep_last`` must be at least 1: the HEAD snapshot is never expired."""
+    if keep_last < 1:
+        raise ValueError(f"keep_last must be >= 1, got {keep_last!r}")
     head = table.current_snapshot_id()
     if head is None:
         return {"expired": 0, "dirs_deleted": 0, "manifests_deleted": 0}
     chain = table.snapshots()               # oldest .. newest
     # a short chain has nothing to expire from HISTORY, but the orphan
-    # scans below must still run — stale off-chain leftovers (dropped
-    # refs, crashed commits) would otherwise leak for as long as the
-    # chain stays within the keep window
-    refs = table.refs()
-    ref_sids = set(refs["tags"].values()) | set(refs["branches"].values())
+    # scan below must still run — crashed commits would otherwise leak
+    # for as long as the chain stays within the keep window
     chain_sids = {m["snapshot_id"] for m in chain}
-    # a branch pins its STAGED (off-chain) ancestor tail too — staged
-    # commits must survive as a unit until published or dropped; chain
-    # ancestors follow the normal keep window (tags pin only themselves)
-    visited: set = set()
-    for sid in list(refs["branches"].values()):
-        while sid is not None and sid not in chain_sids \
-                and sid not in visited:
-            visited.add(sid)
-            ref_sids.add(sid)
-            try:
-                sid = table._manifest(sid).get("parent")
-            except FileNotFoundError:
-                break
-    if len(chain) <= keep_last:
-        kept, old = chain, []
-    else:
-        kept, old = chain[-keep_last:], chain[:-keep_last]
-    pinned = [m for m in old if m["snapshot_id"] in ref_sids]
-    expired = [m for m in old if m["snapshot_id"] not in ref_sids]
-    # orphans: manifests outside the walkable chain (staged branch
-    # commits, or snapshots pinned by a ref in an earlier expiry whose
-    # ref was since dropped) — unreferenced ones are reclaimed now, or
-    # their files would leak forever
-    import time as _t
-    now = _t.time()
+    kept, old = chain[-keep_last:], chain[:-keep_last]
+    expired = list(old)
+    # pinned: in-flight orphans inside the grace window
+    pinned = []
+    now = time.time()
     for fn in os.listdir(table.manifest_dir):
         if not (fn.startswith("snapshot-") and fn.endswith(".json")):
             continue
         sid = int(fn[len("snapshot-"):-len(".json")])
-        if sid not in chain_sids and sid not in ref_sids:
-            # grace window, same reasoning as the manifest GC below: a
-            # committing writer publishes snapshot-<sid>.json BEFORE
-            # moving HEAD/refs, so a fresh unreferenced snapshot may be an
-            # IN-FLIGHT commit — expiring it would delete the data dirs
-            # out from under the writer and brick the table the moment
-            # HEAD lands.  Only reclaim once far past any write-to-publish
-            # window.
-            try:
-                age = now - os.path.getmtime(
-                    os.path.join(table.manifest_dir, fn))
-            except FileNotFoundError:
-                continue
-            if age < orphan_manifest_grace_sec:
-                pinned.append(table._manifest(sid))   # spare this run
-            else:
-                expired.append(table._manifest(sid))
-        elif sid not in chain_sids:          # still-pinned orphan
-            pinned.append(table._manifest(sid))
+        if sid in chain_sids:
+            continue
+        # orphan: a snapshot outside the chain is a crashed commit or an
+        # IN-FLIGHT one — a committing writer publishes snapshot-<sid>.json
+        # BEFORE moving HEAD, and expiring it would delete the data dirs
+        # out from under the writer and brick the table the moment HEAD
+        # lands.  Only reclaim once far past any write-to-publish window
+        # (the manifest GC below waits the same way).
+        try:
+            age = now - os.path.getmtime(os.path.join(table.manifest_dir, fn))
+        except FileNotFoundError:
+            continue
+        if age < orphan_manifest_grace_sec:
+            pinned.append(table._manifest(sid))   # spare this run
+        else:
+            expired.append(table._manifest(sid))
     kept_dirs = {d for m in kept + pinned for d in m["files"]}
     drop_dirs = {d for m in expired for d in m["files"]} - kept_dirs
     for d in drop_dirs:
@@ -214,13 +185,11 @@ def expire_snapshots(table: SnapshotTable, keep_last: int = 2,
     # wraps) are reclaimed only once older than
     # ``orphan_manifest_grace_sec`` — far past any commit's write-to-
     # publish window, so the dir still cannot leak forever.
-    import time as _time
     kept_manifests = {name for m in kept + pinned
                       for name in m.get("manifest_list", [])}
     expired_manifests = {name for m in expired
                          for name in m.get("manifest_list", [])}
     dropped_manifests = 0
-    now = _time.time()
     for fn in os.listdir(table.manifest_dir):
         if not (fn.startswith("manifest-") and fn.endswith(".json")) \
                 or fn in kept_manifests:

@@ -1,68 +1,19 @@
-"""Multi-format ingest/egress for the tokenized-sequence table.
+"""Ingest for the tokenized-sequence table.
 
 The canonical table shape is BASELINE's input_hint —
 ``(doc_id string, tokens array<int>, n_tok int, source string)`` — stored
-as parquet (the lakehouse snapshot format).  Interop sources arrive as
-JSON lines or CSV exports; this module reads any of them into the ONE
-canonical schema so every downstream operator is format-agnostic.
-
-CSV has no array type, so token arrays travel as a ``|``-joined string;
-the parse/serialize round-trip is pure Catalyst (``split``/``transform``
-cast, ``concat_ws``) — no Python, bit-exact for int32 tokens (tested).
+as parquet (the lakehouse snapshot format).
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from wotan_spark.spark.synth import SEQUENCES_SCHEMA
 
-_CSV_SCHEMA = "doc_id string, tokens string, n_tok int, source string"
 
-
-def read_sequences(spark: SparkSession, path: str,
-                   format: str = "parquet") -> DataFrame:
-    """Read a sequences table from ``parquet`` / ``json`` / ``csv`` into
-    the canonical schema (explicit schema on every path: schema inference
-    would scan the data twice and can mis-type empty partitions)."""
-    if format == "parquet":
-        return spark.read.schema(SEQUENCES_SCHEMA).parquet(path)
-    if format == "json":
-        return spark.read.schema(SEQUENCES_SCHEMA).json(path)
-    if format == "csv":
-        raw = (spark.read.schema(_CSV_SCHEMA)
-               .option("header", "true").csv(path))
-        toks = F.when(
-            F.length("tokens") > 0,
-            F.transform(F.split("tokens", r"\|"),
-                        lambda s: s.cast("int"))
-        ).otherwise(F.array().cast("array<int>"))
-        return raw.select("doc_id", toks.alias("tokens"), "n_tok", "source")
-    raise ValueError(f"unknown sequence format {format!r}")
-
-
-def write_sequences(df: DataFrame, path: str,
-                    format: str = "parquet") -> None:
-    """Write a canonical sequences table as ``parquet``/``json``/``csv``."""
-    if format == "parquet":
-        df.write.mode("overwrite").parquet(path)
-    elif format == "json":
-        df.write.mode("overwrite").json(path)
-    elif format == "csv":
-        # concat_ws SKIPS null elements: [1, null, 2] would round-trip as
-        # [1, 2] while n_tok still says 3 — silent data loss breaking the
-        # per-row token-array invariant.  Fail loudly instead (the schema
-        # allows null elements; the pipe encoding has no slot for them).
-        guarded = F.when(
-            F.exists("tokens", lambda x: x.isNull()),
-            F.raise_error(F.concat(
-                F.lit("write_sequences(csv): doc "), F.col("doc_id"),
-                F.lit(" has null token elements — the pipe encoding "
-                      "cannot represent them; fill or drop nulls first")))
-        ).otherwise(
-            F.concat_ws("|", F.col("tokens").cast("array<string>")))
-        (df.select("doc_id", guarded.alias("tokens"), "n_tok", "source")
-         .write.mode("overwrite").option("header", "true").csv(path))
-    else:
-        raise ValueError(f"unknown sequence format {format!r}")
+def read_sequences(spark: SparkSession, path: str) -> DataFrame:
+    """Read a parquet sequences table into the canonical schema (explicit
+    schema: inference would scan the data twice and can mis-type empty
+    partitions)."""
+    return spark.read.schema(SEQUENCES_SCHEMA).parquet(path)
