@@ -11,7 +11,9 @@ Gorilla cases cover NaN (canonical and non-canonical bit patterns), ±inf,
 reuse the previous window, leading-zero counts past the 5-bit clamp, and
 64-bit meaningful lengths.  delta-of-delta cases cover the int64 extremes
 and both sides of every class edge.  Each pinned payload must also decode
-to its input bitwise.
+to its input bitwise, and one ``encode_many``/``decode_many`` call over a
+whole corpus must agree with the per-block calls.  A cut or short payload
+must raise a ``ValueError`` that names the codec, not decode silently.
 
 Regenerate (only for an intended format change) with
 ``python -m tests.test_codec_pins``.
@@ -135,6 +137,51 @@ def test_pinned_payloads_decode_bitwise(codec):
         out = mod.decode(mod.encode(arr))
         assert out.dtype == arr.dtype, case
         assert out.tobytes() == arr.tobytes(), case
+
+
+@pytest.mark.parametrize("codec", ["gorilla", "dod"])
+def test_batched_calls_match_per_block_calls(codec):
+    mod, corpus = {n: (m, c) for n, m, c in _codec_cases()}[codec]
+    blocks = list(corpus.values())
+    offsets = np.cumsum([0] + [len(b) for b in blocks])
+    payloads = mod.encode_many(np.concatenate(blocks), offsets)
+    assert payloads == [mod.encode(b) for b in blocks]
+    values, got = mod.decode_many(payloads)
+    assert got.tolist() == offsets.tolist()
+    assert values.tobytes() == np.concatenate(blocks).tobytes()
+    empty, none = mod.decode_many([])
+    assert len(empty) == 0 and none.tolist() == [0]
+
+
+@pytest.mark.parametrize("codec", ["gorilla", "dod"])
+def test_corrupt_payload_raises_named_error(codec):
+    mod, corpus = {n: (m, c) for n, m, c in _codec_cases()}[codec]
+    arr = corpus["mixed_bits"]
+    payload = mod.encode(arr)
+    for cut in (payload[:len(payload) // 2], payload[:-1], payload[:12]):
+        with pytest.raises(ValueError, match=rf"{codec}.*count {len(arr)}, "
+                                             rf"{len(cut)} bytes"):
+            mod.decode(cut)
+        good = mod.encode(corpus["one"])
+        with pytest.raises(ValueError, match=rf"{codec}.*{len(cut)} bytes"):
+            mod.decode_many([good, cut, good])
+    for short in (b"", payload[:3]):
+        with pytest.raises(ValueError, match=rf"{codec}.*4-byte header"):
+            mod.decode(short)
+
+
+@pytest.mark.parametrize("bits", [
+    "10",                             # reuse before the block's first window
+    "11" + "11111" + "000000" + "0" * 64,  # 31 leading + 64 bits > 64
+])
+def test_gorilla_impossible_window_is_corrupt(bits):
+    """Two streams no encoder writes: the per-point decoder read the first
+    as a zero XOR silently and hit a negative shift on the second."""
+    bits += "0" * (-len(bits) % 8)
+    stream = int(bits, 2).to_bytes(len(bits) // 8, "big")
+    payload = (2).to_bytes(4, "big") + bytes(8) + stream
+    with pytest.raises(ValueError, match=f"gorilla.*count 2, {len(payload)} "):
+        gorilla.decode(payload)
 
 
 if __name__ == "__main__":

@@ -8,82 +8,74 @@ raw 64b.  Each subsequent delta-of-delta D:
   -255  <= D <= 256   -> 110 + 9 bits
   -2047 <= D <= 2048  -> 1110 + 12 bits
   else                -> 1111 + 64 bits (two's complement)
+
+Deltas wrap modulo 2^64 on both sides, so the full int64 range
+round-trips.  A value's class depends on that value alone, so the encoder
+is NumPy throughout; the prefix parse is the decoder's one loop.
 """
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
-from wotan_spark.codecs.bits import BitReader, BitWriter
+from wotan_spark.codecs import U64, Streams, block_index, pack, restart
 
-_MASK64 = (1 << 64) - 1
+# per class 0..4: prefix code, its length, field width and field bias
+_TAG = np.array([0, 0b10, 0b110, 0b1110, 0b1111], dtype=U64)
+_TAG_W = np.array([1, 2, 3, 4, 4])
+_WIDTH = np.array([0, 7, 9, 12, 64])
+_BIAS = np.array([0, 63, 255, 2047, 0], dtype=U64)
+_CLASS = np.array([0] * 8 + [1] * 4 + [2] * 2 + [3, 4])  # by next 4 bits
+_STEP = tuple((_TAG_W + _WIDTH)[_CLASS].tolist())
+
+
+def encode_many(values: np.ndarray, offsets) -> list[bytes]:
+    """One payload per block ``values[offsets[b]:offsets[b + 1]]``."""
+    u = np.ascontiguousarray(values, dtype=np.int64).view(U64)
+    offsets = np.asarray(offsets, dtype=np.int64)
+    at = block_index(offsets)
+    delta = u - np.concatenate((np.zeros(1, U64), u[:-1]))
+    dd = delta - np.concatenate((np.zeros(1, U64), delta[:-1]))
+    d = dd.view(np.int64)
+    cls = np.select([d == 0, (d >= -63) & (d <= 64), (d >= -255) & (d <= 256),
+                     (d >= -2047) & (d <= 2048)], [0, 1, 2, 3], 4)
+    big = cls == 4  # its 64-bit field is the point's second stream field
+    inline = np.where(big, 0, _WIDTH[cls])
+    head = np.select([at == 0, at == 1], [u, delta], _TAG[cls] << inline.astype(
+        U64) | np.where(big, U64(0), dd + _BIAS[cls]))
+    big &= at >= 2
+    return pack(head, np.where(at < 2, 64, _TAG_W[cls] + inline),
+                np.where(big, dd, U64(0)), np.where(big, 64, 0), offsets)
+
+
+def _scan(words, p: int, count: int, out: list) -> int:
+    for _ in range(count):
+        out.append(p)
+        p += _STEP[words[p >> 3] >> (28 - (p & 7)) & 15]
+    return p
+
+
+def decode_many(payloads) -> tuple[np.ndarray, np.ndarray]:
+    """``(values, offsets)``: block b decodes to
+    ``values[offsets[b]:offsets[b + 1]]``."""
+    s = Streams(payloads, "dod", 2)
+    p = s.parse(_scan)
+    cls = _CLASS[s.win[p >> 3] >> (28 - (p & 7)) & 15]
+    dd = np.zeros(len(p), U64)
+    p, cls, has = p[cls > 0], cls[cls > 0], cls > 0
+    dd[has] = s.field(p + _TAG_W[cls], _WIDTH[cls]) - _BIAS[cls]
+    at = block_index(s.offsets)
+    step = np.zeros(s.offsets[-1], U64)
+    step[at == 1], step[at > 1] = s.raw_value(1), dd
+    delta = restart(np.add, np.subtract, step, s.offsets)
+    delta[at == 0] = s.raw_value(0)
+    return restart(np.add, np.subtract, delta, s.offsets).view(
+        np.int64), s.offsets
 
 
 def encode(values: np.ndarray) -> bytes:
-    v = np.ascontiguousarray(values, dtype=np.int64)
-    n = len(v)
-    if n == 0:
-        return struct.pack(">I", 0)
-    w = BitWriter()
-    w.write(int(v[0]) & _MASK64, 64)
-    if n == 1:
-        return struct.pack(">I", 1) + w.getvalue()
-    # modulo-2^64 delta arithmetic: wraps consistently on encode and decode,
-    # so the full int64 range round-trips
-    u = v.view(np.uint64)
-    deltas = (u[1:] - u[:-1])  # uint64 wraparound
-    w.write(int(deltas[0]), 64)
-    dods = (deltas[1:] - deltas[:-1])
-    for d in dods:
-        d = _signed64(int(d))
-        if d == 0:
-            w.write(0, 1)
-        elif -63 <= d <= 64:
-            w.write(0b10, 2)
-            w.write(d + 63, 7)
-        elif -255 <= d <= 256:
-            w.write(0b110, 3)
-            w.write(d + 255, 9)
-        elif -2047 <= d <= 2048:
-            w.write(0b1110, 4)
-            w.write(d + 2047, 12)
-        else:
-            w.write(0b1111, 4)
-            w.write(d & _MASK64, 64)
-    return struct.pack(">I", n) + w.getvalue()
-
-
-def _signed64(x: int) -> int:
-    return x - (1 << 64) if x >= (1 << 63) else x
+    return encode_many(values, [0, len(values)])[0]
 
 
 def decode(payload: bytes) -> np.ndarray:
-    (n,) = struct.unpack(">I", payload[:4])
-    out = np.empty(n, dtype=np.int64)
-    if n == 0:
-        return out
-    r = BitReader(payload[4:])
-    cur = r.read(64)
-    out[0] = _signed64(cur)
-    if n == 1:
-        return out
-    delta = r.read(64)
-    cur = (cur + delta) & _MASK64
-    out[1] = _signed64(cur)
-    for i in range(2, n):
-        if r.read(1) == 0:
-            dod = 0
-        elif r.read(1) == 0:
-            dod = r.read(7) - 63
-        elif r.read(1) == 0:
-            dod = r.read(9) - 255
-        elif r.read(1) == 0:
-            dod = r.read(12) - 2047
-        else:
-            dod = _signed64(r.read(64))
-        delta = (delta + dod) & _MASK64
-        cur = (cur + delta) & _MASK64
-        out[i] = _signed64(cur)
-    return out
+    return decode_many([payload])[0]

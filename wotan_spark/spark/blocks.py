@@ -3,7 +3,9 @@
 Packs per-series value runs into Gorilla-XOR (float) or delta-of-delta
 (integer) binary blocks — the storage format of the retention tiers.  Encode
 and decode are packed passes (``packed.packed_map``; block membership is
-within-series: zero shuffle).
+within-series: zero shuffle) that call the codec once per Arrow batch:
+one ``encode_many`` over every block of the batch, one ``decode_many`` per
+codec present in it.
 """
 
 from __future__ import annotations
@@ -12,9 +14,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, IntegerType,
-                               LongType, StringType, StructField, StructType)
+                               IntegralType, LongType, StringType, StructField,
+                               StructType)
 
-from wotan_spark.codecs import dod, gorilla
+from wotan_spark.codecs import block_index, dod, gorilla
 from wotan_spark.spark.packed import packed_map
 
 BLOCKS_SCHEMA = StructType([
@@ -36,37 +39,45 @@ DECODED_SCHEMA = StructType([
 ])
 
 
-def _encode_array(arr: np.ndarray, codec: str) -> bytes:
-    if codec == "gorilla":
-        return gorilla.encode(np.asarray(arr, dtype=np.float64))
-    if codec == "dod":
-        return dod.encode(np.asarray(arr, dtype=np.int64))
-    raise ValueError(codec)
+_CODECS = {"gorilla": (gorilla, np.float64), "dod": (dod, np.int64)}
 
 
-def _decode_payload(payload: bytes, codec: str) -> np.ndarray:
-    if codec == "gorilla":
-        return gorilla.decode(bytes(payload))
-    if codec == "dod":
-        return dod.decode(bytes(payload)).astype(np.float64)
-    raise ValueError(codec)
+def _codec(name: str):
+    if name not in _CODECS:
+        raise ValueError(f"unknown codec {name!r}, not one of {set(_CODECS)}")
+    return _CODECS[name]
 
 
 def encode_blocks(df: DataFrame, column: str, codec: str,
                   tier: int = 0, block_size: int = 4096) -> DataFrame:
     """(doc_id, <column>: array) -> blocks(doc_id, tier, block_id, t0, n,
-    codec, payload)."""
+    codec, payload).  An empty array gets one empty block; ``dod`` needs
+    an integral element type."""
+    if block_size < 1:
+        raise ValueError(f"block_size must be >= 1, got {block_size}")
+    mod, dtype = _codec(codec)
+    kind = df.schema[column].dataType
+    if codec == "dod" and not isinstance(
+            getattr(kind, "elementType", None), IntegralType):
+        raise ValueError(f"dod needs an integral array column; {column!r} "
+                         f"is {kind.simpleString()}")
 
     def encode(pdf: pd.DataFrame):
-        for arr in pdf[column]:
-            arr = np.asarray(arr)
-            t0 = np.arange(0, max(len(arr), 1), block_size, dtype=np.int64)
-            yield {"tier": np.full(len(t0), tier, dtype=np.int32),
-                   "block_id": t0 // block_size, "t0": t0,
-                   "n": np.minimum(len(arr) - t0, block_size),
-                   "codec": [codec] * len(t0),
-                   "payload": [_encode_array(arr[b:b + block_size], codec)
-                               for b in t0]}
+        arrays = [np.asarray(a, dtype=dtype) for a in pdf[column]]
+        lens = np.array([len(a) for a in arrays], dtype=np.int64)
+        per_row = np.maximum(-(-lens // block_size), 1)
+        rows = np.concatenate(([0], np.cumsum(per_row)))
+        t0 = block_size * block_index(rows)
+        payloads = mod.encode_many(
+            np.concatenate([np.empty(0, dtype)] + arrays),
+            np.append(np.repeat(np.cumsum(lens) - lens, per_row) + t0,
+                      lens.sum()))
+        n = np.minimum(np.repeat(lens, per_row) - t0, block_size)
+        for a, b in zip(rows[:-1].tolist(), rows[1:].tolist()):
+            yield {"tier": np.full(b - a, tier, dtype=np.int32),
+                   "block_id": t0[a:b] // block_size, "t0": t0[a:b],
+                   "n": n[a:b], "codec": [codec] * (b - a),
+                   "payload": payloads[a:b]}
 
     return packed_map(df, encode, BLOCKS_SCHEMA)
 
@@ -75,8 +86,16 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
     """blocks -> (doc_id, tier, block_id, t0, values:array<double>)."""
 
     def decode(pdf: pd.DataFrame):
-        for p, c in zip(pdf["payload"], pdf["codec"]):
-            yield {"values": [_decode_payload(p, c)]}
+        out = np.empty(len(pdf), dtype=object)
+        for name in set(pdf["codec"]):
+            rows = np.flatnonzero(pdf["codec"] == name)
+            values, offsets = _codec(name)[0].decode_many(
+                pdf["payload"].to_numpy()[rows])
+            for r, v in zip(rows, np.split(values.astype(np.float64),
+                                           offsets[1:-1])):
+                out[r] = v
+        for v in out:
+            yield {"values": [v]}
 
     return packed_map(blocks, decode, DECODED_SCHEMA,
                       carry=("doc_id", "tier", "block_id", "t0"))
