@@ -31,7 +31,7 @@ def encode_many(values: np.ndarray, offsets) -> list[bytes]:
     at = block_index(offsets)
     x = u ^ np.concatenate((np.zeros(1, U64), u[:-1]))
     nz = (at > 0) & (x != 0)
-    xs, top = x[nz], x[nz]
+    xs = top = x[nz]
     for s in (1, 2, 4, 8, 16, 32):
         top = top | top >> U64(s)
     lead = np.minimum(63 - _bit(top ^ top >> U64(1)), 31)

@@ -44,7 +44,8 @@ _CODECS = {"gorilla": (gorilla, np.float64), "dod": (dod, np.int64)}
 
 def _codec(name: str):
     if name not in _CODECS:
-        raise ValueError(f"unknown codec {name!r}, not one of {set(_CODECS)}")
+        raise ValueError(f"unknown codec {name!r}, not one of "
+                         f"{sorted(_CODECS)}")
     return _CODECS[name]
 
 
@@ -67,7 +68,8 @@ def encode_blocks(df: DataFrame, column: str, codec: str,
         lens = np.array([len(a) for a in arrays], dtype=np.int64)
         per_row = np.maximum(-(-lens // block_size), 1)
         rows = np.concatenate(([0], np.cumsum(per_row)))
-        t0 = block_size * block_index(rows)
+        block_id = block_index(rows)
+        t0 = block_size * block_id
         payloads = mod.encode_many(
             np.concatenate([np.empty(0, dtype)] + arrays),
             np.append(np.repeat(np.cumsum(lens) - lens, per_row) + t0,
@@ -75,7 +77,7 @@ def encode_blocks(df: DataFrame, column: str, codec: str,
         n = np.minimum(np.repeat(lens, per_row) - t0, block_size)
         for a, b in zip(rows[:-1].tolist(), rows[1:].tolist()):
             yield {"tier": np.full(b - a, tier, dtype=np.int32),
-                   "block_id": t0[a:b] // block_size, "t0": t0[a:b],
+                   "block_id": block_id[a:b], "t0": t0[a:b],
                    "n": n[a:b], "codec": [codec] * (b - a),
                    "payload": payloads[a:b]}
 
@@ -91,8 +93,8 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
             rows = np.flatnonzero(pdf["codec"] == name)
             values, offsets = _codec(name)[0].decode_many(
                 pdf["payload"].to_numpy()[rows])
-            for r, v in zip(rows, np.split(values.astype(np.float64),
-                                           offsets[1:-1])):
+            for r, v in zip(rows, np.split(
+                    values.astype(np.float64, copy=False), offsets[1:-1])):
                 out[r] = v
         for v in out:
             yield {"values": [v]}
