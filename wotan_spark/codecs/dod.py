@@ -61,8 +61,8 @@ def decode_many(payloads) -> tuple[np.ndarray, np.ndarray]:
     s = Streams(payloads, "dod", 2)
     p = s.parse(_scan)
     cls = _CLASS[s.win[p >> 3] >> (28 - (p & 7)) & 15]
-    dd = np.zeros(len(p), U64)
-    p, cls, has = p[cls > 0], cls[cls > 0], cls > 0
+    has, dd = cls > 0, np.zeros(len(p), U64)
+    p, cls = p[has], cls[has]
     dd[has] = s.field(p + _TAG_W[cls], _WIDTH[cls]) - _BIAS[cls]
     at = block_index(s.offsets)
     step = np.zeros(s.offsets[-1], U64)
