@@ -524,6 +524,92 @@ def test_merge_buckets_schema_divergence_takes_full_rewrite(spark,
                                                         (10**10, 2.0)}
 
 
+def test_merge_buckets_keeps_null_key_rows(spark, tmp_path):
+    """Stored rows with a null key survive a merge, and batch rows with
+    a null key field replace nothing (SQL equality never matches a null,
+    as under a left_anti join on the keys); both are appended."""
+    schema = "doc_id string, bucket long, v double"
+    t = SnapshotTable(str(tmp_path / "doc"))
+    t.overwrite(spark.createDataFrame(
+        [("a", 0, 1.0), (None, 1, 2.0), ("b", 0, 3.0)], schema))
+    t.merge_buckets(spark, spark.createDataFrame(
+        [("a", 5, 9.0), (None, 7, 8.0)], schema), keys=["doc_id"])
+    assert sorted(map(tuple, t.read(spark).collect()),
+                  key=repr) == sorted(
+        [("a", 5, 9.0), (None, 1, 2.0), (None, 7, 8.0), ("b", 0, 3.0)],
+        key=repr)
+
+    t = SnapshotTable(str(tmp_path / "doc_bucket"))
+    t.overwrite(spark.createDataFrame(
+        [("a", 0, 1.0), ("a", None, 2.0), (None, 0, 3.0), ("b", 1, 4.0)],
+        schema))
+    t.merge_buckets(spark, spark.createDataFrame(
+        [("a", 0, 10.0), ("a", None, 20.0), (None, 0, 30.0)], schema),
+        keys=["doc_id", "bucket"])
+    assert sorted(map(tuple, t.read(spark).collect()),
+                  key=repr) == sorted(
+        [("a", 0, 10.0), ("a", None, 2.0), ("a", None, 20.0),
+         (None, 0, 3.0), (None, 0, 30.0), ("b", 1, 4.0)], key=repr)
+
+
+def _spark_jobs(spark, group: str, fn) -> int:
+    """Number of Spark jobs that ``fn()`` starts."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_buckets_of_a_persisted_frame_runs_two_jobs(spark, tmp_path):
+    """A same-schema, doc-keyed merge reads its batch's keys in one
+    collect and filters the old rows with an in-set: the key collect and
+    the write are its only Spark jobs (a bounds aggregate and a
+    left_anti join against the distinct keys took 6 to 8)."""
+    schema = "doc_id string, bucket long, v double"
+    t = SnapshotTable(str(tmp_path / "tbl"))
+    t.overwrite(spark.createDataFrame(
+        [(f"doc_{i}", b, 1.0) for i in range(4) for b in range(3)], schema))
+    upd = spark.createDataFrame(
+        [(f"doc_{i}", b, 2.0) for i in (1, 5) for b in range(2)],
+        schema).persist()
+    try:
+        upd.count()
+        jobs = _spark_jobs(spark, f"merge-{tmp_path.name}", lambda:
+                           t.merge_buckets(spark, upd, keys=["doc_id"]))
+    finally:
+        upd.unpersist()
+    assert jobs <= 2, jobs
+    got = {(r.doc_id, r.bucket): r.v for r in t.read(spark).collect()}
+    assert len(got) == 13
+    assert got[("doc_1", 0)] == 2.0 and ("doc_1", 2) not in got
+    assert got[("doc_5", 1)] == 2.0 and got[("doc_2", 2)] == 1.0
+
+
+def test_update_incremental_runs_at_most_ten_jobs(spark, tmp_path):
+    """One read of the batch's doc ids serves the duplicate check, the
+    sequences merge and the changed-doc set, and each merge reads its
+    own keys once: 2 re-delivered + 3 new docs onto a 12-doc build run
+    at most 10 Spark jobs (a groupBy check, a semi-join and per-merge
+    bounds aggregates and anti-joins ran 23)."""
+    seq = synth_sequences(spark, 15, median_len=120, max_len=300)
+    p = Pipeline(spark, str(tmp_path / "p"),
+                 PipelineConfig(method="mean", window_length=17))
+    p.run(sequences=seq.filter("doc_id < 'doc_00000012'"))
+    batch = seq.filter("doc_id < 'doc_00000002' or "
+                       "doc_id >= 'doc_00000012'")
+    jobs = _spark_jobs(spark, f"inc-{tmp_path.name}",
+                       lambda: p.update_incremental(batch, run_id="late"))
+    assert jobs <= 10, jobs
+    assert p.tables["sequences"].read(spark).count() == 15
+    t10 = p.tables["tier10"].read(spark)
+    assert t10.select("doc_id").distinct().count() == 15
+    assert t10.groupBy("doc_id", "bucket").count() \
+        .filter(F.col("count") > 1).count() == 0
+
+
 def test_dir_schema_survives_corrupt_sidecar_and_footer(spark, tmp_path):
     """Round-4 review: a _schema.json holding valid JSON of the wrong
     shape, or a corrupt parquet footer, must degrade to the documented

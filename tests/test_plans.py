@@ -307,13 +307,14 @@ def _routed(plan: str) -> bool:
 
 def test_short_sequences_skip_the_long_branch(spark, tmp_path, monkeypatch):
     """File stats proving every row is short give both pipeline detrend
-    frames the packed plan: no chunk split, no union.  The build's plan
-    has no exchange at all; the merge's only one is its changed-doc
-    semi-join."""
+    frames the packed plan: no chunk split, no union.  Neither plan has
+    an exchange: the merge selects its changed sequences with an in-set
+    filter on the scan, not a semi-join."""
     seq = synth_sequences(spark, 8, median_len=100, max_len=200)
     run_plan, merge_plan = _pipeline_detrend_plans(
         spark, str(tmp_path / "p"), monkeypatch, seq)
     assert "Exchange" not in run_plan, run_plan
+    assert "Exchange" not in merge_plan, merge_plan
     for plan in (run_plan, merge_plan):
         assert not any(s in plan for s in ("split(", "Union", "chunk_id")), \
             plan

@@ -20,6 +20,10 @@ catalog could replace 1:1:
   over an existing name makes ext4 flush it first, tens of ms per
   commit).  Pointers written as regular files by older versions still
   read;
+* a keyed merge (``merge_buckets``) reads its batch's keys with one
+  collect and drops the replaced old rows with an in-set filter, not a
+  join: a same-schema merge of a persisted batch is two Spark jobs, the
+  key collect and the write;
 * snapshots are immutable -> time travel (``read(snapshot_id=...)``) and
   checkpoint/resume (a pipeline stage is "done" iff a snapshot with its
   config fingerprint exists);
@@ -79,6 +83,24 @@ def delta_fingerprint(df: DataFrame) -> dict:
     return {"delta_fp_rows": int(row["c"]),
             "delta_fp_hash": str(row["h"]) if row["h"] is not None
             else "0"}
+
+
+def _not_replaced(keys: list[str], batch_keys: set,
+                  schema: StructType) -> "Column":
+    """Keep-filter for a merge's old rows: a row survives when any key
+    column is null (SQL equality never matches it) or its key struct is
+    not among the batch's null-free key tuples, exactly the rows a
+    ``left_anti`` join on ``keys`` keeps.  Catalyst plans the membership
+    as an ``InSet``: no exchange and no Spark job."""
+    tuples = [F.struct(*[F.lit(v).cast(schema[k].dataType).alias(k)
+                         for k, v in zip(keys, t)])
+              for t in batch_keys if None not in t]
+    if not tuples:
+        return F.lit(True)
+    keep = ~F.struct(*keys).isin(*tuples)
+    for k in keys:
+        keep = keep | F.col(k).isNull()
+    return keep
 
 
 def newest_stamped(table: "SnapshotTable", key: str) -> dict | None:
@@ -429,10 +451,24 @@ class SnapshotTable:
                             self.current_snapshot_id())
 
     def merge_buckets(self, spark: SparkSession, df: DataFrame,
-                      keys: list[str], **meta) -> int:
+                      keys: list[str], *, key_rows: list | None = None,
+                      **meta) -> int:
         """MERGE-INTO-equivalent upsert keyed on ``keys``: new rows replace
         matching rows of the current snapshot (copy-on-write, like Iceberg
         MERGE).
+
+        The batch's keys are read once: one plain ``df.select(*keys)``
+        collect brings a key tuple per batch row to the driver, where
+        they are deduplicated and give both the pruning bounds and the
+        replace set.  A caller that already holds those rows passes them
+        as ``key_rows`` and the merge reads no keys at all.  Old rows of
+        the rewritten dirs are filtered by an expression, not a join: a
+        row survives when any key column is null or its key struct is not
+        IN the batch's null-free tuples (Catalyst plans an ``InSet``, no
+        exchange, no job), so a same-schema merge over a persisted frame
+        runs two Spark jobs, the key collect and the write.  Batch tuples
+        with a null field replace nothing, as SQL equality never matches
+        a null.
 
         File-level copy-on-write: a parent data dir is carried into the
         new manifest UNTOUCHED when ANY key column's per-file stats are
@@ -475,13 +511,15 @@ class SnapshotTable:
         if own_persist:
             df = df.persist()
         try:
+            if key_rows is None:
+                key_rows = df.select(*keys).collect()
+            batch_keys = {tuple(r) for r in key_rows}
             if same_schema:
-                aggs = []
-                for k in keys:
-                    aggs += [F.min(k).alias(f"lo_{k}"),
-                             F.max(k).alias(f"hi_{k}")]
-                b = df.agg(*aggs).first()
-                bounds = {k: (b[f"lo_{k}"], b[f"hi_{k}"]) for k in keys}
+                bounds = {}
+                for i, k in enumerate(keys):
+                    vals = [t[i] for t in batch_keys if t[i] is not None]
+                    bounds[k] = ((min(vals), max(vals)) if vals
+                                 else (None, None))
                 empty_batch = all(lo is None for lo, _ in bounds.values())
 
                 def _disjoint(c, lo, hi) -> bool:
@@ -519,8 +557,8 @@ class SnapshotTable:
             if affected:
                 cur = self._reader(spark, affected,
                                    merge_schema=mixed).parquet(*affected)
-                remaining = cur.join(df.select(*keys).distinct(), keys,
-                                     "left_anti")
+                remaining = cur.filter(
+                    _not_replaced(keys, batch_keys, df.schema))
                 # same column set -> exact union (a misnamed batch column
                 # still errors loudly); differing sets are schema
                 # evolution -> null-fill the missing side

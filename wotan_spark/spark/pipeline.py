@@ -29,6 +29,7 @@ import hashlib
 import json
 import os
 import time
+from collections import Counter
 from dataclasses import dataclass, field
 
 import pyarrow as pa
@@ -510,32 +511,48 @@ class Pipeline:
         that double-counted the doc forever); a doc_id duplicated WITHIN
         the batch fails loudly, same discipline as the index
         maintainers."""
-        import pyspark.sql.functions as F
         run_id = run_id or f"inc-{int(time.time())}"
-        dup = (new_sequences.groupBy("doc_id").count()
-               .filter(F.col("count") > 1).limit(1).collect())
-        if dup:
-            raise ValueError(
-                f"doc_id {dup[0][0]} appears {dup[0][1]} times in this "
-                "batch — deduplicate the batch before update_incremental()")
-        self.tables["sequences"].merge_buckets(
-            self.spark, new_sequences, keys=["doc_id"], run_id=run_id,
-            incremental=True)
-        return self.merge_changed(new_sequences.select("doc_id"), run_id)
+        # one read of the batch's doc ids serves the duplicate check, the
+        # sequences merge's keys and the changed-doc set
+        own_persist = not new_sequences.is_cached
+        if own_persist:
+            new_sequences = new_sequences.persist()
+        try:
+            id_rows = new_sequences.select("doc_id").collect()
+            counts = Counter(r[0] for r in id_rows)
+            dup = next(((d, n) for d, n in counts.items() if n > 1), None)
+            if dup:
+                raise ValueError(
+                    f"doc_id {dup[0]} appears {dup[1]} times in this batch"
+                    " — deduplicate the batch before update_incremental()")
+            self.tables["sequences"].merge_buckets(
+                self.spark, new_sequences, keys=["doc_id"],
+                key_rows=id_rows, run_id=run_id, incremental=True)
+        finally:
+            if own_persist:
+                new_sequences.unpersist()
+        return self.merge_changed(list(counts), run_id)
 
-    def merge_changed(self, changed_docs: DataFrame, run_id: str) -> dict:
-        """Recompute every tier/sketch row of the given doc ids from the
-        CURRENT sequences table and upsert them.  IDEMPOTENT: the merges
-        are deterministic keyed replaces, so replaying the same doc set
+    def merge_changed(self, changed_docs: DataFrame | list,
+                      run_id: str) -> dict:
+        """Recompute every tier/sketch row of the given doc ids (a frame
+        with a ``doc_id`` column, or the ids themselves) from the CURRENT
+        sequences table and upsert them.  IDEMPOTENT: the merges are
+        deterministic keyed replaces, so replaying the same doc set
         rewrites identical rows — the streaming sink leans on this for
         crash-replay safety (``streaming.run_pipeline_ingestion``)."""
+        import pyspark.sql.functions as F
         cfg = self.config
         t0 = time.time()
+        if isinstance(changed_docs, DataFrame):
+            changed_docs = [r[0] for r in
+                            changed_docs.select("doc_id").collect()]
+        # a null id matches no sequence row (as under the old semi-join)
+        ids = [d for d in changed_docs if d is not None]
         seq_sid = self.tables["sequences"].current_snapshot_id()
-        seq_changed = (self.tables["sequences"].read(self.spark)
-                       .join(changed_docs.select("doc_id").distinct(),
-                             "doc_id", "left_semi"))
-        import pyspark.sql.functions as F
+        seq = self.tables["sequences"]
+        seq_changed = (seq.read(self.spark, where_in=("doc_id", ids)) if ids
+                       else seq.read(self.spark).filter(F.lit(False)))
 
         factor = cfg.tier_factor
 
