@@ -552,6 +552,27 @@ def test_merge_buckets_keeps_null_key_rows(spark, tmp_path):
          (None, 0, 3.0), (None, 0, 30.0), ("b", 1, 4.0)], key=repr)
 
 
+def test_merge_buckets_replaces_ntz_keys_in_any_driver_zone(
+        spark, tmp_path, monkeypatch):
+    """A TIMESTAMP_NTZ key collected to the driver is a wall clock; the
+    merge must match it to the stored row even when the driver's local
+    zone differs from the session's (a plain datetime literal would be
+    read as a local instant and miss the row)."""
+    import time
+    t = SnapshotTable(str(tmp_path / "tbl"))
+    t.overwrite(spark.sql("SELECT TIMESTAMP_NTZ'2024-01-01 05:30:00.123456'"
+                          " AS ts, 1.0D AS v"))
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        t.merge_buckets(spark, t.read(spark).withColumn("v", F.lit(2.0)),
+                        keys=["ts"])
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert [r.v for r in t.read(spark).collect()] == [2.0]
+
+
 def _spark_jobs(spark, group: str, fn) -> int:
     """Number of Spark jobs that ``fn()`` starts."""
     sc = spark.sparkContext

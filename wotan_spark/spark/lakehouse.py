@@ -58,7 +58,7 @@ import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyarrow.lib import ArrowException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, TimestampNTZType
 
 # dirs per manifest file for clustered compaction:
 # small enough that a merge touching one key range rewrites little
@@ -91,13 +91,26 @@ def _not_replaced(keys: list[str], batch_keys: set,
     column is null (SQL equality never matches it) or its key struct is
     not among the batch's null-free key tuples, exactly the rows a
     ``left_anti`` join on ``keys`` keeps.  Catalyst plans the membership
-    as an ``InSet``: no exchange and no Spark job."""
-    tuples = [F.struct(*[F.lit(v).cast(schema[k].dataType).alias(k)
-                         for k, v in zip(keys, t)])
+    as an ``InSet``: no exchange and no Spark job.  Both sides use
+    ``struct``'s positional field names (``col1``, ``col2``, ...) and the
+    analyzer widens the literals to the key types, so a tuple costs one
+    ``struct`` of literals, not a cast per value."""
+    def lit(v, dtype):
+        # a naive datetime literal is an instant in the driver's local
+        # zone; a TIMESTAMP_NTZ key is a wall clock, which a string cast
+        # keeps whatever the driver's and the session's zones are
+        if isinstance(dtype, TimestampNTZType):
+            return F.lit(v.isoformat()).cast(dtype)
+        return F.lit(v)
+
+    types = [schema[k].dataType for k in keys]
+    tuples = [F.struct(*map(lit, t, types))
               for t in batch_keys if None not in t]
     if not tuples:
         return F.lit(True)
-    keep = ~F.struct(*keys).isin(*tuples)
+    row = F.struct(*[F.col(k).alias(f"col{i}")
+                     for i, k in enumerate(keys, 1)])
+    keep = ~row.isin(*tuples)
     for k in keys:
         keep = keep | F.col(k).isNull()
     return keep

@@ -547,10 +547,10 @@ class Pipeline:
         if isinstance(changed_docs, DataFrame):
             changed_docs = [r[0] for r in
                             changed_docs.select("doc_id").collect()]
-        # a null id matches no sequence row (as under the old semi-join)
+        # a null id matches no sequence row
         ids = [d for d in changed_docs if d is not None]
-        seq_sid = self.tables["sequences"].current_snapshot_id()
         seq = self.tables["sequences"]
+        seq_sid = seq.current_snapshot_id()
         seq_changed = (seq.read(self.spark, where_in=("doc_id", ids)) if ids
                        else seq.read(self.spark).filter(F.lit(False)))
 
